@@ -41,7 +41,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from pydi_spark.blocking.base import resolve_side
+from pydi_spark.blocking.base import pair_join, resolve_side
 from pydi_spark.core.dataset import Dataset
 
 PAIR_SCHEMA = StructType(
@@ -213,7 +213,13 @@ class EmbeddingBlocker:
         return l.mapInPandas(score, PAIR_SCHEMA)
 
     # -- LSH banded join ----------------------------------------------
-    def _signatures(self, df: DataFrame, dim: int, out_id: str) -> DataFrame:
+    def _signatures(
+        self, df: DataFrame, dim: int, out_id: str, out_set: str
+    ) -> DataFrame:
+        """[out_id, out_set, band_key]: one row per (record, band) with
+        the record's whole band-key array carried along. Keys are
+        ``"{band_index}:bits"``, so each array is duplicate-free — the
+        pair kernel's min-shared-key precondition."""
         # float64 end-to-end: the sign decisions must be reproducible by
         # the DuckDB oracle, which computes the same projections in double
         rng = np.random.default_rng(self.seed)
@@ -225,7 +231,7 @@ class EmbeddingBlocker:
         schema = StructType(
             [
                 StructField(out_id, StringType()),
-                StructField("band_key", StringType()),
+                StructField(out_set, ArrayType(StringType())),
             ]
         )
 
@@ -236,14 +242,18 @@ class EmbeddingBlocker:
                     continue
                 m = np.array(list(pdf["vec"]), dtype=np.float64)
                 bits = (m @ planes_.T) >= 0  # (n, bits)
-                rows = []
-                for i in range(len(pdf)):
-                    for bi, band in enumerate(bands_):
-                        key = f"{bi}:" + "".join("1" if bits[i, j] else "0" for j in band)
-                        rows.append((pdf["rid"].iloc[i], key))
-                yield pd.DataFrame(rows, columns=[out_id, "band_key"])
+                keys = [
+                    [
+                        f"{bi}:" + "".join("1" if bits[i, j] else "0" for j in band)
+                        for bi, band in enumerate(bands_)
+                    ]
+                    for i in range(len(pdf))
+                ]
+                yield pd.DataFrame({out_id: pdf["rid"].values, out_set: keys})
 
-        return df.mapInPandas(sig, schema)
+        return df.mapInPandas(sig, schema).select(
+            out_id, out_set, F.explode(out_set).alias("band_key")
+        )
 
     def _lsh(
         self, l: DataFrame, r: DataFrame, dim: int,
@@ -253,21 +263,17 @@ class EmbeddingBlocker:
         # through the quadratic shuffle; vectors re-attach afterwards.
         # Carrying vec1/vec2 through the band join multiplies the widest
         # stage's shuffle bytes by dim x band fan-out (see the identical
-        # lesson at llmdata/dedup.py minhash_near_duplicates).
-        parallelism = l.sparkSession.sparkContext.defaultParallelism
-        sl = self._signatures(l, dim, "id1")
-        sr = self._signatures(r, dim, "id2")
-        # quadratic band join: pin probe-side parallelism (see dedup.py)
-        sl = sl.repartition(parallelism, "band_key", "id1")
-        cands = (
-            sl.join(sr, "band_key")
-            .select("id1", "id2")
-            # repartition BEFORE dropDuplicates so the dedup aggregate AND
-            # the per-pair re-score behind it run at full width (AQE would
-            # otherwise coalesce the ENSURE_REQUIREMENTS exchange)
-            .repartition(parallelism, "id1", "id2")
-            .dropDuplicates(["id1", "id2"])
-        )
+        # lesson at llmdata/dedup.py minhash_near_duplicates). The band
+        # arrays ride along instead, so a pair colliding in k bands is
+        # kept once (at its minimum shared band) with no (id1, id2)
+        # exchange. Not oriented: top-k ranks every neighbour of id1.
+        cands = pair_join(
+            self._signatures(l, dim, "id1", "__bks1"),
+            self._signatures(r, dim, "id2", "__bks2"),
+            "band_key",
+            self_join=False,
+            key_sets=("__bks1", "__bks2"),
+        ).select("id1", "id2")
         v1 = l.select(F.col("rid").alias("id1"), F.col("vec").alias("vec1"))
         v2 = r.select(F.col("rid").alias("id2"), F.col("vec").alias("vec2"))
         if pin_l:

@@ -1,10 +1,12 @@
-"""Token blocking = explode + equi-join + distinct.
+"""Token blocking = explode + equi-join through the pair kernel.
 
 Reference: TokenBlocker (PyDI/entitymatching/blocking/token_blocking.py:
 17-315): inverted index token->ids per side, pair when >= 1 shared token,
 global ``seen_pairs`` dedup. Spark shape: ``select(id, explode(tokens))``
-on each side, equi-join on token, ``dropDuplicates`` — the inverted index
-is the shuffle, the dedup set is a shuffle, both scale linearly.
+on each side and ``blocking.base.pair_join`` on the token — the inverted
+index is the shuffle. The uncapped path carries each record's token set
+and keeps a pair only at its minimum shared token (no dedup exchange);
+the capped path dedups with ``distinct_pairs``.
 
 Scale knob the reference lacks: ``max_token_frequency`` prunes stop-token
 hot keys (a token appearing in f docs per side creates f^2 pairs — at
@@ -21,7 +23,7 @@ from dataclasses import dataclass
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from pydi_spark.blocking.base import resolve_side
+from pydi_spark.blocking.base import distinct_pairs, pair_join, resolve_side
 from pydi_spark.core.dataset import Dataset
 from pydi_spark.functions.tokenize import char_ngrams, word_tokens
 
@@ -81,58 +83,32 @@ class TokenBlocker:
         dr, idr = resolve_side(left if self_join else right, id_column)
 
         if self.max_token_frequency is None:
-            # r13 fast path: NO pair-level dedup exchange. Each pair
-            # (a, b) with shared token set S = tokens(a) ∩ tokens(b) is
-            # emitted once per t ∈ S by the equi-join (the per-record
-            # token arrays are array_distinct, so exactly once per
-            # shared token); keeping only the emission where
-            # t == min(S) yields exactly one row per distinct pair with
-            # block_key == min shared token — the precise declared
-            # output of the old groupBy(id1, id2).agg(min(block_key)),
-            # with the quadratic exchange replaced by an in-stage
-            # filter (guide §2.3/§2.4: never shuffle the pair set to
-            # decide something computable from per-row metadata). The
-            # capped path below cannot use this: pruning removes tokens
-            # from the emission but not from the carried arrays, so
-            # min(S) there would name (or select on) a pruned token.
+            # uncapped path: the per-record token arrays are
+            # array_distinct and equal the exploded keys, so the kernel's
+            # min-shared-token filter yields one row per pair with
+            # block_key == min shared token (the declared output of a
+            # groupBy(id1, id2).agg(min(block_key))) and no pair-level
+            # exchange. The capped path below cannot use it: pruning
+            # removes tokens from the emission but not from the carried
+            # arrays, so min(S) there would name a pruned token.
             l = self._exploded_with_set(dl, idl, "id1", "__t1")
             r = self._exploded_with_set(dr, idr, "id2", "__t2")
-            # pin probe-side parallelism (same rationale as the capped
-            # path): the join output is quadratic per token and a
-            # broadcast plan would inherit the scan's partitioning.
-            # Width = max(cores, shuffle.partitions): this stage is now
-            # the FINAL stage of the plan (no dedup exchange follows to
-            # re-dice it), so its partition count also sizes the
-            # quadratic output's task results — at defaultParallelism
-            # alone, a low-core session collecting the pair set builds
-            # task-result blocks big enough to be evicted from the
-            # block manager (measured: vanilla local[8] collect of the
-            # 46.8M-pair sf0.1 output died with TaskResultLost at width
-            # 8, passes at 200).
-            spark = dl.sparkSession
-            try:
-                width = max(
-                    spark.sparkContext.defaultParallelism,
-                    int(spark.conf.get("spark.sql.shuffle.partitions")),
-                )
-            except (TypeError, ValueError):
-                width = spark.sparkContext.defaultParallelism
-            l = l.repartition(width, "block_key", "id1")
-            pairs = l.join(r, "block_key")
-            if self_join:
-                pairs = pairs.where(F.col("id1") < F.col("id2"))
-            pairs = pairs.where(
-                F.col("block_key")
-                == F.array_min(F.array_intersect("__t1", "__t2"))
+            pairs = pair_join(
+                l, r, "block_key", self_join=self_join, key_sets=("__t1", "__t2")
             )
-            return pairs.select(
-                F.col("id1").cast("string").alias("id1"),
-                F.col("id2").cast("string").alias("id2"),
-                "block_key",
-            )
+        else:
+            pairs = self._capped_pairs(dl, idl, dr, idr, self_join)
+        return pairs.select(
+            F.col("id1").cast("string").alias("id1"),
+            F.col("id2").cast("string").alias("id2"),
+            "block_key",
+        )
 
-        # capped path (max_token_frequency set): prune hot tokens, then
-        # pair + groupBy dedup (the r12 shape)
+    def _capped_pairs(
+        self, dl: DataFrame, idl: str, dr: DataFrame, idr: str, self_join: bool
+    ) -> DataFrame:
+        """max_token_frequency set: prune hot tokens, then pair and dedup
+        with ``distinct_pairs`` (min block_key per pair)."""
         l = self._exploded(dl, idl, "id1")
         r = self._exploded(dr, idr, "id2")
         # Prune via an anti-join against the HOT list (tokens with
@@ -180,20 +156,7 @@ class TokenBlocker:
         hot = hot.select("block_key").localCheckpoint(eager=True)
         l = l.join(hot, "block_key", "left_anti")
         r = r.join(hot, "block_key", "left_anti")
-        # pin probe-side parallelism: the join output is quadratic per
-        # token, and a broadcast-join plan would otherwise inherit the
-        # scan's partitioning (possibly 1 partition for a single file)
-        l = l.repartition(
-            dl.sparkSession.sparkContext.defaultParallelism, "block_key", "id1"
-        )
-        pairs = l.join(r, "block_key").select("id1", "id2", "block_key")
-        if self_join:
-            pairs = pairs.where(F.col("id1") < F.col("id2"))
         # keep one (id1,id2) row; block_key kept as the min matching token so
         # output stays deterministic (reference keeps first-seen token)
-        deduped = pairs.groupBy("id1", "id2").agg(F.min("block_key").alias("block_key"))
-        return deduped.select(
-            F.col("id1").cast("string").alias("id1"),
-            F.col("id2").cast("string").alias("id2"),
-            "block_key",
-        )
+        pairs = pair_join(l, r, "block_key", self_join=self_join)
+        return distinct_pairs(pairs.select("id1", "id2", "block_key"))

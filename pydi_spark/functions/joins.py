@@ -16,6 +16,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from pydi_spark.blocking.base import distinct_pairs
+
 
 def salted_join(
     big: DataFrame,
@@ -571,7 +573,6 @@ def edit_distance_join(
     self_join = right is None
     if self_join:
         right = left
-    parallelism = left.sparkSession.sparkContext.defaultParallelism
     short_len = k * q + q - 1  # bound max(la,lb) <= this => 0-gram pairs
 
     def base(df, side):
@@ -679,11 +680,7 @@ def edit_distance_join(
     if self_join:
         fallback = fallback.where(F.col("id1") < F.col("id2"))
 
-    cand = (
-        main.unionAll(fallback)
-        .repartition(parallelism, "id1", "id2")
-        .dropDuplicates(["id1", "id2"])
-    )
+    cand = distinct_pairs(main.unionAll(fallback))
     verified = (
         cand.join(
             lbase.withColumnRenamed("id1", "id2")

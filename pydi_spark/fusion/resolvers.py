@@ -66,14 +66,6 @@ def _nonnull_count(v: Column) -> Column:
     return F.count(v)
 
 
-def _sorted_structs(v: Column, rid: Column, comparator) -> Column:
-    """collect (value, rid) pairs and sort with a comparator lambda; the
-    winner is element 0. Deterministic for any tie-break encoded in the
-    comparator."""
-    pairs = F.collect_list(F.when(v.isNotNull(), F.struct(v.alias("v"), rid.alias("rid"))))
-    return F.array_sort(pairs, comparator)
-
-
 def _cmp(*keys):
     """Build a comparator lambda from (expr_fn, ascending) keys."""
 
@@ -111,7 +103,7 @@ def voting(v: Column, rid: Column, ds: Column, trust: Column) -> ResolverAggs:
         counted,
         _cmp((lambda s: s["cnt"], False), (lambda s: s["val"], True)),
     )
-    top = ranked[0]
+    top = F.get(ranked, 0)
     return ResolverAggs(
         value=top["val"],
         confidence=F.when(
@@ -142,7 +134,7 @@ def weighted_voting(v: Column, rid: Column, ds: Column, trust: Column) -> Resolv
         weights, _cmp((lambda s: s["w"], False), (lambda s: s["val"], True))
     )
     total = F.aggregate(weights, F.lit(0.0), lambda acc, s: acc + s["w"])
-    top = ranked[0]
+    top = F.get(ranked, 0)
     return ResolverAggs(
         value=top["val"],
         confidence=F.when(total > 0, top["w"] / total),
@@ -293,7 +285,7 @@ def _pick_by_length(v: Column, rid: Column, longest: bool) -> Column:
         pairs,
         _cmp((lambda s: F.length(s["v"]), not longest), (lambda s: s["v"], True)),
     )
-    return ranked[0]["v"]
+    return F.get(ranked, 0)["v"]
 
 
 @resolver("longest_string")
@@ -323,7 +315,7 @@ def most_complete(v: Column, rid: Column, ds: Column, trust: Column) -> Resolver
             (lambda s: s["v"], True),
         ),
     )
-    return ResolverAggs(value=ranked[0]["v"], confidence=F.lit(0.7), rule="most_complete")
+    return ResolverAggs(value=F.get(ranked, 0)["v"], confidence=F.lit(0.7), rule="most_complete")
 
 
 # ---------------------------------------------------------- list resolvers

@@ -27,9 +27,12 @@ aggregate, array_*); no Python UDFs in any hot path.
 
 from __future__ import annotations
 
+from typing import Callable
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from pydi_spark.blocking.base import distinct_pairs, first_shared_key, pair_join
 from pydi_spark.functions.tokenize import word_tokens
 
 # build-side ceiling for pinning verify joins as broadcasts: the token /
@@ -146,23 +149,6 @@ def minhash_signatures(
         )
 
     return F.array(*[lane(i) for i in range(num_hashes)])
-
-
-def minhash_band_keys(sig: Column, num_hashes: int, bands: int) -> Column:
-    """array<string> of band keys: md5 of the concatenated band slice
-    (signature values render as decimal strings — the exact form the
-    SQL oracles replay with CAST(s AS VARCHAR))."""
-    rows = num_hashes // bands
-    keys = [
-        F.concat(
-            F.lit(f"{b}:"),
-            F.md5(F.concat_ws(",", *[
-                sig[b * rows + r].cast("string") for r in range(rows)
-            ])),
-        )
-        for b in range(bands)
-    ]
-    return F.array(*keys)
 
 
 def token_set_jaccard(a: Column, b: Column) -> Column:
@@ -372,35 +358,18 @@ def minhash_near_duplicates(
     banded = sigs.select(
         "id", F.array(*_band_key_cols(num_hashes, bands)).alias("__bks")
     ).select("id", "__bks", F.explode("__bks").alias("band_key"))
-    # explicit parallelism on the probe side: the banded table is tiny
-    # (docs x bands rows) so AQE coalesces it to ~1 partition — but the
-    # band join EXPLODES output quadratically per key, and that explosion
-    # inherits the probe side's partitioning. Without this, the whole
-    # candidate generation serializes into one task.
-    parallelism = df.sparkSession.sparkContext.defaultParallelism
-    l = banded.select(
-        F.col("id").alias("id1"), F.col("__bks").alias("__bks1"), "band_key"
-    ).repartition(parallelism, "band_key", "id1")
-    r = banded.select(
-        F.col("id").alias("id2"), F.col("__bks").alias("__bks2"), "band_key"
-    )
-    # r13: candidates distinct BY CONSTRUCTION — a pair colliding in k
-    # bands is emitted k times by the band join (band keys are "b:"-
-    # prefixed, so per-id arrays are duplicate-free and the shared set
-    # is exactly the colliding bands); keeping only the emission at the
-    # MINIMUM shared band key yields one row per candidate pair with no
-    # pair-keyed repartition+dropDuplicates exchange (the TokenBlocker
-    # r13 pattern; the carried 4-element band arrays ride the LINEAR
-    # banded table, not the quadratic output).
-    cands = (
-        l.join(r, "band_key")
-        .where(F.col("id1") < F.col("id2"))
-        .where(
-            F.col("band_key")
-            == F.array_min(F.array_intersect("__bks1", "__bks2"))
-        )
-        .select("id1", "id2")
-    )
+    # candidates distinct BY CONSTRUCTION: band keys are "b:"-prefixed,
+    # so per-id band arrays are duplicate-free and the kernel keeps a
+    # pair colliding in k bands only at its minimum shared band key —
+    # no pair-keyed dedup exchange (the carried 4-element arrays ride
+    # the LINEAR banded table, not the quadratic output)
+    cands = pair_join(
+        banded.toDF("id1", "__bks1", "band_key"),
+        banded.toDF("id2", "__bks2", "band_key"),
+        "band_key",
+        self_join=True,
+        key_sets=("__bks1", "__bks2"),
+    ).select("id1", "id2")
     t1 = sigs.select(F.col("id").alias("id1"), F.col("toks").alias("toks1"))
     t2 = sigs.select(F.col("id").alias("id2"), F.col("toks").alias("toks2"))
     if broadcast_verify:
@@ -700,29 +669,17 @@ def simhash_near_duplicates(
             ]
         ),
     ).withColumn("band_key", F.explode("__bks"))
-    parallelism = df.sparkSession.sparkContext.defaultParallelism
-    l = banded.select(
-        F.col("id").alias("id1"), F.col("fp").alias("fp1"),
-        F.col("__bks").alias("__bks1"), "band_key"
-    ).repartition(parallelism, "band_key", "id1")  # see minhash note
-    r = banded.select(
-        F.col("id").alias("id2"), F.col("fp").alias("fp2"),
-        F.col("__bks").alias("__bks2"), "band_key"
-    )
-    # r12 verified (hamming filter) BEFORE the pair-dedup exchange; r13
-    # removes the dedup exchange entirely: band keys carry a per-band
-    # prefix (b << rows), so each per-id band array is duplicate-free
-    # and a pair colliding in k bands is emitted exactly k times —
-    # keeping only the emission at the MINIMUM shared band key leaves
-    # one row per pair (the TokenBlocker r13 pattern). The carried
-    # 4-long arrays ride the LINEAR banded table; the quadratic output
-    # never hits an exchange.
+    # verify after the kernel's min-shared-band filter: band keys carry
+    # a per-band prefix (b << rows), so each per-id band array is
+    # duplicate-free and a pair colliding in k bands survives exactly
+    # once; the quadratic output never hits an exchange
     return (
-        l.join(r, "band_key")
-        .where(F.col("id1") < F.col("id2"))
-        .where(
-            F.col("band_key")
-            == F.array_min(F.array_intersect("__bks1", "__bks2"))
+        pair_join(
+            banded.toDF("id1", "fp1", "__bks1", "band_key"),
+            banded.toDF("id2", "fp2", "__bks2", "band_key"),
+            "band_key",
+            self_join=True,
+            key_sets=("__bks1", "__bks2"),
         )
         .withColumn("hamming", hamming_distance(F.col("fp1"), F.col("fp2")))
         .where(F.col("hamming") <= F.lit(int(max_hamming)))
@@ -776,6 +733,104 @@ def _shingle_rows(
     return exploded.localCheckpoint(eager=True)
 
 
+def _shingle_pairs(
+    df: DataFrame,
+    text_col: str,
+    id_col: str,
+    shingle_size: int,
+    max_shingle_frequency: int | None,
+    broadcast_verify: bool | str,
+    score_name: str,
+    score: Callable[[Column, Column], Column],
+    threshold: float,
+    size_gate: Callable[[Column, Column], Column] | None = None,
+    prefix_filter: bool = False,
+) -> DataFrame:
+    """[id1, id2, <score_name>]: shingle-block candidates from the pair
+    kernel, verified by ``score(sh1, sh2) >= threshold`` over the
+    re-attached shingle sets (the body of both shingle-set dedups).
+
+    ``size_gate`` is a lossless pre-filter on the two set sizes, run
+    before any array intersect; ``prefix_filter`` keeps only each
+    set's PPJoin prefix (rarest-first) for candidate generation. Both
+    are sound only for a symmetric, size-bounded score (Jaccard)."""
+    broadcast_verify = _resolve_broadcast_verify(df, broadcast_verify)
+    # shared shingle generation (_shingle_rows): checkpointed because
+    # the rows feed up to FOUR consumers here (set re-attach, hot-
+    # shingle count, its semi-join, candidate generation)
+    exploded = _shingle_rows(df, text_col, id_col, shingle_size)
+    base = exploded.groupBy("id").agg(F.collect_list("shingle").alias("sh"))
+    if max_shingle_frequency:
+        freq_keep = (
+            exploded.groupBy("shingle").count()
+            .where(F.col("count") <= max_shingle_frequency)
+            .select("shingle")
+        )
+        exploded = exploded.join(F.broadcast(freq_keep), "shingle", "left_semi")
+    if prefix_filter:
+        from pyspark.sql import Window
+
+        freq = exploded.groupBy("shingle").agg(F.count("*").alias("__freq"))
+        doc_len = exploded.groupBy("id").agg(F.count("*").alias("__len"))
+        wid = Window.partitionBy("id").orderBy("__freq", "shingle")
+        t = float(threshold)
+        cand_rows = (
+            exploded.join(freq, "shingle")
+            .withColumn("__rk", F.row_number().over(wid))
+            .join(doc_len, "id")
+            .where(
+                F.col("__rk")
+                <= F.col("__len") - F.ceil(F.lit(t) * F.col("__len")) + 1
+            )
+            .select("id", "shingle")
+        )
+    else:
+        cand_rows = exploded
+    # ids-only candidate join (narrow shuffle); shingle sets re-attach
+    # for verification afterwards
+    raw = pair_join(
+        cand_rows.select(F.col("id").alias("id1"), "shingle"),
+        cand_rows.select(F.col("id").alias("id2"), "shingle"),
+        "shingle",
+        self_join=True,
+    )
+    s1 = base.select(F.col("id").alias("id1"), F.col("sh").alias("sh1"))
+    s2 = base.select(F.col("id").alias("id2"), F.col("sh").alias("sh2"))
+
+    def attach(pairs: DataFrame, pin: bool) -> DataFrame:
+        l, r = (F.broadcast(s1), F.broadcast(s2)) if pin else (s1, s2)
+        out = pairs.join(l, "id1").join(r, "id2")
+        return out if size_gate is None else out.where(
+            size_gate(F.col("sh1"), F.col("sh2"))
+        )
+
+    def verify(pairs: DataFrame) -> DataFrame:
+        return (
+            pairs.withColumn(score_name, score(F.col("sh1"), F.col("sh2")))
+            .where(F.col(score_name) >= F.lit(float(threshold)))
+            .select("id1", "id2", score_name)
+        )
+
+    if not broadcast_verify:
+        # corpus scale: the verify joins shuffle by id, so dedup FIRST —
+        # shuffling raw collisions with their attached shingle arrays
+        # would multiply the exchange bytes by doc length
+        return verify(attach(distinct_pairs(raw.select("id1", "id2")), False))
+    # broadcast verify runs BEFORE any pair dedup (the score is constant
+    # per pair, so filter and dedup commute): both set joins are
+    # map-side inside the candidate join's partitioning and only
+    # surviving pairs can reach an exchange. Unpruned, the shared set is
+    # exactly array_intersect(sh1, sh2) — already attached — so the
+    # min-shared-shingle emission filter removes the dedup outright.
+    # Pruned paths (hot-shingle cap, prefix filter) keep distinct_pairs:
+    # pruning removes emissions but not array members, so the minimum
+    # could name a never-emitted shingle and silently drop the pair.
+    out = attach(raw, True)
+    if not max_shingle_frequency and not prefix_filter:
+        return verify(out.where(first_shared_key("shingle", "sh1", "sh2")))
+    return distinct_pairs(verify(out))
+
+
 def ngram_containment_duplicates(
     df: DataFrame,
     text_col: str = "text",
@@ -801,71 +856,12 @@ def ngram_containment_duplicates(
     symmetric Jaccard), so ``max_shingle_frequency`` is the only
     candidate-pruning knob here.
     """
-    broadcast_verify = _resolve_broadcast_verify(df, broadcast_verify)
-    exploded = _shingle_rows(df, text_col, id_col, shingle_size)
-    base = exploded.groupBy("id").agg(F.collect_list("shingle").alias("sh"))
-    if max_shingle_frequency:
-        freq_keep = (
-            exploded.groupBy("shingle").count()
-            .where(F.col("count") <= max_shingle_frequency)
-            .select("shingle")
-        )
-        exploded = exploded.join(F.broadcast(freq_keep), "shingle", "left_semi")
-    parallelism = df.sparkSession.sparkContext.defaultParallelism
-    l = exploded.select(F.col("id").alias("id1"), "shingle").repartition(
-        parallelism, "shingle", "id1"
-    )
-    r = exploded.select(F.col("id").alias("id2"), "shingle")
-    raw = l.join(r, "shingle").where(F.col("id1") < F.col("id2")).select(
-        "id1", "id2"
-    )
-    s1 = base.select(F.col("id").alias("id1"), F.col("sh").alias("sh1"))
-    s2 = base.select(F.col("id").alias("id2"), F.col("sh").alias("sh2"))
-    inter = F.size(F.array_intersect(F.col("sh1"), F.col("sh2")))
-    containment = inter / F.least(F.size("sh1"), F.size("sh2"))
-    if broadcast_verify:
-        # verify before the pair-dedup exchange — see the jaccard twin
-        # (containment is constant per pair, so filter/dedup commute
-        # and only surviving pairs reach the dedup exchange). r13,
-        # UNPRUNED path: min-shared-shingle emission filter replaces
-        # the dedup exchange outright (see the jaccard twin for why
-        # pruned paths cannot).
-        if not max_shingle_frequency:
-            raw_sh = l.join(r, "shingle").where(
-                F.col("id1") < F.col("id2")
-            ).select("id1", "id2", "shingle")
-            return (
-                raw_sh.join(F.broadcast(s1), "id1")
-                .join(F.broadcast(s2), "id2")
-                .where(
-                    F.col("shingle")
-                    == F.array_min(F.array_intersect("sh1", "sh2"))
-                )
-                .withColumn("containment", containment)
-                .where(
-                    F.col("containment") >= F.lit(float(containment_threshold))
-                )
-                .select("id1", "id2", "containment")
-            )
-        return (
-            raw.join(F.broadcast(s1), "id1")
-            .join(F.broadcast(s2), "id2")
-            .withColumn("containment", containment)
-            .where(
-                F.col("containment") >= F.lit(float(containment_threshold))
-            )
-            .select("id1", "id2", "containment")
-            .dropDuplicates(["id1", "id2"])
-        )
-    cands = raw.repartition(parallelism, "id1", "id2").dropDuplicates(
-        ["id1", "id2"]
-    )
-    return (
-        cands.join(s1, "id1")
-        .join(s2, "id2")
-        .withColumn("containment", containment)
-        .where(F.col("containment") >= F.lit(float(containment_threshold)))
-        .select("id1", "id2", "containment")
+    return _shingle_pairs(
+        df, text_col, id_col, shingle_size, max_shingle_frequency,
+        broadcast_verify, "containment",
+        lambda a, b: F.size(F.array_intersect(a, b))
+        / F.least(F.size(a), F.size(b)),
+        containment_threshold,
     )
 
 
@@ -892,119 +888,11 @@ def ngram_jaccard_duplicates(
     lossy knob on top (drops hot shingles from candidate generation
     entirely). ``broadcast_verify`` as in
     :func:`minhash_near_duplicates`."""
-    broadcast_verify = _resolve_broadcast_verify(df, broadcast_verify)
-    # shared shingle generation (_shingle_rows): checkpointed because
-    # the rows feed up to FOUR consumers here (set re-attach, hot-
-    # shingle count, its semi-join, candidate generation)
-    exploded = _shingle_rows(df, text_col, id_col, shingle_size)
-    base = exploded.groupBy("id").agg(F.collect_list("shingle").alias("sh"))
-    if max_shingle_frequency:
-        freq_keep = (
-            exploded.groupBy("shingle").count()
-            .where(F.col("count") <= max_shingle_frequency)
-            .select("shingle")
-        )
-        exploded = exploded.join(F.broadcast(freq_keep), "shingle", "left_semi")
-    if prefix_filter:
-        from pyspark.sql import Window
-
-        freq = exploded.groupBy("shingle").agg(F.count("*").alias("__freq"))
-        doc_len = exploded.groupBy("id").agg(F.count("*").alias("__len"))
-        wid = Window.partitionBy("id").orderBy("__freq", "shingle")
-        t = float(jaccard_threshold)
-        cand_rows = (
-            exploded.join(freq, "shingle")
-            .withColumn("__rk", F.row_number().over(wid))
-            .join(doc_len, "id")
-            .where(
-                F.col("__rk")
-                <= F.col("__len") - F.ceil(F.lit(t) * F.col("__len")) + 1
-            )
-            .select("id", "shingle")
-        )
-    else:
-        cand_rows = exploded
-    # ids-only candidate join (narrow shuffle), shingle sets re-attached
-    # for verification afterwards; probe side explicitly repartitioned
-    # (quadratic join output inherits probe partitioning — see minhash)
-    parallelism = df.sparkSession.sparkContext.defaultParallelism
-    l = cand_rows.select(F.col("id").alias("id1"), "shingle").repartition(
-        parallelism, "shingle", "id1"
-    )
-    r = cand_rows.select(F.col("id").alias("id2"), "shingle")
-    raw = l.join(r, "shingle").where(F.col("id1") < F.col("id2")).select(
-        "id1", "id2"
-    )
-    s1 = base.select(F.col("id").alias("id1"), F.col("sh").alias("sh1"))
-    s2 = base.select(F.col("id").alias("id2"), F.col("sh").alias("sh2"))
-    jaccard = token_set_jaccard(F.col("sh1"), F.col("sh2"))
-    size_gate = jaccard_size_gate(
-        F.col("sh1"), F.col("sh2"), jaccard_threshold
-    )
-    if broadcast_verify:
-        # verify BEFORE the pair-dedup exchange (the simhash r12 rule:
-        # jaccard is constant per pair, so filter/dedup commute): both
-        # set joins are map-side broadcasts inside the candidate join's
-        # partitioning, and the dedup exchange then moves only the
-        # SURVIVING pairs instead of every shingle collision. A pair
-        # colliding in k shingles is verified k times — at the measured
-        # ~12% multi-collision rate that re-intersect is far cheaper
-        # than shuffling the full candidate set twice (repartition +
-        # dedup) as the r12-before shape did. The size gate prunes
-        # candidates on two int lengths before any array intersect.
-        #
-        # r13, UNPRUNED path only: the dedup exchange disappears too.
-        # With no hot-shingle prune and no prefix filter, a pair is
-        # emitted once per SHARED shingle, and the shared set is
-        # exactly array_intersect(sh1, sh2) — already attached for the
-        # Jaccard — so keeping only the emission at the minimum shared
-        # shingle leaves one row per pair (TokenBlocker r13 pattern).
-        # Pruned paths keep dropDuplicates: pruning removes emissions
-        # but not array members, so the min could name a never-emitted
-        # shingle and silently drop the pair.
-        unpruned = not max_shingle_frequency and not prefix_filter
-        if unpruned:
-            raw = l.join(r, "shingle").where(
-                F.col("id1") < F.col("id2")
-            ).select("id1", "id2", "shingle")
-        out = (
-            raw.join(F.broadcast(s1), "id1")
-            .join(F.broadcast(s2), "id2")
-            .where(size_gate)
-        )
-        if unpruned:
-            return (
-                out.where(
-                    F.col("shingle")
-                    == F.array_min(F.array_intersect("sh1", "sh2"))
-                )
-                .withColumn("jaccard", jaccard)
-                .where(F.col("jaccard") >= F.lit(float(jaccard_threshold)))
-                .select("id1", "id2", "jaccard")
-            )
-        return (
-            out.withColumn("jaccard", jaccard)
-            .where(F.col("jaccard") >= F.lit(float(jaccard_threshold)))
-            .select("id1", "id2", "jaccard")
-            .dropDuplicates(["id1", "id2"])
-        )
-    # corpus scale (no broadcast): the verify joins shuffle by id, so
-    # dedup FIRST — shuffling raw collisions with their attached
-    # shingle arrays would multiply the exchange bytes by doc length.
-    # Explicit width before the dedup: repartition by (id1, id2)
-    # satisfies dropDuplicates' distribution requirement, so the dedup
-    # aggregate and the verify stage behind it run at full parallelism
-    # instead of on an AQE-coalesced handful of tasks.
-    cands = raw.repartition(parallelism, "id1", "id2").dropDuplicates(
-        ["id1", "id2"]
-    )
-    return (
-        cands.join(s1, "id1")
-        .join(s2, "id2")
-        .where(size_gate)
-        .withColumn("jaccard", jaccard)
-        .where(F.col("jaccard") >= F.lit(float(jaccard_threshold)))
-        .select("id1", "id2", "jaccard")
+    return _shingle_pairs(
+        df, text_col, id_col, shingle_size, max_shingle_frequency,
+        broadcast_verify, "jaccard", token_set_jaccard, jaccard_threshold,
+        size_gate=lambda a, b: jaccard_size_gate(a, b, jaccard_threshold),
+        prefix_filter=prefix_filter,
     )
 
 

@@ -41,6 +41,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from pydi_spark.blocking.base import pair_join
+
 MEDIA_SCHEMA = StructType(
     [
         StructField("media_id", StringType()),
@@ -515,36 +517,27 @@ def image_near_duplicates(
     hashes = perceptual_hash(
         df, decoder=decoder, id_col=id_col, payload_col=payload_col
     ).where(F.col("decode_ok") == "ok").select("media_id", "phash")
-    parallelism = df.sparkSession.sparkContext.defaultParallelism
+    # "i:byte" keys: each record's 8-key array is duplicate-free, so the
+    # pair kernel keeps a pair sharing k bands once, at its minimum
+    # shared band, with no (id1, id2) dedup exchange
     bands = hashes.select(
         "media_id",
         "phash",
-        F.explode(
-            F.array(*[
-                F.concat_ws(
-                    ":",
-                    F.lit(i),
-                    F.shiftrightunsigned(F.col("phash"), 8 * i).bitwiseAND(F.lit(255)),
-                )
-                for i in range(8)
-            ])
-        ).alias("band_key"),
-    )
-    left = bands.alias("l")
-    # explicit probe-side repartition: AQE otherwise serializes the
-    # quadratic band join (NOTES.md perf lesson, same as minhash/simhash)
-    right = bands.repartition(parallelism, "band_key").alias("r")
-    pairs = (
-        left.join(right, "band_key")
-        .where(F.col("l.media_id") < F.col("r.media_id"))
-        .select(
-            F.col("l.media_id").alias("id1"),
-            F.col("r.media_id").alias("id2"),
-            F.col("l.phash").alias("h1"),
-            F.col("r.phash").alias("h2"),
-        )
-        .repartition(parallelism, "id1", "id2")
-        .dropDuplicates(["id1", "id2"])
+        F.array(*[
+            F.concat_ws(
+                ":",
+                F.lit(i),
+                F.shiftrightunsigned(F.col("phash"), 8 * i).bitwiseAND(F.lit(255)),
+            )
+            for i in range(8)
+        ]).alias("__bks"),
+    ).withColumn("band_key", F.explode("__bks"))
+    pairs = pair_join(
+        bands.toDF("id1", "h1", "__bks1", "band_key"),
+        bands.toDF("id2", "h2", "__bks2", "band_key"),
+        "band_key",
+        self_join=True,
+        key_sets=("__bks1", "__bks2"),
     )
     return (
         pairs.withColumn(

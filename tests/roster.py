@@ -43,4 +43,17 @@ ROTATION_QUEUE: set[str] = {
     # r12: detect_anomalies MAD from the shared histogram (profiling/profiler.py)
     "events_anomalies",
     "normalize_impute",
+    # band/token/gram pair joins moved onto the blocking/base.py pair
+    # kernel. The other eleven re-check obligations of that change
+    # (blocking_token, blocking_token_capped, dedup_minhash,
+    # dedup_simhash, dedup_ngram_jaccard, dedup_ngram_prefix,
+    # dedup_containment, dedup_agreement, join_edit_distance,
+    # join_edit_distance_capped, normalize_canonicalize) already sit in
+    # the driver window, which the queue must not overlap.
+    "dedup_embedding",
+    "ann_lsh",
+    # voting / longest_string pick element 0 with get() (NULL on an
+    # all-null group instead of an ANSI index error; fusion/resolvers.py)
+    "fusion_selection",
+    "fusion_debug",
 }

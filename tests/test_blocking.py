@@ -352,6 +352,48 @@ def test_embedding_lsh_band_join_is_ids_only(spark):
     )
 
 
+def test_embedding_lsh_all_band_collision_emitted_once(spark):
+    # identical vectors collide in EVERY band; the band join emits the
+    # pair once per band and the min-shared-band filter must keep one
+    rows = [("a", [1.0, 2.0, 3.0]), ("b", [1.0, 2.0, 3.0]),
+            ("c", [-3.0, 0.5, 1.0])]
+    df = spark.createDataFrame(rows, "rid string, vec array<float>")
+    out = EmbeddingBlocker(vector_column="vec", method="lsh", top_k=10,
+                           threshold=0.0, lsh_bands=4).block(df, df, id_column="rid")
+    got = [(r["id1"], r["id2"]) for r in out.collect()]
+    assert got.count(("a", "b")) == 1
+    assert len(got) == len(set(got))
+
+
+def test_pair_joins_go_through_the_kernel():
+    """Band/token/gram pair joins emit and dedup pairs only through
+    blocking/base.py (pair_join / first_shared_key / distinct_pairs):
+    neither the min-shared-key predicate nor an (id1, id2) repartition
+    may be hand-rolled again in blocking/, llmdata/ or joins.py."""
+    import pathlib
+    import re
+
+    root = pathlib.Path(__file__).resolve().parents[1] / "pydi_spark"
+    files = [
+        *(root / "blocking").glob("*.py"),
+        *(root / "llmdata").glob("*.py"),
+        root / "functions" / "joins.py",
+    ]
+    patterns = [
+        re.compile(r"array_min\(\s*(?:F\.)?array_intersect\("),
+        # repartition(<width>, "id1", "id2"), width possibly a call
+        re.compile(r"repartition\((?:[^()]|\([^()]*\))*?\"id1\",\s*\"id2\""),
+    ]
+    hits = [
+        f"{f.relative_to(root)}: {m.group(0)!r}"
+        for f in files
+        if f != root / "blocking" / "base.py"
+        for p in patterns
+        for m in p.finditer(f.read_text())
+    ]
+    assert not hits, "hand-rolled pair kernel:\n" + "\n".join(hits)
+
+
 def test_meta_blocking_wnp_and_cnp(spark):
     from pydi_spark.blocking import meta_blocking
 

@@ -112,6 +112,29 @@ def test_list_resolvers(spark):
     assert list(row["tags_k"]) == ["y"]
 
 
+@pytest.mark.parametrize(
+    "resolver", ["voting", "weighted_voting", "longest_string", "most_complete"]
+)
+def test_array_pick_resolvers_all_null_group(spark, resolver):
+    # a group whose values are all null ranks an EMPTY array; element 0
+    # of it must be NULL, not an INVALID_ARRAY_INDEX error under ANSI
+    ds = Dataset.wrap(
+        spark.createDataFrame([("r1", None), ("r2", None)], "rid string, x string"),
+        "s", id_column="rid",
+    )
+    corr = spark.createDataFrame(
+        [("r1", "r2", 1.0)], "id1 string, id2 string, score double"
+    )
+    strat = DataFusionStrategy().add_attribute_fuser("x", resolver)
+    prev = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "true")
+    try:
+        rows = DataFusionEngine(strat).run([ds], corr).collect()
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", prev)
+    assert len(rows) == 1 and rows[0]["x"] is None
+
+
 def test_custom_resolver_and_error_fallback(spark):
     ds = Dataset.wrap(
         spark.createDataFrame(

@@ -795,3 +795,66 @@ def test_feature_propagation_matches_python_sim(spark):
             nxt[v] = (x + sum(known)) // (1 + len(known))
         state = nxt
     assert got == state
+
+
+def test_pair_kernel_matches_brute_force(spark):
+    """Random (id, key-array) tables, self-join and two-sided: the
+    kernel's min-shared-key path (key_sets), its distinct_pairs path and
+    a Python brute force agree on {(id1, id2): min shared key}. Tables
+    include a hot key shared by most records, a pair sharing every key,
+    and empty key arrays."""
+    import random
+
+    from pyspark.sql import functions as F
+
+    from pydi_spark.blocking.base import distinct_pairs, pair_join
+
+    def table(rng, prefix, n):
+        rows = []
+        for i in range(n):
+            k = rng.choice([0, 0, 1, 2, 3, 4])
+            keys = rng.sample([f"k{j}" for j in range(12)], k)
+            if rng.random() < 0.6:
+                keys.append("hot")  # shared by many records
+            rows.append((f"{prefix}{i:02d}", keys))
+        # a pair sharing every key, and a keyless record
+        rows.append((f"{prefix}97", ["k1", "k2", "k3", "hot"]))
+        rows.append((f"{prefix}98", ["hot", "k3", "k2", "k1"]))
+        rows.append((f"{prefix}99", []))
+        return rows
+
+    def brute(lrows, rrows, self_join):
+        want = {}
+        for a, ka in lrows:
+            for b, kb in rrows:
+                shared = set(ka) & set(kb)
+                if shared and (not self_join or a < b):
+                    want[(a, b)] = min(shared)
+        return want
+
+    def side(rows, n):
+        df = spark.createDataFrame(rows, f"id{n} string, s{n} array<string>")
+        return df.select(f"id{n}", f"s{n}", F.explode(f"s{n}").alias("key"))
+
+    def collect(pairs):
+        rows = pairs.select("id1", "id2", "key").collect()
+        got = {(r["id1"], r["id2"]): r["key"] for r in rows}
+        assert len(got) == len(rows), "duplicate (id1, id2) rows"
+        return got
+
+    rng = random.Random(1405)
+    for _ in range(2):
+        lrows = table(rng, "a", 25)
+        for self_join in (True, False):
+            rrows = lrows if self_join else table(rng, "b", 20)
+            l, r = side(lrows, 1), side(rrows, 2)
+            want = brute(lrows, rrows, self_join)
+            assert ("a97", rrows[-2][0]) in want  # shares every key
+            carried = pair_join(
+                l, r, "key", self_join=self_join, key_sets=("s1", "s2")
+            )
+            emitted = pair_join(
+                l.drop("s1"), r.drop("s2"), "key", self_join=self_join
+            )
+            assert collect(carried) == want
+            assert collect(distinct_pairs(emitted.select("id1", "id2", "key"))) == want
