@@ -42,6 +42,7 @@ from pyspark.sql.types import (
 )
 
 from pydi_spark.blocking.base import pair_join, resolve_side
+from pydi_spark.core.arrowio import rows_to_df
 from pydi_spark.core.dataset import Dataset
 
 PAIR_SCHEMA = StructType(
@@ -371,7 +372,7 @@ class EmbeddingBlocker:
                 # empty (or all-null-vector) left side: no candidate
                 # pairs by definition — stay total instead of crashing
                 # on the dim probe (round-6 empty-input sweep)
-                return l.sparkSession.createDataFrame([], PAIR_SCHEMA)
+                return rows_to_df(l.sparkSession, [], PAIR_SCHEMA)
             dim = len(head["vec"])
             # broadcast-pin decision keys on the INPUT relations (parquet
             # size estimates are reliable; derived frames are not) — never

@@ -14,6 +14,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame
 
 from pydi_spark.clustering.base import apply_threshold
+from pydi_spark.core.arrowio import rows_to_df
 
 
 @dataclass
@@ -43,7 +44,8 @@ class CentreClusterer:
                 if b in is_center:
                     assignment[a] = b
         spark = correspondences.sparkSession
-        out = spark.createDataFrame(
+        out = rows_to_df(
+            spark,
             list(assignment.items()), "record_id string, cluster_id string"
         )
         if self.min_cluster_size and self.min_cluster_size > 1:

@@ -164,6 +164,15 @@ def _driver_union_find(spark, forest_pdf) -> DataFrame:
     return pandas_to_df(spark, out, "record_id string, cluster_id string")
 
 
+def _edge_union_find(edges: DataFrame) -> DataFrame | None:
+    """Driver union-find straight over the raw edges; None when the
+    capped collect refuses them."""
+    pdf = _collect_capped(
+        edges.select(F.col("id1").alias("a"), F.col("id2").alias("b"))
+    )
+    return None if pdf is None else _driver_union_find(edges.sparkSession, pdf)
+
+
 def _hybrid_components(edges: DataFrame) -> DataFrame:
     """Driver union-find — directly over the edges when the EDGE set
     itself is driver-safe, else over the partition-local contraction
@@ -183,11 +192,9 @@ def _hybrid_components(edges: DataFrame) -> DataFrame:
     from pydi_spark.core.plansize import fits_estimate
 
     if fits_estimate(edges, DRIVER_SAFE_EDGE_BYTES):
-        pdf = _collect_capped(
-            edges.select(F.col("id1").alias("a"), F.col("id2").alias("b"))
-        )
-        if pdf is not None:
-            return _driver_union_find(edges.sparkSession, pdf)
+        comps = _edge_union_find(edges)
+        if comps is not None:
+            return comps
         # the size estimate lied — contract first, then try again
     forest_pdf = _collect_capped(_build_forest(edges))
     if forest_pdf is None:
@@ -219,12 +226,16 @@ def connected_components(
       jobs; requires the NODE set (not edges) to fit the driver.
     - 'distributed': partition-local forest contraction, then
       large-star/small-star rounds — unbounded scale.
-    - 'auto' (default): builds the partition-local forest ONCE
-      (checkpointed), counts it there (node-sized, no recompute of the
-      input lineage — a separate approx-count pre-pass cost an extra
-      full pass over derived edge frames), then either finishes with the
-      driver union-find or hands the CONTRACTED forest (<= #nodes rows,
-      same components) to the distributed rounds.
+    - 'auto' (default): edges whose Catalyst size estimate is inside
+      the driver gate are collected straight away. Otherwise the edges
+      are checkpointed (JVM only) and counted exactly there; at most
+      ``driver_node_limit`` of them go to the driver union-find as they
+      are. Only a larger edge set (or a refused collect) pays for the
+      partition-local mapInPandas forest, built once from the
+      checkpoint and counted: node-sized, it either finishes on the
+      driver or hands the CONTRACTED forest (<= #nodes rows, same
+      components) to the distributed rounds. Every branch yields the
+      same min-roots (see ``_hybrid_components``).
 
     Ids are cast to string up front so the 'min record id (string
     order)' contract and the output schema are identical regardless of
@@ -251,13 +262,19 @@ def connected_components(
     if strategy == "auto":
         from pydi_spark.core.plansize import fits_estimate
 
-        if fits_estimate(edges, DRIVER_SAFE_EDGE_BYTES):
-            pdf = _collect_capped(
-                edges.select(F.col("id1").alias("a"), F.col("id2").alias("b"))
-            )
-            if pdf is not None:
-                return _driver_union_find(edges.sparkSession, pdf)
-            # estimate lied: fall through to the exactly-counted forest
+        small = fits_estimate(edges, DRIVER_SAFE_EDGE_BYTES)
+        if not small:
+            # Join-derived edge frames always fail the estimate. An exact
+            # count in the JVM lets a driver-sized edge set skip the
+            # forest, whose mapInPandas pass is a Python-worker stage
+            # (~1.2 s of executor time per call on a 4-core host, NOTES.md)
+            edges = edges.localCheckpoint(eager=True)
+            small = edges.count() <= driver_node_limit
+        if small:
+            comps = _edge_union_find(edges)
+            if comps is not None:
+                return comps
+            # the collect was refused: contract first
         forest = _build_forest(edges).localCheckpoint(eager=True)
         if forest.count() <= driver_node_limit:
             from pydi_spark.core.arrowio import collect_pandas

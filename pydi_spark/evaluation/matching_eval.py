@@ -18,6 +18,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from pydi_spark.core.arrowio import rows_to_df
+
 
 def normalize_labels_expr(col: Column) -> Column:
     """Tolerant 1/0/true/false/yes/no/match parsing (evaluation.py:37-97)."""
@@ -54,14 +56,11 @@ def evaluate_blocking(
     candidate-keyed exchange from the evaluator; ``gold_distinct=True``
     asserts the same for the (label-filtered) gold pairs.
 
-    Null-key convention (r13, per ADVICE r12): above the small-universe
-    gate membership is JOIN semantics — a pair with a NULL id never
+    Null-key convention, the same on both sides of the small-universe
+    gate: membership is JOIN semantics — a pair with a NULL id never
     matches gold (exactly the oracle's ``JOIN ... USING (id1, id2)``),
-    while null-keyed candidate rows still count toward ``n_cand`` as
-    one deduped row. Below the gate the r12 union+groupBy shape is kept
-    (one action), which groups null keys as equal. Real id columns are
-    never null; null-id behaviour on degenerate inputs is deliberately
-    left shape-dependent rather than paying a filter on every row.
+    while null-keyed candidate and gold rows still count toward
+    ``n_cand`` / ``n_gold`` as one deduped row each.
     """
     gold = test_pairs
     if "label" in gold.columns:
@@ -108,7 +107,13 @@ def evaluate_blocking(
             .agg(
                 F.sum("__c").alias("n_cand"),
                 F.sum("__g").alias("n_gold"),
-                F.sum(F.col("__c") * F.col("__g")).alias("n_found"),
+                # groupBy keys nulls as equal; the join below does not
+                F.sum(
+                    F.when(
+                        F.col("id1").isNotNull() & F.col("id2").isNotNull(),
+                        F.col("__c") * F.col("__g"),
+                    )
+                ).alias("n_found"),
             )
             .collect()[0]
         )
@@ -151,7 +156,8 @@ def evaluate_blocking(
     storable = total_possible if total_possible < 2**63 else None
 
     spark = candidate_pairs.sparkSession
-    return spark.createDataFrame(
+    return rows_to_df(
+        spark,
         [
             (
                 float(n_found) / n_gold if n_gold else None,
@@ -232,7 +238,8 @@ def evaluate_matching(
     accuracy = (tp + tn) / total if total else None
 
     spark = correspondences.sparkSession
-    return spark.createDataFrame(
+    return rows_to_df(
+        spark,
         [(precision, recall, f1, accuracy, tp, fp, fn, tn)],
         "precision double, recall double, f1 double, accuracy double, "
         "tp long, fp long, fn long, tn long",
@@ -267,7 +274,7 @@ def threshold_sweep(
     n_pos = gold.where("label = 1").count()
 
     spark = correspondences.sparkSession
-    th_df = spark.createDataFrame([(float(t),) for t in thresholds], "threshold double")
+    th_df = rows_to_df(spark, [(float(t),) for t in thresholds], "threshold double")
     # for each threshold: predicted = score >= t (unmatched gold rows have
     # null score -> never predicted). Broadcast pins the tiny threshold
     # table to a BroadcastNestedLoopJoin — no shuffle-cartesian of the

@@ -13,6 +13,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from pydi_spark.core.arrowio import rows_to_df
+
 _INTEGRAL_TYPES = ("byte", "short", "integer", "long")
 
 
@@ -60,7 +62,8 @@ def _prefix_with_offsets(
         acc += row["__t"] or 0
     spark = df.sparkSession
     off_df = F.broadcast(
-        spark.createDataFrame(
+        rows_to_df(
+            spark,
             [(int(p), int(o)) for p, o in offsets.items()],
             "__pid int, __off long",
         )
@@ -263,7 +266,8 @@ def global_running_max(
     spark = df.sparkSession
     vtype = dict(df.dtypes)[value_col]
     off_df = F.broadcast(
-        spark.createDataFrame(
+        rows_to_df(
+            spark,
             [(int(p), o) for p, o in offsets.items()],
             f"__pid int, __off {vtype}",
         )

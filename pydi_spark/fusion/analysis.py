@@ -12,6 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from pydi_spark.core.arrowio import rows_to_df
 from pydi_spark.core.dataset import Dataset
 
 
@@ -33,7 +34,8 @@ def compare_dataset_schemas(datasets: list[Dataset]) -> DataFrame:
     n = len(datasets)
     for attr, present in sorted(all_attrs.items()):
         rows.append((attr, sorted(present), n, len(present) == n))
-    return spark.createDataFrame(
+    return rows_to_df(
+        spark,
         rows,
         "attribute string, datasets_present array<string>, n_datasets int, is_shared boolean",
     )
@@ -88,7 +90,8 @@ def detect_attribute_conflicts(
          row[f"__c_{a}"] / n_groups if n_groups else 0.0)
         for a in attrs
     ]
-    return spark.createDataFrame(
+    return rows_to_df(
+        spark,
         rows, "attribute string, conflicting_groups long, n_groups long, conflict_rate double"
     )
 

@@ -16,6 +16,8 @@ from typing import Callable
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from pydi_spark.core.arrowio import rows_to_df
+
 # ---- match-function expression builders (l, r) -> boolean Column -------
 
 
@@ -121,7 +123,8 @@ class DataFusionEvaluator:
         out.append(("__overall__", total_n, total_c,
                     (total_c / total_n) if total_n else None))
         spark = fused.sparkSession
-        return spark.createDataFrame(
+        return rows_to_df(
+            spark,
             out, "attribute string, n_compared long, n_correct long, accuracy double"
         )
 
@@ -146,7 +149,8 @@ def coverage_metrics(datasets: list, attributes: list[str] | None = None) -> Dat
                  row[c] / row["__total"] if row["__total"] else None)
             )
     spark = datasets[0].df.sparkSession
-    return spark.createDataFrame(
+    return rows_to_df(
+        spark,
         frames,
         "dataset string, attribute string, non_null long, total long, coverage double",
     )

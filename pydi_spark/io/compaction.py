@@ -23,6 +23,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from pydi_spark.core.arrowio import rows_to_df
+
 
 def list_data_files(spark, path: str) -> DataFrame:
     """[path, size_bytes] for every file under ``path`` (recursive),
@@ -38,7 +40,7 @@ def list_data_files(spark, path: str) -> DataFrame:
     while it.hasNext():
         st = it.next()
         rows.append((st.getPath().toString(), int(st.getLen())))
-    return spark.createDataFrame(rows, "path string, size_bytes long")
+    return rows_to_df(spark, rows, "path string, size_bytes long")
 
 
 def plan_compaction(

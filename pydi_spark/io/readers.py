@@ -11,12 +11,12 @@ Spark-first mapping:
   native distributed readers — predicate pushdown and column pruning reach
   the scan; no driver materialization.
 - Driver-only formats the reference supports (excel/html/feather) are
-  loaded via pandas on the driver then parallelized; they are small-file
-  formats by nature and clearly documented as such.
+  loaded via pandas on the driver and handed to Spark as an Arrow local
+  relation (``core.arrowio.pandas_to_df``); they are small-file formats
+  by nature and clearly documented as such.
 - ``load_pickle`` requires an explicit ``allow_unsafe=True`` opt-in
   (unpickling executes arbitrary code); it loads a pandas pickle on the
-  driver and parallelizes it — a small-file interchange path, like
-  excel/html.
+  driver the same way — a small-file interchange path, like excel/html.
 """
 
 from __future__ import annotations
@@ -26,6 +26,7 @@ from typing import Any
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from pydi_spark.core.arrowio import pandas_to_df
 from pydi_spark.core.dataset import Dataset, file_provenance
 from pydi_spark.core.ids import add_id_column
 
@@ -268,7 +269,7 @@ def _flatten_xml(df: DataFrame, nested_handling: str) -> DataFrame:
 def _pandas_to_spark(spark: SparkSession, pdf: Any) -> DataFrame:
     pdf = pdf.convert_dtypes()
     pdf.columns = [str(c) for c in pdf.columns]
-    return spark.createDataFrame(pdf.astype(object).where(pdf.notna(), None))
+    return pandas_to_df(spark, pdf.astype(object).where(pdf.notna(), None), None)
 
 
 def load_excel(
@@ -380,7 +381,7 @@ def load_feather(
     import pyarrow.feather as feather
 
     pdf = feather.read_feather(path, **kwargs)
-    df = spark.createDataFrame(pdf)
+    df = pandas_to_df(spark, pdf, None)
     return _finalize(df, name, path, "feather", add_index, None, None)
 
 

@@ -33,6 +33,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from pydi_spark.blocking.base import distinct_pairs, first_shared_key, pair_join
+from pydi_spark.core.arrowio import rows_to_df
 from pydi_spark.functions.tokenize import word_tokens
 
 # build-side ceiling for pinning verify joins as broadcasts: the token /
@@ -963,7 +964,8 @@ def semantic_dedup_pairs(
         C = _kmeans_centroids(df, vec_col, k, sample_size, seed, n_rows=n)
         centroids = [[float(x) for x in row] for row in C]
     cent = F.broadcast(
-        spark.createDataFrame(
+        rows_to_df(
+            spark,
             [(i, [float(x) for x in c]) for i, c in enumerate(centroids)],
             "cell int, cvec array<double>",
         )

@@ -24,6 +24,8 @@ import math
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from pydi_spark.core.arrowio import rows_to_df
+
 
 def _as_double(vec: Column) -> Column:
     return F.transform(vec, lambda x: x.cast("double"))
@@ -120,7 +122,7 @@ def pq_codebooks_table(
         for s, cents in enumerate(codebooks)
         for c, vec in enumerate(cents)
     ]
-    return spark.createDataFrame(rows, "subspace int, centroid int, cvec array<double>")
+    return rows_to_df(spark, rows, "subspace int, centroid int, cvec array<double>")
 
 
 def train_pq_codebooks(
@@ -259,7 +261,7 @@ def pq_adc_topk(
                 acc = acc + (x - y) * (x - y)
             rows.append((s, c, int(math.floor(acc * 1000000.0))))
     dt = F.broadcast(
-        spark.createDataFrame(rows, "subspace int, code int, d_micro bigint")
+        rows_to_df(spark, rows, "subspace int, code int, d_micro bigint")
     )
     adc = (
         codes.join(dt, ["subspace", "code"])

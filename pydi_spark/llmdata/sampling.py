@@ -18,6 +18,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from pydi_spark.core.arrowio import rows_to_df
+
 _HASH_SPACE = float(1 << 32)
 
 
@@ -413,7 +415,8 @@ def plan_data_mixture(
     # a recipe source absent from the corpus must still appear (with
     # available=0) — an unsatisfiable quota is exactly what the caller
     # needs to SEE, not silently lose
-    recipe = spark.createDataFrame(
+    recipe = rows_to_df(
+        spark,
         [(s,) for s in sorted(weights_ppm)], "source string"
     )
     avail = avail.join(F.broadcast(recipe), "source", "full_outer").select(

@@ -26,6 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from pydi_spark.core.arrowio import rows_to_df
 from pydi_spark.functions.tokenize import word_tokens
 
 
@@ -353,7 +354,8 @@ def phrase_match(
         raise ValueError(f"phrase has no tokens: {phrase!r}")
     n = len(terms)
     spark = df.sparkSession
-    slots = spark.createDataFrame(
+    slots = rows_to_df(
+        spark,
         [(i, t) for i, t in enumerate(terms)], "k int, term string"
     )
     pos = df.select(

@@ -12,6 +12,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from pydi_spark.core.arrowio import rows_to_df
+
 
 def cosine_expr(a: Column, b: Column) -> Column:
     """Cosine similarity of two array<float/double> columns, fully native."""
@@ -309,7 +311,7 @@ def ivfpq_topk(
         (i, [float(x) for x in c]) for i, c in enumerate(coarse_centroids)
     ]
     cents = F.broadcast(
-        spark.createDataFrame(cent_rows, "cell int, ccvec array<double>")
+        rows_to_df(spark, cent_rows, "cell int, ccvec array<double>")
     )
     v = F.transform(F.col(vec_col), lambda x: x.cast("double"))
     scored = (
@@ -371,7 +373,8 @@ def ivfpq_topk(
                     (cell, s, ci, int(math.floor(sq(qs, cent) * 1000000.0)))
                 )
     dt = F.broadcast(
-        spark.createDataFrame(
+        rows_to_df(
+            spark,
             dt_rows, "cell int, subspace int, code int, d_micro bigint"
         )
     )

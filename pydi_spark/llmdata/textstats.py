@@ -12,6 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from pydi_spark.core.arrowio import rows_to_df
 from pydi_spark.functions.tokenize import word_tokens
 
 # Minimal per-language stopword marker sets (top function words).
@@ -564,7 +565,8 @@ def linear_quality_classifier(
     n_buckets = len(bucket_weights_micro)
     spark = df.sparkSession
     wt = F.broadcast(
-        spark.createDataFrame(
+        rows_to_df(
+            spark,
             [(b, int(w)) for b, w in enumerate(bucket_weights_micro)],
             "b int, w bigint",
         )

@@ -12,6 +12,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from pydi_spark.core.arrowio import rows_to_df
+
 # multilingual textual null markers (reference bank, detectors.py:76-160+)
 NULL_TOKENS = [
     "", "-", "--", "---", "?", "??", "n/a", "na", "n.a.", "n.a", "none",
@@ -99,7 +101,8 @@ def duplicate_stats(df: DataFrame, columns: list[str] | None = None) -> DataFram
     row = df.agg(*aggs).collect()[0]
     out = [(c, int(row["__n"]), int(row[f"__d_{c}"]),
             int(row["__n"]) - int(row[f"__d_{c}"])) for c in cols]
-    return spark.createDataFrame(
+    return rows_to_df(
+        spark,
         out, "column_name string, n_rows long, n_distinct long, n_duplicates long"
     )
 

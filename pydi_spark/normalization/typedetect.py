@@ -15,6 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from pydi_spark.core.arrowio import rows_to_df
 from pydi_spark.normalization.detectors import is_textual_null_expr
 
 # name -> (pattern, priority); higher priority wins ties; evaluated on
@@ -82,7 +83,8 @@ def type_match_rates(
             m = row[f"__m_{c}_{tname}"] or 0
             out.append((c, tname, (m / n) if n else 0.0))
     spark = df.sparkSession
-    return spark.createDataFrame(
+    return rows_to_df(
+        spark,
         out, "column_name string, type_name string, match_rate double"
     )
 

@@ -20,6 +20,8 @@ import weakref
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from pydi_spark.core.arrowio import rows_to_df
+
 # session -> units dim DataFrame (see units_dim)
 _DIM_CACHE: "weakref.WeakKeyDictionary" = weakref.WeakKeyDictionary()
 
@@ -247,7 +249,8 @@ def units_dim(spark) -> DataFrame:
     # The table is a static code constant — this caches no query data.
     df = _DIM_CACHE.get(spark)
     if df is None:
-        df = spark.createDataFrame(
+        df = rows_to_df(
+            spark,
             UNITS_TABLE,
             "alias string, category string, factor double, base_unit string",
         )

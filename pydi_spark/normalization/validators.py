@@ -14,6 +14,8 @@ from dataclasses import dataclass, field
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from pydi_spark.core.arrowio import rows_to_df
+
 EMAIL_RE = r"^[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}$"
 
 
@@ -81,7 +83,8 @@ class DataQualityChecker:
         for name, _, _ in self.checks:
             n, v = int(row[f"__n_{name}"]), int(row[f"__v_{name}"])
             out.append((name, n, v, (v / n) if n else 0.0))
-        return df.sparkSession.createDataFrame(
+        return rows_to_df(
+            df.sparkSession,
             out, "check string, n_checked long, n_violations long, violation_rate double"
         )
 

@@ -31,6 +31,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from pydi_spark.core.arrowio import rows_to_df
+
 
 def _spread_for_agg(sel: DataFrame) -> DataFrame:
     """Round-robin the (column-pruned) input across the default
@@ -125,7 +127,8 @@ def discover_fds(df: DataFrame, cols: list[str]) -> DataFrame:
                 )
                 n_pair = int(stats[f"__p_{key[0]}_{key[1]}"])
                 rows.append((a, b, n_det, n_pair, int(n_det == n_pair)))
-    return df.sparkSession.createDataFrame(
+    return rows_to_df(
+        df.sparkSession,
         rows, "determinant string, dependent string, n_det bigint, "
               "n_pair bigint, holds int",
     )
@@ -197,7 +200,8 @@ def discover_inds(
         n_lhs = int(r["__n_lhs"]) if r is not None else 0
         n_missing = int(r["__n_missing"]) if r is not None else 0
         out_rows.append((lhs, rhs, n_lhs, n_missing, int(n_missing == 0)))
-    return spark.createDataFrame(
+    return rows_to_df(
+        spark,
         out_rows, "lhs string, rhs string, n_lhs_values bigint, "
                   "n_missing bigint, holds int",
     )
@@ -245,6 +249,7 @@ def discover_keys(
          int(stats[f"__u_{i}"] == total))
         for i, combo in enumerate(combos)
     ]
-    return df.sparkSession.createDataFrame(
+    return rows_to_df(
+        df.sparkSession,
         rows, "columns string, n_distinct bigint, n_rows bigint, is_key int"
     )

@@ -16,6 +16,7 @@ from typing import Any
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from pydi_spark.core.arrowio import rows_to_df
 from pydi_spark.core.dataset import Dataset, as_dataframe
 
 
@@ -314,7 +315,8 @@ def benford_profile(df: DataFrame, columns: list[str]) -> DataFrame:
     counts = stacked.groupBy("column", "digit").agg(
         F.count(F.lit(1)).alias("n")
     )
-    grid = spark.createDataFrame(
+    grid = rows_to_df(
+        spark,
         [(c, d) for c in columns for d in range(1, 10)],
         "column string, digit int",
     )
@@ -951,7 +953,8 @@ def equi_width_histogram(
     if lo is None or hi is None:
         # all-null column: the data-derived bound stayed None whichever
         # side the caller supplied — every row lands in the null bucket
-        return df.sparkSession.createDataFrame(
+        return rows_to_df(
+            df.sparkSession,
             [(-1, df.where(F.col(column).isNull()).count())],
             "bucket int, n long",
         )

@@ -14,6 +14,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from pydi_spark.core.arrowio import rows_to_df
+
 
 def hll_distinct(df: DataFrame, columns: list[str] | None = None,
                  lg_k: int = 12) -> DataFrame:
@@ -29,7 +31,7 @@ def hll_distinct(df: DataFrame, columns: list[str] | None = None,
     out = [
         (c, row[f"__sk_{c}"]) for c in cols
     ]
-    sk_df = spark.createDataFrame(out, "column_name string, sketch binary")
+    sk_df = rows_to_df(spark, out, "column_name string, sketch binary")
     return sk_df.select(
         "column_name",
         F.hll_sketch_estimate("sketch").alias("approx_distinct"),

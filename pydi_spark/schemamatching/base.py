@@ -11,6 +11,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
+from pydi_spark.core.arrowio import rows_to_df
 from pydi_spark.core.dataset import Dataset
 
 MAPPING_SCHEMA = (
@@ -31,4 +32,4 @@ def dataset_name(data: Dataset | DataFrame, fallback: str) -> str:
 
 def build_mapping(spark, rows: list[tuple], threshold: float) -> DataFrame:
     kept = [r for r in rows if r[4] >= threshold]
-    return spark.createDataFrame(kept, MAPPING_SCHEMA)
+    return rows_to_df(spark, kept, MAPPING_SCHEMA)

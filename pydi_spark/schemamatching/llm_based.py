@@ -15,6 +15,7 @@ from typing import Callable
 
 from pyspark.sql import DataFrame
 
+from pydi_spark.core.arrowio import rows_to_df
 from pydi_spark.core.dataset import Dataset, as_dataframe
 from pydi_spark.schemamatching.base import build_mapping, dataset_name, schema_columns
 
@@ -148,7 +149,8 @@ class LLMBasedSchemaMatcher:
              StructField("target_dataset", StringType())]
             + CALL_RECORD_TYPE.fields
         )
-        log = sdf.sparkSession.createDataFrame(
+        log = rows_to_df(
+            sdf.sparkSession,
             [tuple([
                 "llm_schema_matcher", s_name, t_name,
             ] + [r[f.name] for f in CALL_RECORD_TYPE.fields])

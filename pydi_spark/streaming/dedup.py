@@ -23,6 +23,8 @@ from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from pydi_spark.core.arrowio import rows_to_df
+
 
 def streaming_dedup(
     df: DataFrame,
@@ -328,7 +330,8 @@ def streaming_incremental_dedup(
         except AnalysisException:
             # signature lanes are bigint (the affine MINHASH_AB family)
             sig_cols = ", ".join(f"s{i} bigint" for i in range(num_hashes))
-            return spark.createDataFrame(
+            return rows_to_df(
+                spark,
                 [], f"id string, {sig_cols}, toks array<bigint>"
             )
 

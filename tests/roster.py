@@ -56,4 +56,50 @@ ROTATION_QUEUE: set[str] = {
     # all-null group instead of an ANSI index error; fusion/resolvers.py)
     "fusion_selection",
     "fusion_debug",
+    # driver-built frames now come from core/arrowio.py::rows_to_df
+    # (an Arrow LocalRelation instead of createDataFrame(list)), the
+    # readers go through pandas_to_df, connected components' auto
+    # strategy counts the edges exactly before building its forest,
+    # and evaluate_blocking's small-universe path no longer matches
+    # null ids. The other 25 re-check obligations of that change sit
+    # in the driver window.
+    "blocking_sorted_neighbourhood",
+    "cluster_cc_distributed",
+    "cluster_centre",
+    "cluster_greedy_one_to_one",
+    "cluster_hierarchical_avg",
+    "cluster_hierarchical_max",
+    "dedup_semantic",
+    "embed_ivfpq_topk",
+    "embed_pq_encode",
+    "embed_pq_topk",
+    "eval_threshold_sweep",
+    "events_new_users",
+    "fusion_conflict_detect",
+    "fusion_coverage",
+    "fusion_numeric",
+    "fusion_rule_suggest",
+    "io_excel_roundtrip",
+    "io_feather_roundtrip",
+    "io_html_roundtrip",
+    "io_id_injection",
+    "io_pickle_roundtrip",
+    "normalize_rank",
+    "profile_benford",
+    "profile_coverage",
+    "profile_gini",
+    "profile_keys",
+    "profile_lorenz",
+    "sample_mixture_plan",
+    "sample_pps",
+    "schema_duplicate_based",
+    "schema_eval",
+    "schema_instance_based",
+    "schema_label_based",
+    "schema_llm_fake",
+    "text_quality_classifier",
+    "text_search_phrase",
+    "type_detection",
+    "units_convert",
+    "validators_quality",
 }

@@ -34,7 +34,7 @@ def _union_find(nodes, edges):
 import pytest
 
 
-@pytest.mark.parametrize("strategy", ["hybrid", "distributed"])
+@pytest.mark.parametrize("strategy", ["hybrid", "distributed", "auto"])
 def test_cc_matches_union_find_on_random_graph(spark, strategy):
     random.seed(7)
     nodes = [f"n{i:04d}" for i in range(300)]
@@ -50,6 +50,46 @@ def test_cc_matches_union_find_on_random_graph(spark, strategy):
     touched = sorted({a for a, _ in edges} | {b for _, b in edges})
     want = _union_find(touched, edges)
     assert got == {n: want[n] for n in touched}
+
+
+@pytest.mark.parametrize("driver_node_limit", [5_000_000, 0])
+def test_cc_auto_join_derived_edges(spark, monkeypatch, driver_node_limit):
+    """'auto' on a join-derived edge frame (its size estimate fails the
+    driver gate): the exact edge count sends a driver-sized set straight
+    to the driver union-find without the mapInPandas forest, and
+    driver_node_limit=0 still takes the forest. Both give the
+    union-find components."""
+    import importlib
+
+    from pyspark.sql import functions as F
+
+    from pydi_spark.core.plansize import fits_estimate
+
+    cc = importlib.import_module("pydi_spark.clustering.connected_components")
+    random.seed(11)
+    nodes = [f"n{i:03d}" for i in range(120)]
+    pairs = [tuple(random.sample(nodes, 2)) for _ in range(80)]
+    raw = spark.createDataFrame(
+        [(i, a, b) for i, (a, b) in enumerate(pairs)], "k int, a string, b string"
+    )
+    keep = spark.createDataFrame([(i,) for i in range(0, 80, 2)], "k int")
+    edges = raw.join(keep, "k").select(F.col("a").alias("id1"), F.col("b").alias("id2"))
+    assert not fits_estimate(edges, cc.DRIVER_SAFE_EDGE_BYTES)
+    forests = []
+    build = cc._build_forest
+
+    def counted_build(e):
+        forests.append(e)
+        return build(e)
+
+    monkeypatch.setattr(cc, "_build_forest", counted_build)
+    got = {r["record_id"]: r["cluster_id"] for r in cc.connected_components(
+        edges, driver_node_limit=driver_node_limit).collect()}
+    kept = pairs[0::2]
+    touched = sorted({a for a, _ in kept} | {b for _, b in kept})
+    want = _union_find(touched, kept)
+    assert got == {n: want[n] for n in touched}
+    assert len(forests) == (0 if driver_node_limit else 1)
 
 
 def test_cc_clusterer_closure_edges(spark):

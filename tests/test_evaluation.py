@@ -34,6 +34,22 @@ def test_evaluate_blocking(spark, labeled):
     assert out["reduction_ratio"] == pytest.approx(1 - 3 / 16)
 
 
+@pytest.mark.parametrize("n", [10, 10_000])
+def test_evaluate_blocking_null_ids_never_match(spark, n):
+    """A pair with a NULL id is in both candidates and gold but never
+    matches (the oracle's JOIN semantics) on either side of the
+    10M-pair universe gate: 10 x 10 takes the union+groupBy path,
+    10,000 x 10,000 the join path."""
+    cands = spark.createDataFrame(
+        [("a", "x"), (None, "y"), ("c", "z")], "id1 string, id2 string"
+    )
+    gold = spark.createDataFrame([("a", "x"), (None, "y")], "id1 string, id2 string")
+    out = evaluate_blocking(cands, gold, n, n).collect()[0]
+    assert out["true_positives_found"] == 1
+    assert out["total_candidates"] == 3
+    assert out["total_true_pairs"] == 2
+
+
 def test_evaluate_matching(spark, labeled):
     corr, gold = labeled
     out = evaluate_matching(corr, gold, threshold=0.5).collect()[0]

@@ -6,8 +6,10 @@ run hundreds of cases cheaply; the Spark tier is pinned to this tier by
 tests/test_similarity.py::test_native_matches_python.
 """
 
+import datetime
 import math
 
+import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
@@ -858,3 +860,68 @@ def test_pair_kernel_matches_brute_force(spark):
             )
             assert collect(carried) == want
             assert collect(distinct_pairs(emitted.select("id1", "id2", "key"))) == want
+
+
+_DRIVER_FRAME_CASES = [
+    (
+        "pair_completeness double, pair_quality double, total_candidates long, "
+        "notes string, holds int",
+        [(0.5, None, 3, "x", 1), (None, 0.25, None, None, None)],
+    ),
+    ("cell int, cvec array<double>", [(0, [0.5, -1.0]), (1, []), (2, None)]),
+    ("attribute string, datasets_present array<string>, is_shared boolean",
+     [("a", ["s1", "s2"], True), ("b", [], False), (None, None, None)]),
+    ("column_name string, sketch binary", [("c", b"\x00\x01\xff"), ("d", None)]),
+    ("k string, m map<string,bigint>", [("a", {"x": 1, "y": None}), ("b", None)]),
+    ("d date, ts timestamp",
+     [(datetime.date(2024, 2, 29), datetime.datetime(2024, 2, 29, 23, 59, 59, 1)),
+      (None, None)]),
+    ("record_id string, cluster_id string", []),
+]
+
+
+@pytest.mark.parametrize("ddl, rows", _DRIVER_FRAME_CASES)
+@pytest.mark.parametrize("tz", ["UTC", "America/New_York"])
+def test_rows_to_df_matches_create_dataframe(spark, ddl, rows, tz):
+    """rows_to_df gives createDataFrame(rows, ddl)'s rows and schema, as
+    a LocalRelation (no Python-worker stage). The non-UTC process time
+    zone pins naive TIMESTAMP values to local time, as the list form
+    reads them."""
+    import os
+    import time
+
+    from pydi_spark.core.arrowio import rows_to_df
+
+    old = os.environ.get("TZ")
+    os.environ["TZ"] = tz
+    time.tzset()
+    try:
+        got = rows_to_df(spark, rows, ddl)
+        want = spark.createDataFrame(rows, ddl)
+        assert got.schema == want.schema
+        assert got.collect() == want.collect()
+    finally:
+        if old is None:
+            del os.environ["TZ"]
+        else:
+            os.environ["TZ"] = old
+        time.tzset()
+    plan = got._jdf.queryExecution().optimizedPlan()
+    assert plan.getClass().getSimpleName() == "LocalRelation"
+
+
+def test_driver_frames_go_through_arrowio():
+    """Driver-built frames are made only by core/arrowio.py (rows_to_df
+    / pandas_to_df): a createDataFrame anywhere else in the package
+    would bring back a Python-worker stage for driver-sized data."""
+    import pathlib
+
+    root = pathlib.Path(__file__).resolve().parents[1] / "pydi_spark"
+    hits = [
+        f"{f.relative_to(root)}:{i}"
+        for f in root.rglob("*.py")
+        if f != root / "core" / "arrowio.py"
+        for i, line in enumerate(f.read_text().splitlines(), 1)
+        if "createDataFrame(" in line
+    ]
+    assert not hits, "createDataFrame outside core/arrowio.py:\n" + "\n".join(hits)
