@@ -2624,7 +2624,7 @@ def q_cluster_hierarchical_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_cluster_cc_distributed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pins strategy='distributed' so the large-star/small-star rounds
-    (not the hybrid union-find path) are what the oracle checks."""
+    (not the driver union-find path) are what the oracle checks."""
     from pydi_spark.clustering import connected_components
 
     _, edges = _orders_datasets(spark, sf_dir)

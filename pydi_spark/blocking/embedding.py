@@ -42,6 +42,7 @@ from pyspark.sql.types import (
 )
 
 from pydi_spark.blocking.base import pair_join, resolve_side
+from pydi_spark.core import plansize
 from pydi_spark.core.arrowio import rows_to_df
 from pydi_spark.core.dataset import Dataset
 
@@ -53,20 +54,6 @@ PAIR_SCHEMA = StructType(
         StructField("score", DoubleType()),
     ]
 )
-
-# ceiling for pinning the vector re-attach joins as broadcasts — keyed on
-# the INPUT relation's Catalyst size estimate (core.plansize policy:
-# reliable for parquet scans, "unknown"=huge for derived frames, which
-# correctly disables the pin). Same value as
-# llmdata/dedup.py:BROADCAST_VERIFY_MAX_BYTES.
-BROADCAST_VECTORS_MAX_BYTES = 1 << 30  # 1 GiB
-
-
-def _pin_broadcast(df: DataFrame) -> bool:
-    from pydi_spark.core.plansize import fits_estimate
-
-    return fits_estimate(df, BROADCAST_VECTORS_MAX_BYTES)
-
 
 def sentence_transformer_embedder(
     model_name: str = "all-MiniLM-L6-v2", **kwargs
@@ -379,8 +366,8 @@ class EmbeddingBlocker:
             # pins at corpus scale, where the re-attach joins must shuffle
             pairs = self._lsh(
                 l, r, dim,
-                pin_l=_pin_broadcast(dl),
-                pin_r=_pin_broadcast(dr),
+                pin_l=plansize.fits_estimate(dl, plansize.BROADCAST_MAX_BYTES),
+                pin_r=plansize.fits_estimate(dr, plansize.BROADCAST_MAX_BYTES),
             )
         else:
             raise ValueError(f"unknown method: {method}")

@@ -13,7 +13,7 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
 
-from pydi_spark.clustering.base import apply_threshold
+from pydi_spark.clustering.base import apply_threshold, collect_solver_rows
 from pydi_spark.core.arrowio import rows_to_df
 
 
@@ -24,10 +24,11 @@ class CentreClusterer:
 
     def assign(self, correspondences: DataFrame) -> DataFrame:
         corr = apply_threshold(correspondences, self.threshold)
-        rows = (
-            corr.select("id1", "id2", "score")
-            .orderBy(["score", "id1", "id2"], ascending=[False, True, True])
-            .collect()
+        rows = collect_solver_rows(
+            corr.select("id1", "id2", "score").orderBy(
+                ["score", "id1", "id2"], ascending=[False, True, True]
+            ),
+            "CentreClusterer",
         )
         assignment: dict[str, str] = {}
         is_center: set[str] = set()

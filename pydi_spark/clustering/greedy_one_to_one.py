@@ -13,9 +13,10 @@ Under the strict total order (score desc, id1, id2) the locally-dominant
 edges accepted each round are exactly the edges the sequential sweep
 accepts (the classic parallel-greedy equivalence; the local oracle for
 cluster_greedy_one_to_one replays the same iteration in SQL), so run to
-convergence the two strategies agree. ``strategy='auto'`` (default)
-mirrors connected_components: the exact sweep while the edge set is
-driver-safe, the distributed epochs above ``driver_edge_limit``.
+convergence the two agree. ``cluster`` runs the exact sweep when the
+clustering layer's driver gate (``clustering/base.py``) accepts the
+correspondence set and its capped collect succeeds; otherwise — above
+~5M correspondences — the distributed epochs.
 """
 
 from __future__ import annotations
@@ -25,59 +26,38 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from pydi_spark.clustering.base import apply_threshold
+from pydi_spark.clustering.base import apply_threshold, collect_capped, driver_sized
 
-# Catalyst-estimate threshold under which the correspondence set is
-# safely driver-collectable for the exact sweep without any gating job
-# (mirrors connected_components.DRIVER_SAFE_EDGE_BYTES; corr rows carry
-# a score double on top of the two ids).
-DRIVER_SAFE_CORR_BYTES = 64 << 20
+MAX_ROUNDS = 50  # distributed convergence cap
 
 
 @dataclass
 class GreedyOneToOneMatcher:
     threshold: float | None = None
-    strategy: str = "auto"  # auto | exact | distributed
-    driver_edge_limit: int = 5_000_000  # auto: edges above this -> distributed
-    max_rounds: int = 50  # distributed convergence cap
-    distributed_rounds: int = 0  # legacy: >0 forces distributed, capped here
 
     def cluster(self, correspondences: DataFrame) -> DataFrame:
         corr = apply_threshold(correspondences, self.threshold)
-        if self.distributed_rounds > 0:
-            return self._distributed(corr, self.distributed_rounds)
-        if self.strategy == "exact":
-            return self._exact(corr)
-        if self.strategy == "distributed":
-            return self._distributed(corr, self.max_rounds)
-        if self.strategy != "auto":
-            raise ValueError(f"unknown strategy: {self.strategy}")
-        # Same gate as connected_components: the free Catalyst size
-        # estimate first — the old corr.count() was a full extra job
-        # recomputing the whole uncached upstream lineage. Estimates
-        # are file-size based for parquet lineages (reliable); derived
-        # frames (createDataFrame/mapInPandas) report "unknown" = huge,
-        # for which we fall back to counting — but on a cached frame so
-        # the sweep's collect doesn't recompute the lineage again.
-        from pydi_spark.core.plansize import fits_estimate
+        corr, small = driver_sized(corr)
+        if small:
+            # Arrow-batched transfer (core.arrowio): the sweep is
+            # output-sized by design, but py4j row pickling still
+            # dominated at 1e5+ correspondences. toPandas preserves the
+            # global sort.
+            pdf = collect_capped(
+                corr.select("id1", "id2", "score").orderBy(
+                    F.desc("score"), "id1", "id2"
+                )
+            )
+            if pdf is not None:
+                return self._sweep(corr, pdf)
+        return self._distributed(corr)
 
-        if fits_estimate(corr, DRIVER_SAFE_CORR_BYTES):
-            return self._exact(corr)
-        corr = corr.localCheckpoint(eager=True)
-        if corr.count() <= self.driver_edge_limit:
-            return self._exact(corr)
-        return self._distributed(corr, self.max_rounds)
+    @staticmethod
+    def _sweep(corr: DataFrame, pdf) -> DataFrame:
+        import pandas as pd
 
-    def _exact(self, corr: DataFrame) -> DataFrame:
-        # Arrow-batched transfers both ways (core.arrowio): the sweep is
-        # output-sized by design, but py4j row pickling still dominated
-        # at 1e5+ correspondences. toPandas preserves the global sort.
-        from pydi_spark.core.arrowio import collect_pandas, pandas_to_df
+        from pydi_spark.core.arrowio import pandas_to_df
 
-        spark = corr.sparkSession
-        pdf = collect_pandas(
-            corr.select("id1", "id2", "score").orderBy(F.desc("score"), "id1", "id2")
-        )
         used1: set = set()
         used2: set = set()
         kept = []
@@ -87,19 +67,17 @@ class GreedyOneToOneMatcher:
             used1.add(a)
             used2.add(b)
             kept.append((a, b))
-        import pandas as pd
-
         out = pandas_to_df(
-            spark,
+            corr.sparkSession,
             pd.DataFrame(kept, columns=["id1", "id2"]),
             "id1 string, id2 string",
         )
         return corr.join(out, ["id1", "id2"], "left_semi")
 
-    def _distributed(self, corr: DataFrame, rounds: int) -> DataFrame:
+    def _distributed(self, corr: DataFrame) -> DataFrame:
         remaining = corr.select("id1", "id2", "score")
         accepted = None
-        for _ in range(rounds):
+        for _ in range(MAX_ROUNDS):
             if remaining.isEmpty():
                 break
             w1 = Window.partitionBy("id1").orderBy(F.desc("score"), F.col("id2"))

@@ -16,12 +16,8 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
 
+from pydi_spark.clustering.base import collect_solver_rows
 from pydi_spark.core.arrowio import rows_to_df
-
-# r13 defensive cap (VERDICT r12 #8): ceiling on rows entering the
-# driver-side sequential merge loop (O(n^3) Python by reference
-# contract — far beyond this it would never finish anyway).
-DRIVER_SOLVE_ROW_CAP = 1_000_000
 
 
 @dataclass
@@ -33,15 +29,10 @@ class HierarchicalClusterer:
     def assign(self, correspondences: DataFrame) -> DataFrame:
         if self._cc_equivalent(correspondences):
             return self._assign_via_components(correspondences)
-        rows = correspondences.select("id1", "id2", "score").collect()
-        if len(rows) > DRIVER_SOLVE_ROW_CAP:
-            raise ValueError(
-                f"HierarchicalClusterer({self.linkage}): {len(rows)} "
-                "correspondence rows exceed the driver-side sequential "
-                f"limit ({DRIVER_SOLVE_ROW_CAP}) — pre-threshold the "
-                "pairs or use MIN linkage to exhaustion (distributed "
-                "fast path)"
-            )
+        rows = collect_solver_rows(
+            correspondences.select("id1", "id2", "score"),
+            f"HierarchicalClusterer({self.linkage})",
+        )
         nodes = sorted({r["id1"] for r in rows} | {r["id2"] for r in rows})
         sims: dict[frozenset, float] = {}
         for r in rows:

@@ -13,11 +13,12 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
 
-from pydi_spark.clustering.base import apply_threshold
+from pydi_spark.clustering.base import (
+    apply_threshold,
+    collect_solver_rows,
+    union_find,
+)
 from pydi_spark.core.arrowio import rows_to_df
-
-
-DRIVER_SOLVE_ROW_CAP = 1_000_000  # r13 defensive cap (VERDICT r12 #8)
 
 
 @dataclass
@@ -34,17 +35,9 @@ class MaximumBipartiteMatcher:
         corr = apply_threshold(correspondences, self.threshold).localCheckpoint(
             eager=True
         )
-        rows = corr.select("id1", "id2", "score").collect()
-        # r13 defensive cap (VERDICT r12 #8): the assignment solve is
-        # driver-side by reference contract; refuse loudly beyond what
-        # it can finish rather than melting the driver.
-        if len(rows) > DRIVER_SOLVE_ROW_CAP:
-            raise ValueError(
-                f"MaximumBipartiteMatcher: {len(rows)} correspondence "
-                f"rows exceed the driver-side solver limit "
-                f"({DRIVER_SOLVE_ROW_CAP}) — raise "
-                "the threshold to shrink the candidate graph"
-            )
+        rows = collect_solver_rows(
+            corr.select("id1", "id2", "score"), "MaximumBipartiteMatcher"
+        )
         if not rows:
             return corr.limit(0)
         left_ids = sorted({r["id1"] for r in rows})
@@ -66,26 +59,10 @@ class MaximumBipartiteMatcher:
         blossom solver is superlinear in graph size — nx on one 15k-node
         forest of 4-node paths took ~153 s where per-component solves
         take milliseconds (r8 review finding)."""
-        parent: dict = {}
-
-        def find(x):
-            r = x
-            while parent[r] != r:
-                r = parent[r]
-            while parent[x] != r:
-                parent[x], x = r, parent[x]
-            return r
-
-        for r in rows:
-            a, b = ("L", r["id1"]), ("R", r["id2"])
-            parent.setdefault(a, a)
-            parent.setdefault(b, b)
-            ra, rb = find(a), find(b)
-            if ra != rb:
-                parent[rb] = ra
+        roots = union_find((("L", r["id1"]), ("R", r["id2"])) for r in rows)
         comps: dict = {}
         for r in rows:
-            comps.setdefault(find(("L", r["id1"])), []).append(r)
+            comps.setdefault(roots[("L", r["id1"])], []).append(r)
         return comps.values()
 
     @classmethod

@@ -1,8 +1,8 @@
 """Arrow-backed driver transfers for the deliberate driver-side stages.
 
-The engine's few driver-side algorithms (hybrid connected components,
-exact greedy 1:1, the bounded driver solvers — all behind explicit size
-gates) and its one-row report frames move driver-sized tables
+The engine's few driver-side algorithms (driver-sized connected
+components, exact greedy 1:1, the bounded driver solvers — all behind
+the clustering layer's size gate) and its one-row report frames move driver-sized tables
 driver-ward and back. ``createDataFrame(list)`` parallelizes the
 pickled rows into an RDD, so every consumer pays a Python-worker stage:
 about 1.6 s of CPU for a one-row frame on a 4-core host (NOTES.md,

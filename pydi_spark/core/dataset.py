@@ -96,15 +96,6 @@ def as_dataframe(data: "Dataset | DataFrame") -> DataFrame:
     return data.df if isinstance(data, Dataset) else data
 
 
-def require_dataset(data: "Dataset | DataFrame", op: str) -> Dataset:
-    if not isinstance(data, Dataset):
-        raise ValueError(
-            f"{op} requires a pydi_spark.Dataset (for dataset_name/provenance); "
-            "wrap your DataFrame with Dataset.wrap(df, name=...)."
-        )
-    return data
-
-
 def file_provenance(path: str, reader: str) -> dict[str, Any]:
     """File-level provenance like the reference's ``_compute_file_metadata``
     (PyDI/io/loaders.py:36-82), minus content hashing: at 100 TB we record

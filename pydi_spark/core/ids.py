@@ -14,7 +14,7 @@ a synthetic string ID column ``{name}_id`` with zero-padded values
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -56,8 +56,3 @@ def add_id_column(
     idx = F.monotonically_increasing_id()
     value = F.format_string(f"{prefix}-%0{pad or 4}d", idx)
     return df.withColumn(id_column, value), id_column
-
-
-def id_format_expr(prefix: str, index_col: Column, pad: int = 4) -> Column:
-    """Column expression for the reference's zero-padded id format."""
-    return F.format_string(f"{prefix}-%0{pad}d", index_col)

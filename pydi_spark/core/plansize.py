@@ -5,14 +5,22 @@ relation's optimized-plan size estimate: file-size based for parquet
 scans (reliable), "unknown"=huge for derived frames like
 createDataFrame/LogicalRDD/mapInPandas output — which correctly fails
 toward the distributed/shuffling path, never toward an unsafe broadcast
-or collect. Centralized here so the dedup verify joins, the embedding
-blocker's vector re-attach, and the connected-components auto gate all
-apply the same policy.
+or collect. Centralized here so the dedup verify joins and the
+embedding blocker's vector re-attach share one broadcast ceiling, and
+the clustering layer's driver gate (``clustering/base.py``) applies the
+same policy.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
+
+# Ceiling for pinning a join side as a broadcast (the dedup verify joins'
+# token/shingle side tables, the embedding blocker's vector re-attach),
+# keyed on the INPUT relation's estimate: the pinned side is at most
+# input sized, while a derived table's own estimate is wildly off after
+# explode/groupBy.
+BROADCAST_MAX_BYTES = 1 << 30  # 1 GiB
 
 
 def estimated_plan_bytes(df: DataFrame) -> int:

@@ -3,17 +3,13 @@
 Reference: PyDI/fusion/provenance.py — extract_source_trust_scores
 (:371-425, consumed at engine.py:480-486) and ProvenanceTracker lineage
 (:62-322). Trust lives on the Dataset wrapper here; the tracker records
-operation-level lineage entries and can attach per-group source lineage
-from the fused output's ``_fusion_sources`` column.
+operation-level lineage entries.
 """
 
 from __future__ import annotations
 
 import datetime as _dt
 from typing import Any
-
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from pydi_spark.core.dataset import Dataset
 
@@ -67,11 +63,3 @@ class ProvenanceTracker:
         from pydi_spark.io.writers import write_artifact
 
         write_artifact(self.entries, path)
-
-
-def group_lineage(fused: DataFrame) -> DataFrame:
-    """[group_id, dataset] long-format source lineage from fused output."""
-    return fused.select(
-        F.col("_fusion_group_id").alias("group_id"),
-        F.explode("_fusion_sources").alias("dataset"),
-    )

@@ -33,29 +33,20 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from pydi_spark.blocking.base import distinct_pairs, first_shared_key, pair_join
+from pydi_spark.core import plansize
 from pydi_spark.core.arrowio import rows_to_df
 from pydi_spark.functions.tokenize import word_tokens
 
-# build-side ceiling for pinning verify joins as broadcasts: the token /
-# shingle side table is at most input-text sized, so the decision keys on
-# the INPUT relation's Catalyst size estimate (file-size based for
-# parquet scans — reliable), not on the derived table's estimate (wildly
-# off after explode/groupBy)
-BROADCAST_VERIFY_MAX_BYTES = 1 << 30  # 1 GiB
 
-
-def _resolve_broadcast_verify(
-    df: DataFrame, broadcast_verify, max_bytes: int = BROADCAST_VERIFY_MAX_BYTES
-) -> bool:
-    """'auto' -> broadcast iff the input relation's size estimate fits the
-    ceiling. At bench scale the pin avoids a 5-10x slower sort-merge join
-    over the quadratic candidate set; at corpus scale (100 TB) the token
-    table cannot be broadcast and the join must shuffle."""
+def _resolve_broadcast_verify(df: DataFrame, broadcast_verify) -> bool:
+    """'auto' -> broadcast iff the input relation's size estimate fits
+    ``core.plansize.BROADCAST_MAX_BYTES``. At bench scale the pin avoids
+    a 5-10x slower sort-merge join over the quadratic candidate set; at
+    corpus scale (100 TB) the token table cannot be broadcast and the
+    join must shuffle."""
     if broadcast_verify != "auto":
         return bool(broadcast_verify)
-    from pydi_spark.core.plansize import fits_estimate
-
-    return fits_estimate(df, max_bytes)
+    return plansize.fits_estimate(df, plansize.BROADCAST_MAX_BYTES)
 
 
 # ------------------------------------------------------------------- exact
@@ -341,8 +332,8 @@ def minhash_near_duplicates(
 
     ``broadcast_verify='auto'`` (default) pins the verify build side as a
     broadcast only while the input's size estimate fits
-    ``BROADCAST_VERIFY_MAX_BYTES`` — the right call at bench scale, never
-    at corpus scale."""
+    ``core.plansize.BROADCAST_MAX_BYTES`` — the right call at bench
+    scale, never at corpus scale."""
     broadcast_verify = _resolve_broadcast_verify(df, broadcast_verify)
     # band join on (id, band_key) ONLY — candidate pairs stay narrow
     # through the shuffle; token sets re-attach afterwards from the
@@ -1013,7 +1004,7 @@ def canonical_corpus(
     lists); north-star training-data op.
 
     Scale design: the pair graph is ids-only (narrow), clustered with the
-    auto hybrid/large-star CC; the corpus is touched exactly once, by a
+    auto driver/large-star CC; the corpus is touched exactly once, by a
     single left join on the id — duplicate clusters are a small fraction
     of the corpus, so the assignment side is typically broadcast-sized,
     and the corpus itself is never shuffled.

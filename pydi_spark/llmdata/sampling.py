@@ -303,7 +303,7 @@ def leakage_safe_split(
     [id, cluster_id, split] with split in {train, valid, test}.
 
     Scale shape: the pair graph is ids-only; CC auto-routes
-    hybrid/distributed; the corpus is touched by one left join on id.
+    driver/distributed; the corpus is touched by one left join on id.
     The fraction decision is the established md5 construction —
     deterministic, partition-independent, SQL-replayable."""
     from pydi_spark.clustering.connected_components import connected_components

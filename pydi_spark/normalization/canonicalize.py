@@ -8,7 +8,7 @@ rewrite every member to the cluster's canonical form. Composes three
 existing machines — the ED-Join q-gram similarity join
 (functions/joins.py), connected components (clustering/), and the
 min-under-total-order canonical pick — so the scale contracts are
-theirs: the join prunes with rarest-gram prefixes, CC is the hybrid /
+theirs: the join prunes with rarest-gram prefixes, CC is the driver /
 star-contraction engine, and everything downstream is joins on the
 DISTINCT-VALUE table (cardinality-bounded, not row-bounded).
 

@@ -105,12 +105,3 @@ def duplicate_stats(df: DataFrame, columns: list[str] | None = None) -> DataFram
         spark,
         out, "column_name string, n_rows long, n_distinct long, n_duplicates long"
     )
-
-
-def flag_exact_duplicate_rows(df: DataFrame, columns: list[str] | None = None) -> DataFrame:
-    """Add is_duplicate_row over the given column subset."""
-    from pyspark.sql import Window
-
-    cols = columns or df.columns
-    w = Window.partitionBy(*[F.col(c) for c in cols])
-    return df.withColumn("is_duplicate_row", F.count("*").over(w) > 1)

@@ -2,8 +2,8 @@
 
 Reference: PyDI/normalization/types.py — CoordinateParser decimal/DMS
 (:30-213), BooleanParser multi-language (:215-294), LinkNormalizer
-(:296-381), NumericParser locale-aware (:383-743), DateNormalizer
-(:745-837), TypeConverter facade (:838-897); plus
+(:296-381), NumericParser locale-aware (:383-743), TypeConverter
+facade (:838-897); plus
 utils/normalization.py scalar helpers (phone :106, currency :145,
 percentage :182, country :246, accents :353).
 """
@@ -228,10 +228,3 @@ def standardize_country_name(col: Column | str) -> Column:
     for alias, canonical in COUNTRY_ALIASES.items():
         out = F.when(key == alias, F.lit(canonical)).otherwise(out)
     return out
-
-
-def parse_date_multi(col: Column | str, formats: list[str] | None = None) -> Column:
-    """First-parseable date format chain (reference: types.py:745-837)."""
-    from pydi_spark.normalization.transforms import to_datetime
-
-    return to_datetime(F.col(col) if isinstance(col, str) else col, formats)

@@ -1,9 +1,8 @@
 """Text normalizers as expressions.
 
 Reference: PyDI/normalization/text.py — TextNormalizer (:44-161),
-HeaderNormalizer (:164-323), TokenizationNormalizer (stemming/stopwords/
-camelCase, :326-499), WebTableNormalizer (:502-673),
-BracketContentHandler (:676-798).
+HeaderNormalizer (:164-323), TokenizationNormalizer (stemming/stopwords,
+:326-499), BracketContentHandler (:676-798).
 """
 
 from __future__ import annotations
@@ -74,11 +73,6 @@ def remove_stopwords(tokens: Column, stopwords: list[str] | None = None) -> Colu
     return F.filter(tokens, lambda t: ~F.array_contains(sw, t))
 
 
-def split_camel_case(col: Column | str) -> Column:
-    c = (F.col(col) if isinstance(col, str) else col).cast("string")
-    return F.regexp_replace(c, r"([a-z0-9])([A-Z])", r"$1 $2")
-
-
 def stem_light(tokens: Column) -> Column:
     """Light suffix-stripping stemmer (s/es/ed/ing) as expressions —
     the reference uses NLTK-style stemming; this is the dependency-free
@@ -108,13 +102,3 @@ def handle_brackets(col: Column | str, mode: str = "remove") -> Column:
     if mode == "keep":
         return c
     raise ValueError(f"unknown mode: {mode}")
-
-
-def normalize_webtable_value(col: Column | str) -> Column:
-    """Web-table cleanup: entities, footnote markers, dashes-as-null
-    (reference: text.py:502-673)."""
-    c = normalize_text(col, lowercase=False, strip_html=True)
-    c = F.regexp_replace(c, r"\[\d+\]", "")  # footnote refs
-    from pydi_spark.normalization.detectors import null_standardize_expr
-
-    return null_standardize_expr(F.trim(c))

@@ -2,8 +2,7 @@
 
 Reference: PyDI/normalization/validators.py — EmailValidator (:103),
 RangeValidator (:161), PatternValidator (:230), CompletenessValidator
-(:270), UniqueValidator (:334), SchemaValidator (:447), orchestrating
-DataQualityChecker (:381-444). Each validator contributes one boolean
+(:270), orchestrating DataQualityChecker (:381-444). Each validator contributes one boolean
 expression; the checker runs ONE aggregate pass for all of them.
 """
 
@@ -87,21 +86,3 @@ class DataQualityChecker:
             df.sparkSession,
             out, "check string, n_checked long, n_violations long, violation_rate double"
         )
-
-
-def unique_violations(df: DataFrame, columns: list[str]) -> DataFrame:
-    """Rows whose key occurs more than once (reference UniqueValidator)."""
-    counts = df.groupBy(*columns).agg(F.count("*").alias("n")).where("n > 1")
-    return df.join(F.broadcast(counts.select(*columns)), columns, "left_semi")
-
-
-def schema_valid(df: DataFrame, expected: dict[str, str]) -> list[str]:
-    """Column/type expectations -> list of violations (SchemaValidator)."""
-    actual = dict(df.dtypes)
-    problems = []
-    for col, typ in expected.items():
-        if col not in actual:
-            problems.append(f"missing column: {col}")
-        elif typ not in (None, "", actual[col]):
-            problems.append(f"type mismatch {col}: expected {typ}, got {actual[col]}")
-    return problems

@@ -56,6 +56,17 @@ ROTATION_QUEUE: set[str] = {
     # all-null group instead of an ANSI index error; fusion/resolvers.py)
     "fusion_selection",
     "fusion_debug",
+    # The clustering layer's driver-or-distributed policy moved into
+    # clustering/base.py (one gate, collect cap, solver cap and
+    # union-find) and the two broadcast ceilings became one. That
+    # change reaches 36 queries: 23 sit in the driver window and the
+    # other 13 are already in this queue (ann_lsh, dedup_embedding,
+    # cluster_cc_distributed, cluster_centre,
+    # cluster_greedy_one_to_one, cluster_hierarchical_avg,
+    # cluster_hierarchical_max, fusion_conflict_detect,
+    # fusion_conflicts, fusion_debug, fusion_numeric,
+    # fusion_rule_suggest, fusion_selection).
+
     # driver-built frames now come from core/arrowio.py::rows_to_df
     # (an Arrow LocalRelation instead of createDataFrame(list)), the
     # readers go through pandas_to_df, connected components' auto

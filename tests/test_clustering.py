@@ -34,7 +34,7 @@ def _union_find(nodes, edges):
 import pytest
 
 
-@pytest.mark.parametrize("strategy", ["hybrid", "distributed", "auto"])
+@pytest.mark.parametrize("strategy", ["distributed", "auto"])
 def test_cc_matches_union_find_on_random_graph(spark, strategy):
     random.seed(7)
     nodes = [f"n{i:04d}" for i in range(300)]
@@ -52,20 +52,22 @@ def test_cc_matches_union_find_on_random_graph(spark, strategy):
     assert got == {n: want[n] for n in touched}
 
 
-@pytest.mark.parametrize("driver_node_limit", [5_000_000, 0])
-def test_cc_auto_join_derived_edges(spark, monkeypatch, driver_node_limit):
+@pytest.mark.parametrize("edge_limit", [5_000_000, 0])
+def test_cc_auto_join_derived_edges(spark, monkeypatch, edge_limit):
     """'auto' on a join-derived edge frame (its size estimate fails the
     driver gate): the exact edge count sends a driver-sized set straight
-    to the driver union-find without the mapInPandas forest, and
-    driver_node_limit=0 still takes the forest. Both give the
-    union-find components."""
+    to the driver union-find without the mapInPandas forest, and an
+    edge limit of 0 still takes the forest. Both give the union-find
+    components."""
     import importlib
 
     from pyspark.sql import functions as F
 
+    from pydi_spark.clustering import base
     from pydi_spark.core.plansize import fits_estimate
 
     cc = importlib.import_module("pydi_spark.clustering.connected_components")
+    monkeypatch.setattr(base, "DRIVER_EDGE_LIMIT", edge_limit)
     random.seed(11)
     nodes = [f"n{i:03d}" for i in range(120)]
     pairs = [tuple(random.sample(nodes, 2)) for _ in range(80)]
@@ -74,7 +76,7 @@ def test_cc_auto_join_derived_edges(spark, monkeypatch, driver_node_limit):
     )
     keep = spark.createDataFrame([(i,) for i in range(0, 80, 2)], "k int")
     edges = raw.join(keep, "k").select(F.col("a").alias("id1"), F.col("b").alias("id2"))
-    assert not fits_estimate(edges, cc.DRIVER_SAFE_EDGE_BYTES)
+    assert not fits_estimate(edges, base.DRIVER_SAFE_BYTES)
     forests = []
     build = cc._build_forest
 
@@ -83,13 +85,13 @@ def test_cc_auto_join_derived_edges(spark, monkeypatch, driver_node_limit):
         return build(e)
 
     monkeypatch.setattr(cc, "_build_forest", counted_build)
-    got = {r["record_id"]: r["cluster_id"] for r in cc.connected_components(
-        edges, driver_node_limit=driver_node_limit).collect()}
+    got = {r["record_id"]: r["cluster_id"]
+           for r in cc.connected_components(edges).collect()}
     kept = pairs[0::2]
     touched = sorted({a for a, _ in kept} | {b for _, b in kept})
     want = _union_find(touched, kept)
     assert got == {n: want[n] for n in touched}
-    assert len(forests) == (0 if driver_node_limit else 1)
+    assert len(forests) == (0 if edge_limit else 1)
 
 
 def test_cc_clusterer_closure_edges(spark):
@@ -202,69 +204,97 @@ def test_incremental_assignment(spark):
     assert out["n4"] == "n4"        # sub-threshold match -> singleton
 
 
-def test_greedy_auto_distributed_matches_exact(spark):
-    # strategy='auto' above the edge limit runs the distributed epochs;
-    # under the strict total order they converge to the sequential sweep
+def test_greedy_auto_distributed_matches_exact(spark, monkeypatch):
+    # a gate that accepts nothing sends the matcher to the distributed
+    # epochs; under the strict total order they converge to the
+    # sequential driver sweep
+    from pydi_spark.clustering import base
+
     rows = [
         ("l1", "r1", 0.9), ("l2", "r1", 0.95), ("l2", "r2", 0.5),
         ("l1", "r2", 0.1), ("l3", "r2", 0.45), ("l3", "r3", 0.45),
         ("l4", "r3", 0.45), ("l4", "r4", 0.2),
     ]
     corr = spark.createDataFrame(rows, "id1 string, id2 string, score double")
-    exact = {(r["id1"], r["id2"])
-             for r in GreedyOneToOneMatcher(strategy="exact").cluster(corr).collect()}
-    # driver_edge_limit=0 forces the distributed path through 'auto'
-    auto = {(r["id1"], r["id2"])
-            for r in GreedyOneToOneMatcher(driver_edge_limit=0).cluster(corr).collect()}
-    assert auto == exact
+    calls = []
+    distributed = GreedyOneToOneMatcher._distributed
+
+    def counted(self, c):
+        calls.append(c)
+        return distributed(self, c)
+
+    monkeypatch.setattr(GreedyOneToOneMatcher, "_distributed", counted)
+    sweep = {(r["id1"], r["id2"])
+             for r in GreedyOneToOneMatcher().cluster(corr).collect()}
+    assert not calls
+    monkeypatch.setattr(base, "DRIVER_SAFE_BYTES", 0)
+    monkeypatch.setattr(base, "DRIVER_EDGE_LIMIT", 0)
+    epochs = {(r["id1"], r["id2"])
+              for r in GreedyOneToOneMatcher().cluster(corr).collect()}
+    assert len(calls) == 1
+    assert epochs == sweep
 
 
 def test_driver_collect_caps(spark, monkeypatch):
     """r13 defensive caps (VERDICT r12 #8): a collect that exceeds the
-    hard row ceiling must fall back (CC: contracted forest / distributed
-    union-find — identical output) or refuse loudly (hierarchical,
-    bipartite), never proceed with an unbounded driver frame."""
-    import pytest
-
-    import importlib
-
-    # the package re-exports shadow the module attributes
-    cc = importlib.import_module(
-        "pydi_spark.clustering.connected_components"
-    )
-    hier_mod = importlib.import_module("pydi_spark.clustering.hierarchical")
-    bip_mod = importlib.import_module(
-        "pydi_spark.clustering.maximum_bipartite"
-    )
+    hard row ceiling must fall back (CC, greedy: the distributed path —
+    identical output) or refuse loudly (hierarchical, bipartite, centre),
+    never proceed with an unbounded driver frame."""
+    from pydi_spark.clustering import base
 
     edges = spark.createDataFrame(
         [("a", "b"), ("b", "c"), ("x", "y")], "id1 string, id2 string"
     )
     expected = {r["record_id"]: r["cluster_id"]
-                for r in cc.connected_components(edges).collect()}
-    # cap of 0 rows trips the direct-edge collect inside the auto path:
-    # the exactly-counted forest branch must still produce identical
-    # components
-    monkeypatch.setattr(cc, "DRIVER_COLLECT_ROW_CAP", 0)
-    capped = {r["record_id"]: r["cluster_id"]
-              for r in cc.connected_components(edges).collect()}
-    assert capped == expected
-    # explicit hybrid with both collects capped refuses loudly
-    with pytest.raises(RuntimeError, match="driver collect cap"):
-        cc.connected_components(edges, strategy="hybrid").collect()
-
+                for r in connected_components(edges).collect()}
     corr = spark.createDataFrame(
-        [("a", "b", 0.9), ("c", "d", 0.8)],
+        [("a", "b", 0.9), ("c", "d", 0.8), ("c", "b", 0.7)],
         "id1 string, id2 string, score double",
     )
+    greedy = {(r["id1"], r["id2"])
+              for r in GreedyOneToOneMatcher().cluster(corr).collect()}
+    # cap of 0 rows refuses every collect behind the gate: the edges',
+    # then the forest's — the distributed rounds must still produce
+    # identical components, and greedy's epochs the same matching
+    monkeypatch.setattr(base, "DRIVER_COLLECT_ROW_CAP", 0)
+    capped = {r["record_id"]: r["cluster_id"]
+              for r in connected_components(edges).collect()}
+    assert capped == expected
+    assert {(r["id1"], r["id2"])
+            for r in GreedyOneToOneMatcher().cluster(corr).collect()} == greedy
+
     # MAX linkage forces the sequential (collected) path
-    h = hier_mod.HierarchicalClusterer(linkage="MAX", min_similarity=0.5)
+    h = HierarchicalClusterer(linkage="MAX", min_similarity=0.5)
+    m = MaximumBipartiteMatcher()
+    c = CentreClusterer()
     assert h.assign(corr).count() == 4
-    monkeypatch.setattr(hier_mod, "DRIVER_SOLVE_ROW_CAP", 1)
-    with pytest.raises(ValueError, match="driver-side sequential limit"):
-        h.assign(corr)
-    m = bip_mod.MaximumBipartiteMatcher()
     assert m.cluster(corr).count() == 2
-    monkeypatch.setattr(bip_mod, "DRIVER_SOLVE_ROW_CAP", 1)
-    with pytest.raises(ValueError, match="driver-side solver limit"):
-        m.cluster(corr)
+    assert c.assign(corr).count() == 4
+    monkeypatch.setattr(base, "DRIVER_SOLVE_ROW_CAP", 2)
+    for solve in (h.assign, m.cluster, c.assign):
+        with pytest.raises(ValueError, match="driver-side solver limit"):
+            solve(corr)
+
+
+def test_driver_policy_lives_in_clustering_base():
+    """clustering/base.py is the only clustering module that decides
+    driver-or-distributed: no other one calls the size estimate, defines
+    a union-find, writes a MiB size literal or sets a DRIVER_* limit."""
+    import pathlib
+    import re
+
+    root = pathlib.Path(__file__).resolve().parents[1] / "pydi_spark" / "clustering"
+    patterns = [
+        re.compile(r"fits_estimate\("),
+        re.compile(r"def find\("),
+        re.compile(r"<<\s*20\b"),
+        re.compile(r"^\s*DRIVER_\w*\s*(?::[^=\n]*)?=(?!=)", re.M),
+    ]
+    hits = [
+        f"{f.name}: {m.group(0).strip()!r}"
+        for f in sorted(root.glob("*.py"))
+        if f.name != "base.py"
+        for p in patterns
+        for m in p.finditer(f.read_text())
+    ]
+    assert not hits, "driver policy outside clustering/base.py:\n" + "\n".join(hits)

@@ -86,6 +86,32 @@ def test_cluster_reports(spark):
     assert [(r["cluster_size"], r["n_clusters"]) for r in dist] == [(3, 1)]
 
 
+def test_write_record_groups_by_consistency(spark, tmp_path):
+    """Each connected group lands in the highest consistency bucket it
+    reaches (reference evaluation.py:782-859); below every bucket it is
+    'low'. Consistencies: x-y 1.0, k1..k4 5/6, a-b-c 2/3, p..t 4/10."""
+    from pydi_spark.evaluation.matching_eval import (
+        write_record_groups_by_consistency,
+    )
+
+    edges = [("x", "y"), ("a", "b"), ("b", "c"),
+             ("k1", "k2"), ("k1", "k3"), ("k1", "k4"), ("k2", "k3"), ("k3", "k4"),
+             ("p", "q"), ("q", "r"), ("r", "s"), ("s", "t")]
+    corr = spark.createDataFrame(
+        [(a, b, 0.9) for a, b in edges], "id1 string, id2 string, score double"
+    )
+    out = str(tmp_path / "groups")
+    write_record_groups_by_consistency(corr, out)
+    got = {r["cluster_id"]: (r["bucket"], r["n_entities"], r["n_edges"])
+           for r in spark.read.json(out).collect()}
+    assert got == {
+        "x": (">=1.0", 2, 1),
+        "k1": (">=0.8", 4, 5),
+        "a": (">=0.5", 3, 2),
+        "p": ("low", 5, 4),
+    }
+
+
 # ----------------------------------------------------- events analytics
 
 def _ts(s):

@@ -204,7 +204,8 @@ def test_semantic_dedup_pairs(spark):
     }
 
 
-def test_broadcast_verify_auto_resolution(spark, docs):
+def test_broadcast_verify_auto_resolution(spark, docs, monkeypatch):
+    from pydi_spark.core import plansize
     from pydi_spark.llmdata.dedup import _resolve_broadcast_verify
 
     # explicit booleans pass through untouched
@@ -218,7 +219,8 @@ def test_broadcast_verify_auto_resolution(spark, docs):
     # 0-byte ceiling -> never
     pq = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     assert _resolve_broadcast_verify(pq, "auto") is True
-    assert _resolve_broadcast_verify(pq, "auto", max_bytes=0) is False
+    monkeypatch.setattr(plansize, "BROADCAST_MAX_BYTES", 0)
+    assert _resolve_broadcast_verify(pq, "auto") is False
 
 
 def test_minhash_same_result_without_broadcast(docs):

@@ -170,6 +170,27 @@ def test_text_normalizers(spark):
     assert one(spark, handle_brackets("x", "extract"), "Title (2024)") == "2024"
 
 
+def test_analyze_column_quality(spark):
+    """Per-column snapshot (reference columns.py:526-572): real NULLs
+    and textual null tokens both count as textual nulls, completeness
+    counts only real NULLs, lengths average over non-null values."""
+    from pydi_spark.normalization.typedetect import analyze_column_quality
+
+    df = spark.createDataFrame(
+        [("abc",), ("n/a",), (None,), ("abcd",), ("abc",)], "x string"
+    )
+    q = analyze_column_quality(df, "x")
+    assert q == {
+        "rows": 5,
+        "non_null": 4,
+        "textual_nulls": 2,
+        "approx_distinct": 3,
+        "avg_length": pytest.approx(3.25),
+        "completeness": pytest.approx(0.8),
+    }
+    assert analyze_column_quality(df.limit(0), "x")["completeness"] is None
+
+
 def test_quality_checker(spark):
     df = spark.createDataFrame(
         [("a@x.io", 5), ("bad-email", 50), (None, 500)], "email string, n int"
