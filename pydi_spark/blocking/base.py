@@ -13,16 +13,18 @@ Contract:
 - self-blocking (left is right) keeps only id1 < id2.
 
 Every band/token/gram pair join goes through one kernel here
-(``pair_join`` / ``first_shared_key`` / ``distinct_pairs``), which owns
-the probe width, the orientation and the pair-dedup rule.
+(``pair_join`` / ``first_shared_key`` / ``distinct_pairs``), which pins
+the probe side at ``core.plansize.probe_width`` and owns the
+orientation and the pair-dedup rule.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from pydi_spark.core.dataset import Dataset, as_dataframe
+from pydi_spark.core.plansize import probe_width
 
 PAIR_COLUMNS = ["id1", "id2", "block_key"]
 
@@ -35,29 +37,6 @@ def resolve_side(
     if idc is None:
         raise ValueError("id_column required (or pass a Dataset with one)")
     return df, idc
-
-
-def probe_width(spark: SparkSession) -> int:
-    """Partition count for the probe side of a quadratic pair join:
-    ``max(defaultParallelism, shuffle.partitions)``.
-
-    The join output is quadratic per key and inherits the probe side's
-    partitioning, so an unpinned probe side (AQE-coalesced to a handful
-    of partitions, or a single-file scan) serializes candidate
-    generation. The ``shuffle.partitions`` floor matters when the pair
-    join is the last stage of the plan: its partition count also sizes
-    the task results a caller collects, and at ``defaultParallelism``
-    alone a low-core session collecting a large pair set builds result
-    blocks big enough to be evicted (measured: an unconfigured local[8]
-    collect of the 46.8M-pair sf0.1 TokenBlocker output died with
-    TaskResultLost at width 8 and passed at 200). Configured sessions
-    set ``shuffle.partitions`` to the core count, so there the width is
-    just the core count."""
-    cores = spark.sparkContext.defaultParallelism
-    try:
-        return max(cores, int(spark.conf.get("spark.sql.shuffle.partitions")))
-    except (TypeError, ValueError):
-        return cores
 
 
 def first_shared_key(key: str, s1: str, s2: str) -> Column:
@@ -86,7 +65,8 @@ def pair_join(
 
     ``left`` carries ``id1`` and ``key``, ``right`` carries ``id2`` and
     ``key``; any other columns pass through. The ``id1`` side is
-    repartitioned on ``(key, id1)`` at :func:`probe_width` (the probe
+    repartitioned on ``(key, id1)`` at
+    :func:`~pydi_spark.core.plansize.probe_width` (the probe
     side of the quadratic join), self-joins keep ``id1 < id2``.
 
     ``key_sets=(s1, s2)`` names per-record key arrays carried on each

@@ -8,10 +8,10 @@ reference supports injecting a custom embedder / precomputed embeddings
 
 Spark has no native ANN operator; two strategies:
 
-- ``method='brute'``: collect the right-side matrix to the driver (must be
-  dimension-sized), broadcast it, and run chunked numpy matmul top-k per
-  Arrow batch of the left side via ``mapInPandas``. Exact results; right
-  side bounded by executor memory (same regime as a broadcast join).
+- ``method='brute'``: collect the right-side matrix to the driver (at
+  most ``BRUTE_MAX_ROWS`` rows; more is refused), broadcast it, and run
+  chunked numpy matmul top-k per Arrow batch of the left side via
+  ``mapInPandas``. Exact results (same regime as a broadcast join).
 - ``method='lsh'``: random-hyperplane signatures (seeded, deterministic),
   banded into keys, candidates from a band equi-join, then exact cosine
   re-scoring and threshold/top-k. Fully distributed on both sides — the
@@ -25,7 +25,7 @@ the driver.
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 from typing import Callable, Iterator
 
 import numpy as np
@@ -54,6 +54,11 @@ PAIR_SCHEMA = StructType(
         StructField("score", DoubleType()),
     ]
 )
+
+# Most right-side rows the brute path collects to the driver: 'auto'
+# routes anything larger to LSH, a forced 'brute' refuses it.
+BRUTE_MAX_ROWS = 100_000
+
 
 def sentence_transformer_embedder(
     model_name: str = "all-MiniLM-L6-v2", **kwargs
@@ -108,7 +113,6 @@ class EmbeddingBlocker:
     vector_column: str | None = None
     embedder: Callable[[list[str]], np.ndarray] | None = None
     method: str = "auto"  # auto | brute | lsh
-    brute_max_rows: int = 100_000  # auto: right side above this -> lsh
     metric: str = "cosine"
     top_k: int = 50
     threshold: float = 0.3
@@ -116,7 +120,6 @@ class EmbeddingBlocker:
     lsh_bands: int = 4
     seed: int = 42
     normalize: bool = True
-    extra: dict = field(default_factory=dict)
 
     # -- embedding ----------------------------------------------------
     def _with_vectors(self, df: DataFrame, idc: str) -> DataFrame:
@@ -153,7 +156,15 @@ class EmbeddingBlocker:
     # -- exact top-k via broadcast right matrix -----------------------
     def _brute(self, l: DataFrame, r: DataFrame) -> DataFrame:
         spark = l.sparkSession
-        rows = r.collect()
+        # one row past the cap tells "at the cap" from "over it" without
+        # a separate count
+        rows = r.limit(BRUTE_MAX_ROWS + 1).collect()
+        if len(rows) > BRUTE_MAX_ROWS:
+            raise ValueError(
+                f"EmbeddingBlocker(method='brute'): the right side has more "
+                f"than {BRUTE_MAX_ROWS} rows, too many to collect to the "
+                "driver; use method='lsh' or 'auto'"
+            )
         r_ids = np.array([row["rid"] for row in rows], dtype=object)
         r_mat = np.array([row["vec"] for row in rows], dtype=np.float32)
         if self.normalize or self.metric == "cosine":
@@ -269,25 +280,15 @@ class EmbeddingBlocker:
         if pin_r:
             v2 = F.broadcast(v2)
         cands = cands.join(v1, "id1").join(v2, "id2")
-        # exact cosine re-score as a native expression; double casts before
-        # the multiply so the result is bit-comparable with the oracle's
+        # exact cosine re-score; cosine_expr casts to double before the
+        # multiply, so the score is bit-comparable with the oracle's
         # double-precision cosine (float32 products drift at ~1e-8)
-        dot = F.aggregate(
-            F.zip_with("vec1", "vec2", lambda a, b: a.cast("double") * b.cast("double")),
-            F.lit(0.0).cast("double"),
-            lambda acc, x: acc + x,
-        )
-        norm = lambda c: F.sqrt(  # noqa: E731
-            F.aggregate(
-                c,
-                F.lit(0.0).cast("double"),
-                lambda acc, x: acc + x.cast("double") * x.cast("double"),
-            )
-        )
-        sim = dot / (norm(F.col("vec1")) * norm(F.col("vec2")))
-        scored = cands.withColumn("score", sim).where(F.col("score") >= self.threshold)
         from pyspark.sql import Window
 
+        from pydi_spark.llmdata.similarity import cosine_expr
+
+        sim = cosine_expr(F.col("vec1"), F.col("vec2"))
+        scored = cands.withColumn("score", sim).where(F.col("score") >= self.threshold)
         w = Window.partitionBy("id1").orderBy(F.desc("score"), F.col("id2"))
         return (
             scored.withColumn("__rk", F.row_number().over(w))
@@ -320,12 +321,12 @@ class EmbeddingBlocker:
     def _resolve_method(self, right_df: DataFrame) -> str:
         """'auto' switches on the right-side row count: 'brute' collects
         the right matrix to the driver (broadcast-join regime only), so
-        anything above ``brute_max_rows`` routes to the distributed LSH
+        anything above ``BRUTE_MAX_ROWS`` routes to the distributed LSH
         path. A parquet-backed count is metadata-only; the threshold is a
         row count because the collected matrix is rows x dim floats."""
         if self.method != "auto":
             return self.method
-        return "brute" if right_df.count() <= self.brute_max_rows else "lsh"
+        return "brute" if right_df.count() <= BRUTE_MAX_ROWS else "lsh"
 
     # -- public -------------------------------------------------------
     def block(

@@ -30,6 +30,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from pydi_spark.core import plansize
+
 
 def meta_blocking(
     assignments: DataFrame,
@@ -62,7 +64,6 @@ def meta_blocking(
         raise ValueError(f"unknown pruning: {pruning}")
 
     spark = assignments.sparkSession
-    parallelism = spark.sparkContext.defaultParallelism
     a = assignments.select(
         F.col(id_col).alias("eid"), F.col(block_col).alias("bk")
     ).dropDuplicates()
@@ -95,7 +96,7 @@ def meta_blocking(
     ent_sizes = a.groupBy("eid").agg(F.count("*").alias("nb"))
 
     # within-block pairs -> CBS (pair orientation: eid string order)
-    left = a.repartition(parallelism, "bk")
+    left = a.repartition(plansize.core_width(spark), "bk")
     right = a.select(F.col("eid").alias("eid2"), "bk")
     cbs = (
         left.join(right, "bk")

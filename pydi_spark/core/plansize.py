@@ -1,19 +1,23 @@
-"""Catalyst plan-size estimation for size-aware physical decisions.
+"""Partition widths and broadcast pins: the two physical choices the
+join and aggregate operators share. Every explicit width is
+:func:`core_width` (spread work over the cores; :func:`widen`) or, for
+the pair kernel's probe side, :func:`probe_width`; no other module
+reads ``defaultParallelism`` or a partition count.
 
-Several operators key broadcast/driver-collect decisions on the INPUT
-relation's optimized-plan size estimate: file-size based for parquet
-scans (reliable), "unknown"=huge for derived frames like
-createDataFrame/LogicalRDD/mapInPandas output — which correctly fails
-toward the distributed/shuffling path, never toward an unsafe broadcast
-or collect. Centralized here so the dedup verify joins and the
-embedding blocker's vector re-attach share one broadcast ceiling, and
-the clustering layer's driver gate (``clustering/base.py``) applies the
-same policy.
+Broadcast gates key on the INPUT relation's optimized-plan size
+estimate: file-size based for parquet scans (reliable), "unknown"=huge
+for derived frames like createDataFrame/mapInPandas output — which
+correctly fails toward the distributed/shuffling path, never toward an
+unsafe broadcast or collect. A ``localCheckpoint`` keeps its origin
+plan's estimate, so a checkpointed frame gates like the frame it came
+from. The dedup verify joins and the embedding blocker's vector
+re-attach share one broadcast ceiling, and the clustering layer's
+driver gate (``clustering/base.py``) applies the same policy.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 
 # Ceiling for pinning a join side as a broadcast (the dedup verify joins'
 # token/shingle side tables, the embedding blocker's vector re-attach),
@@ -21,6 +25,57 @@ from pyspark.sql import DataFrame
 # input sized, while a derived table's own estimate is wildly off after
 # explode/groupBy.
 BROADCAST_MAX_BYTES = 1 << 30  # 1 GiB
+
+
+def core_width(spark: SparkSession) -> int:
+    """Partition count that spreads a stage over the session's cores:
+    ``defaultParallelism``. The width for every explicit repartition
+    except the pair kernel's probe side. Not ``shuffle.partitions``:
+    in an unconfigured session that is 200, and 200 tasks over small
+    inputs made the queries behind these widths ~3x slower (sf0.01,
+    local[8] on a 4-core host; mapInPandas matchers 13-17x,
+    discover_fds 9x)."""
+    return spark.sparkContext.defaultParallelism
+
+
+def probe_width(spark: SparkSession) -> int:
+    """Partition count for the probe side of a quadratic pair join:
+    ``max(core_width, shuffle.partitions)``.
+
+    The join output is quadratic per key and inherits the probe side's
+    partitioning, so an unpinned probe side (AQE-coalesced to a handful
+    of partitions, or a single-file scan) serializes candidate
+    generation. The ``shuffle.partitions`` floor matters when the pair
+    join is the last stage of the plan: its partition count also sizes
+    the task results a caller collects, and at ``defaultParallelism``
+    alone a low-core session collecting a large pair set builds result
+    blocks big enough to be evicted (measured: an unconfigured local[8]
+    collect of the 46.8M-pair sf0.1 TokenBlocker output died with
+    TaskResultLost at width 8 and passed at 200). Configured sessions
+    set ``shuffle.partitions`` to the core count, so there the width is
+    just the core count."""
+    cores = core_width(spark)
+    try:
+        return max(cores, int(spark.conf.get("spark.sql.shuffle.partitions")))
+    except (TypeError, ValueError):
+        return cores
+
+
+def widen(df: DataFrame) -> DataFrame:
+    """Round-robin ``df`` to :func:`core_width` partitions when it arrives
+    in fewer; otherwise return it untouched.
+
+    A dimension-sized parquet file is ONE input split, so whatever runs
+    map-side over it next runs in a single task (measured at sf0.1:
+    discover_fds' multi-distinct Expand was single-threaded, and
+    incremental_minhash_dedup's store verify took 30 s single-threaded
+    vs 2 s wide). Wide inputs (any real corpus) get no shuffle;
+    round-robin adds no key skew and changes no aggregate or map-side
+    join result."""
+    width = core_width(df.sparkSession)
+    if df.rdd.getNumPartitions() < width:
+        return df.repartition(width)
+    return df
 
 
 def estimated_plan_bytes(df: DataFrame) -> int:

@@ -17,6 +17,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from pydi_spark.blocking.base import distinct_pairs
+from pydi_spark.core import plansize
 
 
 def salted_join(
@@ -166,7 +167,6 @@ def range_join(
         is_ts, bucket_width, [(intervals, start_col, end_col)]
     )
 
-    parallelism = points.sparkSession.sparkContext.defaultParallelism
     carry = [c for c in intervals.columns if c not in by_cols]
     out_names = {
         c: (c + suffix if c in points.columns else c) for c in carry
@@ -177,7 +177,7 @@ def range_join(
         scalar, bucket,
     )
     pt = points.withColumn("__bucket", bucket(F.col(on))).repartition(
-        parallelism, *(by_cols + ["__bucket"])
+        plansize.core_width(points.sparkSession), *(by_cols + ["__bucket"])
     )
 
     p = F.col(on)
@@ -281,7 +281,6 @@ def interval_overlap_join(
         [(left, ls_col, le_col), (right, rs_col, re_col)],
     )
 
-    parallelism = left.sparkSession.sparkContext.defaultParallelism
     l_carry = [c for c in left.columns if c not in by_cols]
     r_carry = [c for c in right.columns if c not in by_cols]
     out_names = {
@@ -291,7 +290,9 @@ def interval_overlap_join(
     lv = _explode_to_buckets(
         left, by_cols, l_carry, "__l_", ls_col, le_col, scalar, bucket,
         start_bucket_col="__lsb",
-    ).repartition(parallelism, *(by_cols + ["__bucket"]))
+    ).repartition(
+        plansize.core_width(left.sparkSession), *(by_cols + ["__bucket"])
+    )
     rv = _explode_to_buckets(
         right, by_cols, r_carry, "__r_", rs_col, re_col, scalar, bucket,
         start_bucket_col="__rsb",
@@ -476,14 +477,13 @@ def grid_distance_join(
     def cellify(col):
         return F.floor(col / F.lit(cell)).cast("long")
 
-    parallelism = left.sparkSession.sparkContext.defaultParallelism
     l = left.select(
         F.col(id_column).alias("id1"),
         F.col(x).alias("__x1"),
         F.col(y).alias("__y1"),
         cellify(F.col(x)).alias("__cx"),
         cellify(F.col(y)).alias("__cy"),
-    ).repartition(parallelism, "__cx", "__cy")
+    ).repartition(plansize.core_width(left.sparkSession), "__cx", "__cy")
     off = F.explode(F.array(F.lit(-1), F.lit(0), F.lit(1)))
     r = (
         right.select(

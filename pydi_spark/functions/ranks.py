@@ -13,6 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from pydi_spark.core import plansize
 from pydi_spark.core.arrowio import rows_to_df
 
 _INTEGRAL_TYPES = ("byte", "short", "integer", "long")
@@ -36,7 +37,7 @@ def _prefix_with_offsets(
     Returns ``(frame, grand_total)`` where ``frame`` has ``out_col`` =
     local prefix + partition offset, cast to long (callers pass
     integral inputs — enforced by global_running_sum)."""
-    parts = num_partitions or df.sparkSession.sparkContext.defaultParallelism
+    parts = num_partitions or plansize.core_width(df.sparkSession)
     ordered = df.repartitionByRange(parts, *order_cols).sortWithinPartitions(
         *order_cols
     )
@@ -237,7 +238,7 @@ def global_running_max(
     """
     from pyspark.sql import Window
 
-    parts = num_partitions or df.sparkSession.sparkContext.defaultParallelism
+    parts = num_partitions or plansize.core_width(df.sparkSession)
     ordered = df.repartitionByRange(parts, *order_cols).sortWithinPartitions(
         *order_cols
     )

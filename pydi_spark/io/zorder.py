@@ -28,6 +28,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from pydi_spark.core import plansize
+
 
 def zorder_key(cols: list[Column | str], bits: int = 10) -> Column:
     """Morton key: interleave the low ``bits`` bits of each coordinate.
@@ -83,7 +85,7 @@ def write_zordered(
     layout, not the data, carries it.
     """
     keyed = df.withColumn("__zkey", zorder_key(cols, bits))
-    n = num_files or df.sparkSession.sparkContext.defaultParallelism
+    n = num_files or plansize.core_width(df.sparkSession)
     (
         keyed.repartitionByRange(n, "__zkey")
         .sortWithinPartitions("__zkey")

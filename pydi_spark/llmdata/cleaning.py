@@ -19,6 +19,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from pydi_spark.core import plansize
+
 
 def clean_document_lines(
     df: DataFrame,
@@ -35,7 +37,6 @@ def clean_document_lines(
     empty). ``max_line_doc_frequency``: drop lines occurring in more
     than this many distinct documents (global boilerplate).
     """
-    parallelism = df.sparkSession.sparkContext.defaultParallelism
     lines = df.select(
         F.col(id_col).cast("string").alias("doc_id"),
         F.posexplode(F.split(F.col(text_col), "\n")).alias("pos", "line"),
@@ -63,7 +64,7 @@ def clean_document_lines(
 
     # full-width reassembly; collect_list skips the nulls from when()
     return (
-        flagged.repartition(parallelism, "doc_id")
+        flagged.repartition(plansize.core_width(df.sparkSession), "doc_id")
         .groupBy("doc_id")
         .agg(
             F.sum(F.col("keep").cast("int")).alias("n_lines_kept"),
@@ -109,7 +110,7 @@ def dedup_corpus_lines(
     """
     from pyspark.sql import Window
 
-    parallelism = df.sparkSession.sparkContext.defaultParallelism
+    width = plansize.core_width(df.sparkSession)
     lines = df.select(
         F.col(id_col).cast("string").alias("doc_id"),
         F.posexplode(F.split(F.col(text_col), "\n")).alias("pos", "line"),
@@ -126,12 +127,12 @@ def dedup_corpus_lines(
         ),
     )
     w = Window.partitionBy("__lh").orderBy("doc_id", "pos")
-    marked = keyed.repartition(parallelism, "__lh").withColumn(
+    marked = keyed.repartition(width, "__lh").withColumn(
         "keep",
         (~F.col("__eligible")) | (F.row_number().over(w) == F.lit(1)),
     )
     return (
-        marked.repartition(parallelism, "doc_id")
+        marked.repartition(width, "doc_id")
         .groupBy("doc_id")
         .agg(
             F.sum(F.col("keep").cast("int")).alias("n_lines_kept"),
@@ -209,15 +210,13 @@ def decontaminate(
     single explicit repartition(doc_id) exchange. Never joins raw
     n-gram strings (hash keys keep the rows narrow).
     """
-    parallelism = df.sparkSession.sparkContext.defaultParallelism
-
     def ngram_rows(frame: DataFrame) -> DataFrame:
         return _word_ngram_rows(frame, text_col, id_col, n)
 
     eval_grams = ngram_rows(eval_df).select("gh").distinct()
-    hits = ngram_rows(df).repartition(parallelism, "doc_id").dropDuplicates(
-        ["doc_id", "gh"]
-    ).join(
+    hits = ngram_rows(df).repartition(
+        plansize.core_width(df.sparkSession), "doc_id"
+    ).dropDuplicates(["doc_id", "gh"]).join(
         F.broadcast(eval_grams.withColumn("__hit", F.lit(1))), "gh", "left"
     )
     out = hits.groupBy("doc_id").agg(
@@ -263,7 +262,6 @@ def cross_source_overlap(
     from pydi_spark.functions.tokenize import word_tokens
     from pydi_spark.llmdata.dedup import _token_hash60
 
-    parallelism = df.sparkSession.sparkContext.defaultParallelism
     toks = word_tokens(F.col(text_col))
     tok_rows = df.where(F.size(toks) >= n).select(
         F.col(group_col).alias("src"),
@@ -291,7 +289,7 @@ def cross_source_overlap(
         .localCheckpoint(eager=True)
     )
     sizes = grams.groupBy("src").agg(F.count("*").alias("n_grams"))
-    left = grams.repartition(parallelism, "gh")
+    left = grams.repartition(plansize.core_width(df.sparkSession), "gh")
     right = grams.select(
         F.col("src").alias("src_b"), F.col("gh").alias("gh")
     )
@@ -434,7 +432,6 @@ def novelty_scores(
     equi-join on the 32-char md5 key co-partitioned by gram hash. No
     reference counterpart — north-star addition.
     """
-    parallelism = df.sparkSession.sparkContext.defaultParallelism
     batch = _word_ngram_rows(df, text_col, id_col, n).dropDuplicates(
         ["doc_id", "gh"]
     )
@@ -444,7 +441,9 @@ def novelty_scores(
         .distinct()
         .withColumn("__seen", F.lit(1))
     )
-    joined = batch.repartition(parallelism, "gh").join(ref, "gh", "left")
+    joined = batch.repartition(plansize.core_width(df.sparkSession), "gh").join(
+        ref, "gh", "left"
+    )
     out = joined.groupBy("doc_id").agg(
         F.count(F.lit(1)).alias("n_ngrams"),
         (F.count(F.lit(1)) - F.coalesce(F.sum("__seen"), F.lit(0))).alias(

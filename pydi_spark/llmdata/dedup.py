@@ -38,17 +38,6 @@ from pydi_spark.core.arrowio import rows_to_df
 from pydi_spark.functions.tokenize import word_tokens
 
 
-def _resolve_broadcast_verify(df: DataFrame, broadcast_verify) -> bool:
-    """'auto' -> broadcast iff the input relation's size estimate fits
-    ``core.plansize.BROADCAST_MAX_BYTES``. At bench scale the pin avoids
-    a 5-10x slower sort-merge join over the quadratic candidate set; at
-    corpus scale (100 TB) the token table cannot be broadcast and the
-    join must shuffle."""
-    if broadcast_verify != "auto":
-        return bool(broadcast_verify)
-    return plansize.fits_estimate(df, plansize.BROADCAST_MAX_BYTES)
-
-
 # ------------------------------------------------------------------- exact
 
 def exact_duplicates(
@@ -325,16 +314,17 @@ def minhash_near_duplicates(
     num_hashes: int = 16,
     bands: int = 4,
     jaccard_threshold: float = 0.7,
-    broadcast_verify: bool | str = "auto",
 ) -> DataFrame:
     """[id1, id2, jaccard]: LSH-band candidates verified by true token-set
     Jaccard >= threshold. id1 < id2 (string order).
 
-    ``broadcast_verify='auto'`` (default) pins the verify build side as a
-    broadcast only while the input's size estimate fits
-    ``core.plansize.BROADCAST_MAX_BYTES`` — the right call at bench
-    scale, never at corpus scale."""
-    broadcast_verify = _resolve_broadcast_verify(df, broadcast_verify)
+    The verify joins pin the token side as a broadcast while the input's
+    size estimate fits ``core.plansize.BROADCAST_MAX_BYTES``: at bench
+    scale the pin avoids a 5-10x slower sort-merge join over the
+    quadratic candidate set; at corpus scale (100 TB) the token table
+    cannot be broadcast and the joins shuffle. Both branches return the
+    same pairs."""
+    pin = plansize.fits_estimate(df, plansize.BROADCAST_MAX_BYTES)
     # band join on (id, band_key) ONLY — candidate pairs stay narrow
     # through the shuffle; token sets re-attach afterwards from the
     # (small-per-row) side table. Carrying the arrays through the
@@ -364,11 +354,9 @@ def minhash_near_duplicates(
     ).select("id1", "id2")
     t1 = sigs.select(F.col("id").alias("id1"), F.col("toks").alias("toks1"))
     t2 = sigs.select(F.col("id").alias("id2"), F.col("toks").alias("toks2"))
-    if broadcast_verify:
-        # pin the build side: Spark's size estimate for the derived toks
-        # table is unreliable here and a sort-merge join over the
-        # quadratic candidate set is 5-10x slower. Disable only when the
-        # per-doc token table itself exceeds executor memory.
+    if pin:
+        # Spark's own size estimate for the derived toks table is
+        # unreliable after explode/aggregate, so the input's decides
         t1, t2 = F.broadcast(t1), F.broadcast(t2)
     return (
         cands.join(t1, "id1")
@@ -436,7 +424,6 @@ def incremental_minhash_dedup(
                 "current Carter-Wegman lanes. Rebuild it with "
                 "minhash_signature_table over the historical corpus."
             )
-    parallelism = new_docs.sparkSession.sparkContext.defaultParallelism
     new_sigs = minhash_signature_table(
         new_docs, text_col=text_col, id_col=id_col, num_hashes=num_hashes
     ).localCheckpoint(eager=True)
@@ -454,13 +441,9 @@ def incremental_minhash_dedup(
         F.explode(F.array(*band_cols)).alias("band_key"),
     )
     # the quadratic fan-out is map-side, so its width is the STORE's
-    # scan width. A production parquet store is already wide; a small /
-    # derived store can arrive AQE-coalesced to 1 partition, which
-    # serializes the whole verify (NOTES.md width lesson — measured
-    # 30 s single-threaded vs 2 s wide at sf0.1). Widen only when
-    # narrow: no-op at scale, round-robin (no key skew) when needed.
-    if store_sigs.rdd.getNumPartitions() < parallelism:
-        store_band_toks = store_band_toks.repartition(parallelism)
+    # scan width: a production parquet store is already wide, a small /
+    # derived one is widened (plansize.widen)
+    store_band_toks = plansize.widen(store_band_toks)
     matched = (
         store_band_toks.join(F.broadcast(new_band_toks), "band_key")
         # size gate first: prunes collisions on two int lengths before
@@ -490,8 +473,7 @@ def incremental_minhash_dedup(
         F.col("toks").alias("toks1"),
         F.explode(F.array(*band_cols)).alias("band_key"),
     )
-    if surv.rdd.getNumPartitions() < parallelism:
-        sb1 = sb1.repartition(parallelism)
+    sb1 = plansize.widen(sb1)
     sb2 = surv.select(
         F.col("id").alias("id2"),
         F.col("toks").alias("toks2"),
@@ -731,7 +713,6 @@ def _shingle_pairs(
     id_col: str,
     shingle_size: int,
     max_shingle_frequency: int | None,
-    broadcast_verify: bool | str,
     score_name: str,
     score: Callable[[Column, Column], Column],
     threshold: float,
@@ -745,8 +726,13 @@ def _shingle_pairs(
     ``size_gate`` is a lossless pre-filter on the two set sizes, run
     before any array intersect; ``prefix_filter`` keeps only each
     set's PPJoin prefix (rarest-first) for candidate generation. Both
-    are sound only for a symmetric, size-bounded score (Jaccard)."""
-    broadcast_verify = _resolve_broadcast_verify(df, broadcast_verify)
+    are sound only for a symmetric, size-bounded score (Jaccard).
+
+    The set re-attach is pinned as a broadcast while the input's size
+    estimate fits ``core.plansize.BROADCAST_MAX_BYTES``, as in
+    :func:`minhash_near_duplicates`; both branches return the same
+    pairs."""
+    pin = plansize.fits_estimate(df, plansize.BROADCAST_MAX_BYTES)
     # shared shingle generation (_shingle_rows): checkpointed because
     # the rows feed up to FOUR consumers here (set re-attach, hot-
     # shingle count, its semi-join, candidate generation)
@@ -803,7 +789,7 @@ def _shingle_pairs(
             .select("id1", "id2", score_name)
         )
 
-    if not broadcast_verify:
+    if not pin:
         # corpus scale: the verify joins shuffle by id, so dedup FIRST —
         # shuffling raw collisions with their attached shingle arrays
         # would multiply the exchange bytes by doc length
@@ -830,7 +816,6 @@ def ngram_containment_duplicates(
     shingle_size: int = 3,
     containment_threshold: float = 0.8,
     max_shingle_frequency: int | None = 100,
-    broadcast_verify: bool | str = "auto",
 ) -> DataFrame:
     """[id1, id2, containment] — asymmetric near-dup detection:
     ``containment = |A ∩ B| / min(|A|, |B|)`` over word-shingle sets
@@ -850,7 +835,7 @@ def ngram_containment_duplicates(
     """
     return _shingle_pairs(
         df, text_col, id_col, shingle_size, max_shingle_frequency,
-        broadcast_verify, "containment",
+        "containment",
         lambda a, b: F.size(F.array_intersect(a, b))
         / F.least(F.size(a), F.size(b)),
         containment_threshold,
@@ -864,7 +849,6 @@ def ngram_jaccard_duplicates(
     shingle_size: int = 3,
     jaccard_threshold: float = 0.5,
     max_shingle_frequency: int | None = 100,
-    broadcast_verify: bool | str = "auto",
     prefix_filter: bool = False,
 ) -> DataFrame:
     """[id1, id2, jaccard] over word-shingle sets: shingle-block
@@ -878,11 +862,11 @@ def ngram_jaccard_duplicates(
     suffixes and never generate candidates, while the verified result
     set is provably identical. ``max_shingle_frequency`` remains the
     lossy knob on top (drops hot shingles from candidate generation
-    entirely). ``broadcast_verify`` as in
+    entirely). The verify joins broadcast as in
     :func:`minhash_near_duplicates`."""
     return _shingle_pairs(
         df, text_col, id_col, shingle_size, max_shingle_frequency,
-        broadcast_verify, "jaccard", token_set_jaccard, jaccard_threshold,
+        "jaccard", token_set_jaccard, jaccard_threshold,
         size_gate=lambda a, b: jaccard_size_gate(a, b, jaccard_threshold),
         prefix_filter=prefix_filter,
     )
@@ -948,7 +932,6 @@ def semantic_dedup_pairs(
     )
 
     spark = df.sparkSession
-    parallelism = spark.sparkContext.defaultParallelism
     if centroids is None:
         n = df.count()
         k = n_centroids or auto_n_centroids(n)
@@ -974,15 +957,17 @@ def semantic_dedup_pairs(
         .where(F.col("__rn") == 1)
         .select("rid", "vec", "cell")
     )
-    left = assigned.select(
-        "cell", F.col("rid").alias("id1"), F.col("vec").alias("v1")
-    ).repartition(parallelism, "cell", "id1")
-    right = assigned.select(
-        "cell", F.col("rid").alias("id2"), F.col("vec").alias("v2")
-    )
     return (
-        left.join(right, "cell")
-        .where(F.col("id1") < F.col("id2"))
+        pair_join(
+            assigned.select(
+                "cell", F.col("rid").alias("id1"), F.col("vec").alias("v1")
+            ),
+            assigned.select(
+                "cell", F.col("rid").alias("id2"), F.col("vec").alias("v2")
+            ),
+            "cell",
+            self_join=True,
+        )
         .withColumn("cosine", cosine_expr(F.col("v1"), F.col("v2")))
         .where(F.col("cosine") >= F.lit(float(threshold)))
         .select("cell", "id1", "id2", "cosine")
@@ -1124,21 +1109,15 @@ def dedup_method_agreement(
     # split (the shared prefix of all three pipelines) runs a single
     # time into a checkpointed [id, tokens] frame and each generator
     # consumes the array (guide §2.4: one pass for shared work; VERDICT
-    # r12 #3). The broadcast-verify gate is resolved on the ORIGINAL
-    # relation — the checkpointed frame has no size estimate and would
-    # spuriously fail every generator toward the shuffling verify path.
+    # r12 #3). Each generator gates its broadcast verify on this frame:
+    # the checkpoint keeps the token projection's size estimate.
     base = df.select(
         F.col(id_col).cast("string").alias("__id"),
         word_tokens(F.col(text_col)).alias("__toks"),
     ).localCheckpoint(eager=True)
-    bv = _resolve_broadcast_verify(df, "auto")
-    mh_params = dict(minhash_params or {})
-    mh_params.setdefault("broadcast_verify", bv)
-    ng_params = dict(ngram_params or {})
-    ng_params.setdefault("broadcast_verify", bv)
     mh = _tagged(
         minhash_near_duplicates(
-            base, text_col="__toks", id_col="__id", **mh_params
+            base, text_col="__toks", id_col="__id", **(minhash_params or {})
         ), 1, 0, 0,
     )
     sh = _tagged(
@@ -1148,7 +1127,7 @@ def dedup_method_agreement(
     )
     ng = _tagged(
         ngram_jaccard_duplicates(
-            base, text_col="__toks", id_col="__id", **ng_params
+            base, text_col="__toks", id_col="__id", **(ngram_params or {})
         ), 0, 0, 1,
     )
     flags = (

@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from pydi_spark.blocking.base import resolve_side
+from pydi_spark.core import plansize
 from pydi_spark.core.dataset import Dataset
 from pydi_spark.functions.comparators import BaseComparator
 
@@ -42,8 +43,9 @@ def join_pairs_to_records(
     the same lesson as the band-join repartitions (NOTES.md)."""
     dl, idl = resolve_side(left, id_column)
     dr, idr = resolve_side(right, id_column)
-    parallelism = pairs.sparkSession.sparkContext.defaultParallelism
-    pairs = pairs.repartition(parallelism, "id1", "id2")
+    pairs = pairs.repartition(
+        plansize.core_width(pairs.sparkSession), "id1", "id2"
+    )
     return (
         pairs.alias("p")
         .join(dl.alias("l"), F.col("p.id1") == F.col(f"l.{idl}").cast("string"))

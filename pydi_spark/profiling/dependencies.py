@@ -31,23 +31,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from pydi_spark.core import plansize
 from pydi_spark.core.arrowio import rows_to_df
-
-
-def _spread_for_agg(sel: DataFrame) -> DataFrame:
-    """Round-robin the (column-pruned) input across the default
-    parallelism when it arrives in FEWER partitions — a dimension-sized
-    parquet file is ONE input split, so the k-way Expand of a
-    multi-distinct aggregate otherwise runs its whole partial phase in
-    a single task (measured: the profile_fds aggregate was
-    single-threaded at sf0.1). Inputs already wider than the default
-    parallelism (any real corpus) pass through untouched — no shuffle
-    is added at scale. Aggregate results are partition-independent, so
-    output is unchanged."""
-    parallelism = sel.sparkSession.sparkContext.defaultParallelism
-    if sel.rdd.getNumPartitions() < parallelism:
-        sel = sel.repartition(parallelism)
-    return sel
 
 
 def discover_fds(df: DataFrame, cols: list[str]) -> DataFrame:
@@ -78,7 +63,7 @@ def discover_fds(df: DataFrame, cols: list[str]) -> DataFrame:
     # the per-column null counts that decide identity (2); for 4
     # null-free columns the distinct pass drops from 24 Expand groups
     # to 10 (6 unordered pairs + 4 per-column).
-    df = _spread_for_agg(df.select(*cols))
+    df = plansize.widen(df.select(*cols))
     null_counts = df.agg(
         F.count(F.lit(1)).alias("__n"),
         *[F.count(F.col(c)).alias(f"__nn_{c}") for c in cols],
@@ -242,7 +227,7 @@ def discover_keys(
                 F.struct(*[F.col(c) for c in combo])
             ).alias(f"__u_{i}")
         )
-    stats = _spread_for_agg(df.select(*cols)).agg(*aggs).collect()[0]
+    stats = plansize.widen(df.select(*cols)).agg(*aggs).collect()[0]
     total = int(stats["__total"])
     rows = [
         (",".join(combo), int(stats[f"__u_{i}"]), total,

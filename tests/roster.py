@@ -113,4 +113,32 @@ ROTATION_QUEUE: set[str] = {
     "type_detection",
     "units_convert",
     "validators_quality",
+    # Every partition width now comes from core/plansize.py
+    # (core_width / probe_width / widen), the dedup verify broadcast
+    # gate lost its override, StandardBlocker's probe repartition and
+    # semantic_dedup_pairs emit through the pair kernel, and
+    # EmbeddingBlocker's LSH re-score uses cosine_expr. That change
+    # reaches 50 queries: 16 sit in the correctness window, 19 are
+    # already queued (ann_lsh, blocking_sorted_neighbourhood,
+    # cluster_centre, cluster_greedy_one_to_one, dedup_embedding,
+    # dedup_semantic, eval_threshold_sweep, events_new_users,
+    # io_id_injection, match_features, match_fellegi_sunter,
+    # match_llm_fake, match_plm_fake, normalize_rank, profile_gini,
+    # profile_keys, profile_lorenz, sample_pps,
+    # text_contamination_matrix) and these 15 join the queue.
+    "blocking_phonetic",
+    "cluster_stable_matching",
+    "eval_calibration",
+    "join_grid_radius",
+    "join_interval_overlap",
+    "join_range",
+    "match_date_numeric",
+    "match_ml_linear",
+    "match_rule_based",
+    "match_uncertainty",
+    "text_clean",
+    "text_clean_multiline",
+    "text_decontaminate",
+    "text_line_dedup",
+    "text_novelty",
 }

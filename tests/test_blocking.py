@@ -133,17 +133,34 @@ def test_salted_join_matches_plain_join(spark):
     assert salted == plain
 
 
-def test_embedding_blocker_auto_method(spark):
+def test_embedding_blocker_auto_method(spark, monkeypatch):
+    from pydi_spark.blocking import embedding
+
     rows = [("a", [1.0, 0.0]), ("b", [0.99, 0.1]), ("c", [0.0, 1.0])]
     df = spark.createDataFrame(rows, "rid string, vec array<float>")
     # default method is auto: small right side -> brute, above cutoff -> lsh
     assert EmbeddingBlocker(vector_column="vec")._resolve_method(df) == "brute"
-    assert (
-        EmbeddingBlocker(vector_column="vec", brute_max_rows=2)._resolve_method(df)
-        == "lsh"
-    )
+    monkeypatch.setattr(embedding, "BRUTE_MAX_ROWS", 2)
+    assert EmbeddingBlocker(vector_column="vec")._resolve_method(df) == "lsh"
     # explicit methods are never overridden (no count action taken)
     assert EmbeddingBlocker(vector_column="vec", method="lsh")._resolve_method(df) == "lsh"
+
+
+def test_embedding_blocker_forced_brute_refuses_past_cap(spark, monkeypatch):
+    """A forced 'brute' collects the right side to the driver, so past
+    the row cap it refuses instead of collecting an unbounded matrix;
+    at the cap it still runs."""
+    from pydi_spark.blocking import embedding
+
+    rows = [("a", [1.0, 0.0]), ("b", [0.99, 0.1]), ("c", [0.0, 1.0])]
+    df = spark.createDataFrame(rows, "rid string, vec array<float>")
+    blocker = EmbeddingBlocker(vector_column="vec", method="brute", threshold=0.9)
+    monkeypatch.setattr(embedding, "BRUTE_MAX_ROWS", 3)
+    pairs = {(r["id1"], r["id2"]) for r in blocker.block(df, id_column="rid").collect()}
+    assert pairs == {("a", "b")}
+    monkeypatch.setattr(embedding, "BRUTE_MAX_ROWS", 2)
+    with pytest.raises(ValueError, match="more than 2 rows"):
+        blocker.block(df, id_column="rid")
 
 
 def test_asof_join_backward_forward_tolerance(spark):
@@ -368,8 +385,9 @@ def test_embedding_lsh_all_band_collision_emitted_once(spark):
 def test_pair_joins_go_through_the_kernel():
     """Band/token/gram pair joins emit and dedup pairs only through
     blocking/base.py (pair_join / first_shared_key / distinct_pairs):
-    neither the min-shared-key predicate nor an (id1, id2) repartition
-    may be hand-rolled again in blocking/, llmdata/ or joins.py."""
+    neither the min-shared-key predicate, an (id1, id2) repartition nor
+    a probe-side repartition(<width>, <key>, "id1") may be hand-rolled
+    again in blocking/, llmdata/ or joins.py."""
     import pathlib
     import re
 
@@ -383,6 +401,8 @@ def test_pair_joins_go_through_the_kernel():
         re.compile(r"array_min\(\s*(?:F\.)?array_intersect\("),
         # repartition(<width>, "id1", "id2"), width possibly a call
         re.compile(r"repartition\((?:[^()]|\([^()]*\))*?\"id1\",\s*\"id2\""),
+        # repartition(<width>, <key>, "id1"): the kernel's probe side
+        re.compile(r"repartition\((?:[^()]|\([^()]*\))*?,\s*\"id1\"\s*\)"),
     ]
     hits = [
         f"{f.relative_to(root)}: {m.group(0)!r}"
@@ -392,6 +412,24 @@ def test_pair_joins_go_through_the_kernel():
         for m in p.finditer(f.read_text())
     ]
     assert not hits, "hand-rolled pair kernel:\n" + "\n".join(hits)
+
+
+def test_width_policy_lives_in_plansize():
+    """core/plansize.py is the only module that reads the session's
+    parallelism or a frame's partition count: every explicit width goes
+    through probe_width / widen."""
+    import pathlib
+    import re
+
+    root = pathlib.Path(__file__).resolve().parents[1] / "pydi_spark"
+    pattern = re.compile(r"sparkContext\.defaultParallelism|\.getNumPartitions\(")
+    hits = [
+        f"{f.relative_to(root)}: {m.group(0)!r}"
+        for f in sorted(root.rglob("*.py"))
+        if f != root / "core" / "plansize.py"
+        for m in pattern.finditer(f.read_text())
+    ]
+    assert not hits, "width read outside core/plansize.py:\n" + "\n".join(hits)
 
 
 def test_meta_blocking_wnp_and_cnp(spark):

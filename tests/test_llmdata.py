@@ -204,31 +204,59 @@ def test_semantic_dedup_pairs(spark):
     }
 
 
-def test_broadcast_verify_auto_resolution(spark, docs, monkeypatch):
+def test_broadcast_gate_on_input_estimate(spark, docs, tmp_path):
     from pydi_spark.core import plansize
-    from pydi_spark.llmdata.dedup import _resolve_broadcast_verify
+    from pydi_spark.functions.tokenize import word_tokens
 
-    # explicit booleans pass through untouched
-    assert _resolve_broadcast_verify(docs, True) is True
-    assert _resolve_broadcast_verify(docs, False) is False
+    ceiling = plansize.BROADCAST_MAX_BYTES
     # createDataFrame-backed frames have no reliable Catalyst size
-    # estimate (LogicalRDD defaults to "unknown" = huge) -> auto must be
-    # conservative and NOT broadcast
-    assert _resolve_broadcast_verify(docs, "auto") is False
-    # parquet-backed frames have file-size stats: small file -> broadcast,
-    # 0-byte ceiling -> never
-    pq = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    assert _resolve_broadcast_verify(pq, "auto") is True
+    # estimate ("unknown" = huge) -> the gate must be conservative and
+    # NOT broadcast
+    assert not plansize.fits_estimate(docs, ceiling)
+    # parquet-backed frames have file-size stats: small file -> broadcast
+    docs.write.parquet(str(tmp_path / "docs"))
+    pq = spark.read.parquet(str(tmp_path / "docs"))
+    assert plansize.fits_estimate(pq, ceiling)
+    # a checkpoint keeps its origin plan's estimate, so a checkpointed
+    # derived frame (dedup_method_agreement's token frame) gates like
+    # the frame it came from
+    toks = pq.select(
+        F.col("doc_id").cast("string").alias("__id"),
+        word_tokens(F.col("text")).alias("__toks"),
+    )
+    ck = toks.localCheckpoint(eager=True)
+    assert plansize.estimated_plan_bytes(ck) == plansize.estimated_plan_bytes(toks)
+    assert plansize.fits_estimate(ck, ceiling) and plansize.fits_estimate(toks, ceiling)
+
+
+@pytest.mark.parametrize(
+    "generator",
+    [
+        pytest.param(
+            lambda df: minhash_near_duplicates(
+                df, num_hashes=16, bands=4, jaccard_threshold=0.9
+            ),
+            id="minhash",
+        ),
+        pytest.param(
+            lambda df: ngram_jaccard_duplicates(df, jaccard_threshold=0.5),
+            id="ngram_jaccard",
+        ),
+    ],
+)
+def test_dedup_same_pairs_on_both_broadcast_branches(
+    spark, docs, tmp_path, monkeypatch, generator
+):
+    """A parquet input takes the pinned verify branch; a 0-byte ceiling
+    forces the shuffled one. Both find the same pairs."""
+    from pydi_spark.core import plansize
+
+    docs.write.parquet(str(tmp_path / "docs"))
+    pq = spark.read.parquet(str(tmp_path / "docs"))
+    assert plansize.fits_estimate(pq, plansize.BROADCAST_MAX_BYTES)
+    pinned = {(r["id1"], r["id2"]) for r in generator(pq).collect()}
     monkeypatch.setattr(plansize, "BROADCAST_MAX_BYTES", 0)
-    assert _resolve_broadcast_verify(pq, "auto") is False
-
-
-def test_minhash_same_result_without_broadcast(docs):
-    kw = dict(num_hashes=16, bands=4, jaccard_threshold=0.9)
-    pinned = {(r["id1"], r["id2"]) for r in
-              minhash_near_duplicates(docs, broadcast_verify=True, **kw).collect()}
-    shuffled = {(r["id1"], r["id2"]) for r in
-                minhash_near_duplicates(docs, broadcast_verify=False, **kw).collect()}
+    shuffled = {(r["id1"], r["id2"]) for r in generator(pq).collect()}
     assert pinned == shuffled and pinned
 
 
