@@ -7046,7 +7046,7 @@ _TOK_SQL = (
 )
 
 # instance-based schema matcher tokenization ([^\p{L}\p{N}]+ on
-# lower(trim(value)) — schemamatching/instance_based.py:41)
+# lower(trim(value)) — schemamatching/instance_based.py:86)
 _IB_TOK_SQL = (
     "list_filter(regexp_split_to_array(lower(trim(CAST({col} AS VARCHAR))), "
     "'[^\\p{{L}}\\p{{N}}]+'), x -> x != '')"

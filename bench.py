@@ -235,9 +235,12 @@ def main() -> None:
     }
     bench_queries = [q for q in BENCH_QUERIES if not only or q in only]
 
-    # warm the JVM (codegen, shuffle paths, Python workers) with one
-    # pass of every query at the smallest SF — timings then measure the
-    # engine, not JIT cold-start
+    # warm the JVM (JIT, shuffle paths, Python workers) and the codegen
+    # class cache with one pass of every query at the smallest SF —
+    # timings then measure the engine, not JIT cold-start. The pass
+    # generates about 2,250 classes, so it warms codegen only because
+    # get_spark's spark.sql.codegen.cache.maxEntries holds them all: at
+    # Spark's default of 100 each query evicted the classes of the last
     warm_dir = "/root/testdata/sf0.001"
     if os.path.isdir(warm_dir) and warm_dir != sf_dir:
         for name in bench_queries:

@@ -31,6 +31,16 @@ from pydi_spark.clustering.base import apply_threshold, collect_capped, driver_s
 MAX_ROUNDS = 50  # distributed convergence cap
 
 
+def driver_order(pdf):
+    """Spark's ``orderBy(desc("score"), "id1", "id2")``: NaN scores first,
+    null ones last (``__null``: Arrow makes both NaN), null ids first."""
+    return pdf.sort_values(
+        ["__null", "score", "id1", "id2"],
+        ascending=[True, False, True, True],
+        na_position="first",
+    )
+
+
 @dataclass
 class GreedyOneToOneMatcher:
     threshold: float | None = None
@@ -41,11 +51,11 @@ class GreedyOneToOneMatcher:
         if small:
             # Arrow-batched transfer (core.arrowio): the sweep is
             # output-sized by design, but py4j row pickling still
-            # dominated at 1e5+ correspondences. toPandas preserves the
-            # global sort.
+            # dominated at 1e5+ correspondences. Sorted on the driver:
+            # a Spark orderBy costs a sampling job and an exchange.
             pdf = collect_capped(
-                corr.select("id1", "id2", "score").orderBy(
-                    F.desc("score"), "id1", "id2"
+                corr.select(
+                    "id1", "id2", "score", F.col("score").isNull().alias("__null")
                 )
             )
             if pdf is not None:
@@ -54,23 +64,19 @@ class GreedyOneToOneMatcher:
 
     @staticmethod
     def _sweep(corr: DataFrame, pdf) -> DataFrame:
-        import pandas as pd
-
         from pydi_spark.core.arrowio import pandas_to_df
 
+        pdf = driver_order(pdf)
         used1: set = set()
         used2: set = set()
         kept = []
         for a, b in zip(pdf["id1"].tolist(), pdf["id2"].tolist()):
-            if a in used1 or b in used2:
-                continue
-            used1.add(a)
-            used2.add(b)
-            kept.append((a, b))
+            kept.append(a not in used1 and b not in used2)
+            if kept[-1]:
+                used1.add(a)
+                used2.add(b)
         out = pandas_to_df(
-            corr.sparkSession,
-            pd.DataFrame(kept, columns=["id1", "id2"]),
-            "id1 string, id2 string",
+            corr.sparkSession, pdf.loc[kept, ["id1", "id2"]], "id1 string, id2 string"
         )
         return corr.join(out, ["id1", "id2"], "left_semi")
 

@@ -7,8 +7,8 @@ build term vectors (term_frequencies | binary_occurrence | tfidf,
 threshold.
 
 Spark shape: the per-column profiles come from ONE distributed pass per
-table (sample -> explode tokens -> count); the similarity matrix over a
-few hundred small vectors is driver-side math.
+table (one sample -> explode (column, value) cells and tokens -> count);
+the similarity matrix over a few hundred small vectors is driver math.
 """
 
 from __future__ import annotations
@@ -22,31 +22,6 @@ from pyspark.sql import functions as F
 
 from pydi_spark.core.dataset import Dataset, as_dataframe
 from pydi_spark.schemamatching.base import build_mapping, dataset_name, schema_columns
-
-
-def _column_term_counts(
-    df: DataFrame, columns: list[str], sample_size: int
-) -> dict[str, Counter]:
-    """One distributed pass: stack sampled columns long, token counts."""
-    total = df.count()
-    if total > sample_size:
-        df = df.sample(fraction=min(1.0, sample_size * 1.2 / total), seed=42).limit(
-            sample_size
-        )
-    stacked = None
-    for c in columns:
-        part = df.select(
-            F.lit(c).alias("col"),
-            F.explode(
-                F.split(F.lower(F.trim(F.col(c).cast("string"))), r"[^\p{L}\p{N}]+")
-            ).alias("term"),
-        ).where(F.col("term") != "")
-        stacked = part if stacked is None else stacked.unionByName(part)
-    counts = stacked.groupBy("col", "term").count().collect()
-    out: dict[str, Counter] = {c: Counter() for c in columns}
-    for r in counts:
-        out[r["col"]][r["term"]] = r["count"]
-    return out
 
 
 def _vector(counts: Counter, method: str, idf: dict[str, float] | None) -> dict[str, float]:
@@ -84,30 +59,45 @@ class InstanceBasedSchemaMatcher:
     max_sample_size: int = 1000
     min_non_null_ratio: float = 0.1
 
+    def _term_counts(self, df: DataFrame, columns: list[str]) -> dict[str, Counter]:
+        """Token counts of the columns that pass the completeness filter
+        (reference min_non_null_ratio). One aggregate gives the non-null
+        counts and the sampling total; one pass samples the table once
+        and explodes the kept columns as ``(col, v)`` cells."""
+        row = df.agg(
+            F.count("*").alias("__n"), *[F.count(F.col(c)).alias(c) for c in columns]
+        ).collect()[0]
+        total, n = row["__n"], self.max_sample_size
+        out: dict[str, Counter] = {
+            c: Counter()
+            for c in columns
+            if (row[c] or 0) / (total or 1) >= self.min_non_null_ratio
+        }
+        if not out:
+            return out
+        if total > n:
+            df = df.sample(fraction=min(1.0, n * 1.2 / total), seed=42).limit(n)
+        cells = F.array(
+            *[F.struct(F.lit(c).alias("col"), F.col(c).cast("string").alias("v"))
+              for c in out]
+        )
+        terms = df.select(F.explode(cells).alias("cell")).select(
+            "cell.col",
+            F.explode(F.split(F.lower(F.trim("cell.v")), r"[^\p{L}\p{N}]+")).alias("t"),
+        )
+        for r in terms.where("t != ''").groupBy("col", "t").count().collect():
+            out[r["col"]][r["t"]] = r["count"]
+        return out
+
     def match(
         self,
         source: Dataset | DataFrame,
         target: Dataset | DataFrame,
         threshold: float = 0.5,
     ) -> DataFrame:
-        sdf, tdf = as_dataframe(source), as_dataframe(target)
-        s_cols = [c for c, t in sdf.dtypes if c in schema_columns(source)]
-        t_cols = [c for c, t in tdf.dtypes if c in schema_columns(target)]
-
-        # completeness filter (reference min_non_null_ratio)
-        def keep(df, cols):
-            if not cols:
-                return cols
-            row = df.agg(
-                F.count("*").alias("__n"),
-                *[F.count(F.col(c)).alias(c) for c in cols],
-            ).collect()[0]
-            n = row["__n"] or 1
-            return [c for c in cols if (row[c] or 0) / n >= self.min_non_null_ratio]
-
-        s_cols, t_cols = keep(sdf, s_cols), keep(tdf, t_cols)
-        s_counts = _column_term_counts(sdf, s_cols, self.max_sample_size)
-        t_counts = _column_term_counts(tdf, t_cols, self.max_sample_size)
+        sdf = as_dataframe(source)
+        s_counts = self._term_counts(sdf, schema_columns(source))
+        t_counts = self._term_counts(as_dataframe(target), schema_columns(target))
 
         idf = None
         if self.vector_creation_method == "tfidf":
@@ -123,9 +113,9 @@ class InstanceBasedSchemaMatcher:
         ]
         s_name, t_name = dataset_name(source, "source"), dataset_name(target, "target")
         rows = []
-        for sc in s_cols:
+        for sc in s_counts:
             va = _vector(s_counts[sc], self.vector_creation_method, idf)
-            for tc in t_cols:
+            for tc in t_counts:
                 vb = _vector(t_counts[tc], self.vector_creation_method, idf)
                 rows.append(
                     (s_name, sc, t_name, tc, float(sim(va, vb)), "instance_based")

@@ -141,4 +141,10 @@ ROTATION_QUEUE: set[str] = {
     "text_decontaminate",
     "text_line_dedup",
     "text_novelty",
+    # InstanceBasedSchemaMatcher samples once per table and
+    # GreedyOneToOneMatcher sorts its collected pairs on the driver. An
+    # instrumented run of every queries() entry at sf0.001 found two
+    # that reach either: schema_instance_based and
+    # cluster_greedy_one_to_one, both queued above. get_spark's larger
+    # codegen cache reaches every entry but changes no output.
 }

@@ -127,6 +127,44 @@ def test_greedy_one_to_one(spark):
     assert len(ids1) == len(set(ids1)) and len(ids2) == len(set(ids2))
 
 
+def test_greedy_driver_order_matches_spark_order_by(spark):
+    """The sweep's driver-side sort reproduces the Spark orderBy it
+    replaced: score descending with NaN first and nulls last, then id1
+    and id2 ascending with nulls first — on ties, NaN, null scores and
+    null ids."""
+    import math
+
+    from pyspark.sql import functions as F
+
+    from pydi_spark.clustering.greedy_one_to_one import driver_order
+    from pydi_spark.core.arrowio import collect_pandas
+
+    nan = float("nan")
+    rows = [
+        ("b", "y", 0.5), ("a", "y", 0.5), ("a", "x", 0.5), (None, "x", 0.5),
+        ("a", None, 0.5), (None, None, 0.5), ("c", "z", nan), ("a", "z", nan),
+        ("c", "w", None), (None, "w", None), ("a", "w", None), ("d", "v", 1.0),
+        ("d", "u", -0.0), ("e", "u", 0.0), ("e", "v", float("inf")),
+        ("f", "t", float("-inf")), ("a", "x", 0.5), ("é", "s", 0.25),
+        ("z", "s", 0.25), ("Z", "s", 0.25),
+    ]
+    corr = spark.createDataFrame(rows, "id1 string, id2 string, score double")
+
+    def key(id1, id2, score, null):
+        s = "null" if null else ("nan" if math.isnan(score) else score)
+        return (id1, id2, s)
+
+    want = [
+        key(r["id1"], r["id2"], r["score"], r["score"] is None)
+        for r in corr.orderBy(F.desc("score"), "id1", "id2").collect()
+    ]
+    pdf = driver_order(collect_pandas(
+        corr.select("id1", "id2", "score", F.col("score").isNull().alias("__null"))
+    ))
+    got = [key(*t) for t in zip(pdf["id1"], pdf["id2"], pdf["score"], pdf["__null"])]
+    assert got == want
+
+
 def test_bipartite_beats_greedy_total_weight(spark):
     corr = spark.createDataFrame(
         [("l1", "r1", 0.9), ("l2", "r1", 0.95), ("l2", "r2", 0.94)],
