@@ -20,9 +20,10 @@ place that collects for a driver solver:
   count; a collect past the row cap or refused by the driver returns
   None and the caller runs its distributed path, which gives the same
   output.
-- ``collect_solver_rows``: the bounded collect for the driver-only
-  solvers (hierarchical, bipartite, centre), which refuse loudly past
-  ``DRIVER_SOLVE_ROW_CAP`` before the rows reach the driver.
+- ``collect_solver_rows``: the bounded collect (``core.plansize.
+  collect_bounded``) for the driver-only solvers (hierarchical,
+  bipartite, centre), which refuse loudly past its row cap before the
+  rows reach the driver.
 - ``union_find``: the one union-by-min used by every driver-side and
   partition-local component computation.
 """
@@ -32,7 +33,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from pydi_spark.core.plansize import fits_estimate
+from pydi_spark.core import plansize
 
 # A frame whose Catalyst size estimate is under this goes to the driver
 # with no gating job. 64 MiB of edge rows (~3M edges) stays well inside
@@ -49,10 +50,6 @@ DRIVER_EDGE_LIMIT = 5_000_000
 # holds the union-find dict. spark.driver.maxResultSize remains the
 # transfer-level backstop.
 DRIVER_COLLECT_ROW_CAP = 50_000_000
-# Rows a driver-only solver accepts (the hierarchical merge loop is
-# O(n^3) Python by reference contract — far beyond this it would never
-# finish anyway).
-DRIVER_SOLVE_ROW_CAP = 1_000_000
 
 
 def apply_threshold(corr: DataFrame, threshold: float | None) -> DataFrame:
@@ -81,10 +78,12 @@ def driver_sized(df: DataFrame) -> tuple[DataFrame, bool]:
     The free Catalyst size estimate decides first. Derived frames
     (joins, LogicalRDD, mapInPandas) estimate as huge; those are
     checkpointed — so the collect or the distributed path that follows
-    does not recompute their lineage — and counted exactly in the JVM."""
-    if fits_estimate(df, DRIVER_SAFE_BYTES):
+    does not recompute their lineage — and counted exactly in the JVM.
+    The checkpoint is lazy: the count is the job that materializes it
+    (an eager one would run a count job of its own first)."""
+    if plansize.fits_estimate(df, DRIVER_SAFE_BYTES):
         return df, True
-    df = df.localCheckpoint(eager=True)
+    df = df.localCheckpoint(eager=False)
     return df, df.count() <= DRIVER_EDGE_LIMIT
 
 
@@ -108,13 +107,12 @@ def collect_capped(df: DataFrame):
 
 
 def collect_solver_rows(df: DataFrame, solver: str) -> list:
-    """Rows of ``df`` (in its order) for a driver-only solver. At most
-    ``DRIVER_SOLVE_ROW_CAP + 1`` rows are collected; one past the cap
-    raises ValueError."""
-    rows = df.limit(DRIVER_SOLVE_ROW_CAP + 1).collect()
-    if len(rows) > DRIVER_SOLVE_ROW_CAP:
+    """Rows of ``df`` (in its order) for a driver-only solver; more than
+    ``plansize.DRIVER_SOLVE_ROW_CAP`` raises ValueError."""
+    rows = plansize.collect_bounded(df)
+    if rows is None:
         raise ValueError(
-            f"{solver}: more than {DRIVER_SOLVE_ROW_CAP} correspondence "
+            f"{solver}: more than {plansize.DRIVER_SOLVE_ROW_CAP} correspondence "
             "rows exceed the driver-side solver limit — pre-threshold the "
             "correspondences to shrink the graph"
         )

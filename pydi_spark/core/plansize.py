@@ -25,6 +25,11 @@ from pyspark.sql import DataFrame, SparkSession
 # input sized, while a derived table's own estimate is wildly off after
 # explode/groupBy.
 BROADCAST_MAX_BYTES = 1 << 30  # 1 GiB
+# Rows a driver-side computation accepts from :func:`collect_bounded`
+# (the clustering layer's driver-only solvers, each side of
+# bcubed_metrics; the hierarchical merge loop is O(n^3) Python by
+# reference contract — far beyond this it would never finish anyway).
+DRIVER_SOLVE_ROW_CAP = 1_000_000
 
 
 def core_width(spark: SparkSession) -> int:
@@ -93,3 +98,11 @@ def fits_estimate(df: DataFrame, max_bytes: int) -> bool:
         return estimated_plan_bytes(df) <= max_bytes
     except Exception:
         return False
+
+
+def collect_bounded(df: DataFrame) -> list | None:
+    """Rows of ``df`` (in its order), or None when it has more than
+    ``DRIVER_SOLVE_ROW_CAP`` rows. At most one row past the cap reaches
+    the driver, so a frame of any size is safe to offer."""
+    rows = df.limit(DRIVER_SOLVE_ROW_CAP + 1).collect()
+    return rows if len(rows) <= DRIVER_SOLVE_ROW_CAP else None

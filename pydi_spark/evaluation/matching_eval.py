@@ -15,10 +15,13 @@ oracle-checkable; driver-side dict versions via ``.collect()``.
 
 from __future__ import annotations
 
+from collections import Counter
+
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from pydi_spark.core.arrowio import rows_to_df
+from pydi_spark.core.plansize import collect_bounded
 
 
 def normalize_labels_expr(col: Column) -> Column:
@@ -174,7 +177,10 @@ def evaluate_matching(
     threshold: float | None = None,
 ) -> DataFrame:
     """P/R/F1/accuracy with TP/FP/FN/TN over the *labeled* pair universe
-    (evaluation.py:415-654): TN counts labeled negatives not predicted."""
+    (evaluation.py:415-654): TN counts labeled negatives not predicted.
+    A gold pair listed more than once must carry one label: a pair
+    labelled both 1 and 0 raises ValueError (keeping either label would
+    make the confusion matrix depend on shuffle order)."""
     corr = correspondences
     if threshold is not None:
         corr = corr.where(F.col("score") >= F.lit(float(threshold)))
@@ -182,18 +188,20 @@ def evaluate_matching(
         F.col("id1").cast("string").alias("id1"),
         F.col("id2").cast("string").alias("id2"),
         normalize_labels_expr(F.col("label")).alias("label"),
-    ).where(F.col("label").isNotNull()).dropDuplicates(["id1", "id2"])
+    ).where(F.col("label").isNotNull())
 
     # r12: ONE job instead of four. tp/fn/tn/fp each ran a separate
     # semi/anti-join action, so the prediction lineage (the full
     # blocker + matcher chain) executed FOUR times. All four cells are
     # functions of the per-pair (predicted?, label) flags inside the
     # labeled universe, so a tagged union + one (id1, id2)
-    # max-aggregate computes the whole confusion matrix in a single
+    # aggregate computes the whole confusion matrix in a single
     # pass per input (predictions outside the labeled universe keep a
-    # null label and count nowhere, the reference convention; the
-    # groupBy also dedups the predicted pairs). Measured:
-    # eval_matching 8.1 -> ~2.8 s at sf0.1.
+    # null label and count nowhere, the reference convention). The
+    # groupBy also dedups the predicted and the gold pairs: min and max
+    # label differ exactly on a pair with conflicting labels, which the
+    # same pass counts and names. Measured: eval_matching 8.1 -> ~2.8 s
+    # at sf0.1.
     pred_tagged = corr.select(
         F.col("id1").cast("string").alias("id1"),
         F.col("id2").cast("string").alias("id2"),
@@ -206,15 +214,28 @@ def evaluate_matching(
     cells = (
         pred_tagged.unionByName(gold_tagged)
         .groupBy("id1", "id2")
-        .agg(F.max("__p").alias("__p"), F.max("label").alias("label"))
+        .agg(
+            F.max("__p").alias("__p"),
+            F.max("label").alias("label"),
+            F.min("label").alias("__lo"),
+        )
         .agg(
             F.sum(F.expr("CASE WHEN label = 1 AND __p = 1 THEN 1 ELSE 0 END")).alias("tp"),
             F.sum(F.expr("CASE WHEN label = 1 AND __p = 0 THEN 1 ELSE 0 END")).alias("fn"),
             F.sum(F.expr("CASE WHEN label = 0 AND __p = 0 THEN 1 ELSE 0 END")).alias("tn"),
             F.sum(F.expr("CASE WHEN label = 0 AND __p = 1 THEN 1 ELSE 0 END")).alias("fp"),
+            F.min(
+                F.when(F.col("__lo") != F.col("label"), F.struct("id1", "id2"))
+            ).alias("__conflict"),
         )
         .collect()[0]
     )
+    if cells["__conflict"] is not None:
+        id1, id2 = cells["__conflict"]
+        raise ValueError(
+            f"evaluate_matching: gold pair ({id1!r}, {id2!r}) is labelled "
+            "both 1 and 0"
+        )
     tp = int(cells["tp"] or 0)
     fn = int(cells["fn"] or 0)
     tn = int(cells["tn"] or 0)
@@ -422,37 +443,45 @@ def bcubed_metrics(
     assignment must be a PARTITION: a record in two clusters raises
     (any silent resolution would be shuffle-order dependent).
 
-    Scale: the record frame is joined once and collapsed to the
-    (pred, gold) cell table; sizes and the ppm sums are O(#cells)
-    arithmetic over it (every record in a cell shares the same
-    ratios) — nothing quadratic, no pair materialization (the whole
-    point vs pairwise metrics at 100 TB). The partition precondition
-    is FOLDED into the same pass (r8 verdict #5): per-record
-    membership counts ride the rid window that shares the join's rid
-    partitioning, the cell aggregation carries their max, and the
-    refusal reads the already-checkpointed O(#cells) table — one
-    eager action total, each input scanned once (was two extra
-    full-shuffle validation jobs before any metric work).
+    Scale: when both ``(record, cluster)`` projections fit the driver
+    (``core.plansize.collect_bounded``: one bounded collect per side,
+    no Spark distinct), the partition check, the cells and the ppm
+    sums are exact Python integers over the collected rows — a few
+    jobs instead of the distributed plan's ~15. Above the cap, the
+    record frame is joined once and collapsed to the (pred, gold) cell
+    table; sizes and the ppm sums are O(#cells) arithmetic over it
+    (every record in a cell shares the same ratios) — nothing
+    quadratic, no pair materialization (the whole point vs pairwise
+    metrics at 100 TB). The partition precondition is FOLDED into the
+    same pass (r8 verdict #5): per-record membership counts ride the
+    rid window that shares the join's rid partitioning, the cell
+    aggregation carries their max, and the refusal reads the
+    already-checkpointed O(#cells) table — one eager action total,
+    each input scanned once (was two extra full-shuffle validation
+    jobs before any metric work). Both paths give the same row.
     """
+    p = predicted.select(
+        F.col(record_col).cast("string").alias("rid"),
+        F.col(cluster_col).cast("string").alias("pc"),
+    )
+    g = gold.select(
+        F.col(record_col).cast("string").alias("rid"),
+        F.col(cluster_col).cast("string").alias("gc"),
+    )
+    p_rows = collect_bounded(p)
+    g_rows = None if p_rows is None else collect_bounded(g)
+    if g_rows is not None:
+        return rows_to_df(
+            predicted.sparkSession, [_bcubed_on_driver(p_rows, g_rows)],
+            "n_records long, precision_ppm long, recall_ppm long, f1 double",
+        )
     w = Window.partitionBy("rid")
-    p = (
-        predicted.select(
-            F.col(record_col).cast("string").alias("rid"),
-            F.col(cluster_col).cast("string").alias("pc"),
-        ).distinct()
-        # memberships per record: >1 means the assignment is not a
-        # partition (refused below, from the cell table). The window
-        # hash-partitions by rid — exactly the distribution the join
-        # needs, so no extra exchange.
-        .withColumn("npc", F.count(F.lit(1)).over(w))
-    )
-    g = (
-        gold.select(
-            F.col(record_col).cast("string").alias("rid"),
-            F.col(cluster_col).cast("string").alias("gc"),
-        ).distinct()
-        .withColumn("ngc", F.count(F.lit(1)).over(w))
-    )
+    # memberships per record: >1 means the assignment is not a
+    # partition (refused below, from the cell table). The window
+    # hash-partitions by rid — exactly the distribution the join needs,
+    # so no extra exchange.
+    p = p.distinct().withColumn("npc", F.count(F.lit(1)).over(w))
+    g = g.distinct().withColumn("ngc", F.count(F.lit(1)).over(w))
     # FULL outer: one-sided records don't enter the metric, but their
     # membership counts must still reach the violation check (the old
     # per-side eager scans covered the whole input — keep that).
@@ -478,11 +507,7 @@ def bcubed_metrics(
         )
         col = "npc" if label == "predicted" else "ngc"
         rid = side_df.where(F.col(col) > 1).limit(1).collect()[0]["rid"]
-        raise ValueError(
-            f"bcubed_metrics: record {rid!r} belongs to multiple "
-            f"clusters in the {label} assignment — BCubed is defined "
-            "over partitions, not overlapping clusterings"
-        )
+        raise _bcubed_overlap(rid, label)
     cell = cell.where(F.col("pc").isNotNull() & F.col("gc").isNotNull())
     psz = cell.groupBy("pc").agg(F.sum("c").alias("ps"))
     gsz = cell.groupBy("gc").agg(F.sum("c").alias("gs"))
@@ -523,6 +548,46 @@ def bcubed_metrics(
             "AS DOUBLE)"
         ).alias("f1"),
     )
+
+
+def _bcubed_overlap(rid, label: str) -> ValueError:
+    return ValueError(
+        f"bcubed_metrics: record {rid!r} belongs to multiple "
+        f"clusters in the {label} assignment — BCubed is defined "
+        "over partitions, not overlapping clusterings"
+    )
+
+
+def _bcubed_on_driver(p_rows: list, g_rows: list) -> tuple:
+    """bcubed_metrics' row from the collected ``(rid, cluster)`` rows of
+    each side, with the distributed plan's semantics: identical rows
+    collapse; a record (a null rid included) with two distinct clusters
+    (a null cluster included) is refused; only non-null rids on both
+    sides with non-null clusters count; floor ppm per cell, exact sums,
+    floor mean, and the F1 double chain in the same order."""
+    member = []
+    for rows, label in ((p_rows, "predicted"), (g_rows, "gold")):
+        cluster_of: dict = {}
+        for rid, c in dict.fromkeys(rows):
+            if cluster_of.setdefault(rid, c) != c:
+                raise _bcubed_overlap(rid, label)
+        member.append(cluster_of)
+    pred_of, gold_of = member
+    cells = Counter(
+        (pc, gold_of[rid]) for rid, pc in pred_of.items()
+        if rid is not None and pc is not None and gold_of.get(rid) is not None
+    )
+    ps, gs = Counter(), Counter()
+    for (pc, gc), c in cells.items():
+        ps[pc] += c
+        gs[gc] += c
+    n = sum(cells.values())
+    if not n:
+        return (0, None, None, None)
+    pr = sum(c * (c * 1_000_000 // ps[pc]) for (pc, _), c in cells.items()) // n
+    rc = sum(c * (c * 1_000_000 // gs[gc]) for (_, gc), c in cells.items()) // n
+    f1 = 0.0 if pr + rc == 0 else 2.0 * pr * rc / (pr + rc) / 1000000
+    return (n, pr, rc, f1)
 
 
 def adjusted_rand_index(

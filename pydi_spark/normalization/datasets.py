@@ -102,7 +102,7 @@ class DatasetNormalizer:
             else {}
         )
         applied: dict[str, list[str]] = {}
-        out = df
+        exprs = {}
         for c in string_cols:
             steps: list[str] = []
             col = F.col(c)
@@ -127,8 +127,11 @@ class DatasetNormalizer:
                 col = normalize_text(col)
                 steps.append("normalize_text")
             if steps:
-                out = out.withColumn(c, col)
+                exprs[c] = col
                 applied[c] = steps
+        # one projection for every rewritten column: a withColumn per
+        # column re-analyses the growing plan each time (py4j chatter)
+        out = df.withColumns(exprs) if exprs else df
         result = DatasetNormalizationResult(detected_types=detected, applied=applied)
         if isinstance(data, Dataset):
             return (

@@ -279,6 +279,7 @@ def test_driver_collect_caps(spark, monkeypatch):
     identical output) or refuse loudly (hierarchical, bipartite, centre),
     never proceed with an unbounded driver frame."""
     from pydi_spark.clustering import base
+    from pydi_spark.core import plansize
 
     edges = spark.createDataFrame(
         [("a", "b"), ("b", "c"), ("x", "y")], "id1 string, id2 string"
@@ -308,10 +309,42 @@ def test_driver_collect_caps(spark, monkeypatch):
     assert h.assign(corr).count() == 4
     assert m.cluster(corr).count() == 2
     assert c.assign(corr).count() == 4
-    monkeypatch.setattr(base, "DRIVER_SOLVE_ROW_CAP", 2)
+    monkeypatch.setattr(plansize, "DRIVER_SOLVE_ROW_CAP", 2)
     for solve in (h.assign, m.cluster, c.assign):
         with pytest.raises(ValueError, match="driver-side solver limit"):
             solve(corr)
+
+
+def test_driver_gate_counts_once_and_materializes_checkpoint(spark):
+    """A frame the size estimate cannot place (here a mapInPandas output)
+    is checkpointed and counted in 2 jobs: the count's aggregate and its
+    result stage, with no eager checkpoint's own count before them. The
+    count materializes the checkpoint, so the collect that follows does
+    not re-run the lineage (the accumulator sees every row once)."""
+    from pydi_spark.clustering.base import collect_capped, driver_sized
+
+    sc = spark.sparkContext
+    seen = sc.accumulator(0)
+
+    def tap(batches):
+        for pdf in batches:
+            seen.add(len(pdf))
+            yield pdf
+
+    edges = spark.createDataFrame(
+        [(f"a{i}", f"b{i}") for i in range(50)], "id1 string, id2 string"
+    ).mapInPandas(tap, "id1 string, id2 string")
+    group = "driver-gate-job-budget"
+    sc.setJobGroup(group, group)
+    try:
+        edges, small = driver_sized(edges)
+        jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setJobGroup(None, None)
+    assert small
+    assert jobs <= 2, jobs
+    assert len(collect_capped(edges)) == 50
+    assert seen.value == 50
 
 
 def test_driver_policy_lives_in_clustering_base():

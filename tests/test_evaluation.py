@@ -604,6 +604,109 @@ def test_bcubed_rejects_overlapping_clusters(spark):
     assert r["precision_ppm"] == 1000000
 
 
+_BCUBED_CASES = {
+    "worked_example": (
+        [("a", "p1"), ("b", "p1"), ("c", "p2"), ("d", "p2"), ("e", "p3")],
+        [("a", "g1"), ("b", "g1"), ("c", "g1"), ("d", "g2"), ("e", "g2")],
+    ),
+    # a null record id never joins; a null cluster id keeps its record
+    # out of the cells; one-sided records only reach the partition check
+    "nulls_and_one_sided": (
+        [(None, "p1"), ("a", None), ("b", "p1"), ("c", "p1"), ("d", "p2"),
+         ("x", "p9")],
+        [(None, "g1"), ("a", "g1"), ("b", "g1"), ("c", None), ("d", "g1"),
+         ("y", "g3")],
+    ),
+    "duplicate_rows_non_ascii": (
+        [("é", "ü"), ("é", "ü"), ("日本", "ü"), ("z", "ß"), ("z", "ß")],
+        [("é", "g"), ("日本", "g"), ("日本", "g"), ("z", "g")],
+    ),
+    "all_one_sided": ([("a", "p")], [("b", "g")]),
+    "empty": ([], []),
+}
+
+
+@pytest.mark.parametrize("case", sorted(_BCUBED_CASES))
+def test_bcubed_driver_and_distributed_rows_match(spark, monkeypatch, case):
+    """The driver branch (both sides within the bounded collect) and the
+    distributed cell plan give the same row. A cap of 0 refuses every
+    non-empty side; -1 refuses the empty ones too."""
+    from pydi_spark.core import plansize
+    from pydi_spark.evaluation import bcubed_metrics
+
+    schema = "record_id string, cluster_id string"
+    pred_rows, gold_rows = _BCUBED_CASES[case]
+    pred = spark.createDataFrame(pred_rows, schema)
+    gold = spark.createDataFrame(gold_rows, schema)
+    on_driver = bcubed_metrics(pred, gold).collect()
+    monkeypatch.setattr(plansize, "DRIVER_SOLVE_ROW_CAP", 0 if pred_rows else -1)
+    distributed = bcubed_metrics(pred, gold).collect()
+    assert on_driver == distributed
+    if not pred_rows:
+        assert on_driver[0]["n_records"] == 0
+        assert on_driver[0]["precision_ppm"] is None
+        assert on_driver[0]["f1"] is None
+
+
+@pytest.mark.parametrize("cap", [None, 0])
+def test_bcubed_overlap_refused_on_both_branches(spark, monkeypatch, cap):
+    """Each branch names the record and the side it belongs to: the
+    predicted side, the gold side, and a null record id in two clusters
+    (the distributed window groups null ids together)."""
+    from pydi_spark.core import plansize
+    from pydi_spark.evaluation import bcubed_metrics
+
+    if cap is not None:
+        monkeypatch.setattr(plansize, "DRIVER_SOLVE_ROW_CAP", cap)
+    schema = "record_id string, cluster_id string"
+    overlap = spark.createDataFrame(
+        [("a", "p1"), ("b", "p1"), ("b", None)], schema)
+    clean = spark.createDataFrame([("a", "g1"), ("b", "g1")], schema)
+    with pytest.raises(ValueError, match="record 'b' .* predicted"):
+        bcubed_metrics(overlap, clean)
+    with pytest.raises(ValueError, match="record 'b' .* gold"):
+        bcubed_metrics(clean, overlap)
+    null_overlap = spark.createDataFrame(
+        [(None, "p1"), (None, "p2"), ("a", "p1")], schema)
+    with pytest.raises(ValueError, match="record None .* gold"):
+        bcubed_metrics(clean, null_overlap)
+
+
+def test_bcubed_job_budget(spark):
+    """Driver-sized inputs cost one bounded collect per side: at most 4
+    jobs per call (the distributed cell plan runs about 15)."""
+    from pydi_spark.evaluation import bcubed_metrics
+
+    schema = "record_id string, cluster_id string"
+    pred = spark.createDataFrame(
+        [(str(i), f"p{i // 3}") for i in range(60)], schema).repartition(4)
+    gold = spark.createDataFrame(
+        [(str(i), f"g{i // 4}") for i in range(60)], schema).repartition(4)
+    sc = spark.sparkContext
+    group = "bcubed-job-budget"
+    sc.setJobGroup(group, group)
+    try:
+        row = bcubed_metrics(pred, gold).collect()
+        jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setJobGroup(None, None)
+    assert row[0]["n_records"] == 60
+    assert jobs <= 4, jobs
+
+
+def test_evaluate_matching_refuses_conflicting_labels(spark, labeled):
+    """A gold pair listed as both a match and a non-match has no one
+    label to count; repeats with the same label collapse to one pair."""
+    corr, gold = labeled
+    repeated = gold.unionByName(gold)
+    assert (evaluate_matching(corr, repeated, threshold=0.5).collect()
+            == evaluate_matching(corr, gold, threshold=0.5).collect())
+    conflicting = gold.unionByName(spark.createDataFrame(
+        [("c", "z", 0)], "id1 string, id2 string, label int"))
+    with pytest.raises(ValueError, match=r"\('c', 'z'\) is labelled both"):
+        evaluate_matching(corr, conflicting)
+
+
 def test_rfm_segments_hand_worked(spark):
     """8 users with strictly distinct R/F/M metrics: quartiles under
     ((rn-1)*4) div n + 1 are 2 users per tile; the segment cascade and
