@@ -78,13 +78,13 @@ def driver_sized(df: DataFrame) -> tuple[DataFrame, bool]:
     The free Catalyst size estimate decides first. Derived frames
     (joins, LogicalRDD, mapInPandas) estimate as huge; those are
     checkpointed — so the collect or the distributed path that follows
-    does not recompute their lineage — and counted exactly in the JVM.
-    The checkpoint is lazy: the count is the job that materializes it
-    (an eager one would run a count job of its own first)."""
+    does not recompute their lineage — and counted exactly in the JVM
+    (``plansize.counted``: the count is the one job that materializes
+    the lazy checkpoint)."""
     if plansize.fits_estimate(df, DRIVER_SAFE_BYTES):
         return df, True
-    df = df.localCheckpoint(eager=False)
-    return df, df.count() <= DRIVER_EDGE_LIMIT
+    df, n_rows = plansize.counted(df)
+    return df, n_rows <= DRIVER_EDGE_LIMIT
 
 
 def collect_capped(df: DataFrame):

@@ -13,6 +13,11 @@ plan's estimate, so a checkpointed frame gates like the frame it came
 from. The dedup verify joins and the embedding blocker's vector
 re-attach share one broadcast ceiling, and the clustering layer's
 driver gate (``clustering/base.py``) applies the same policy.
+
+Where a driver-or-distributed choice needs an exact row count,
+:func:`counted` gives it together with a checkpoint that either branch
+reads; :func:`collect_bounded` is the collect that stops one row past
+the solver cap.
 """
 
 from __future__ import annotations
@@ -25,11 +30,17 @@ from pyspark.sql import DataFrame, SparkSession
 # input sized, while a derived table's own estimate is wildly off after
 # explode/groupBy.
 BROADCAST_MAX_BYTES = 1 << 30  # 1 GiB
-# Rows a driver-side computation accepts from :func:`collect_bounded`
-# (the clustering layer's driver-only solvers, each side of
-# bcubed_metrics; the hierarchical merge loop is O(n^3) Python by
-# reference contract — far beyond this it would never finish anyway).
+# Rows the clustering layer's driver-only solvers accept from
+# :func:`collect_bounded` (the hierarchical merge loop is O(n^3) Python
+# by reference contract — far beyond this it would never finish anyway).
 DRIVER_SOLVE_ROW_CAP = 1_000_000
+# Rows of both cluster assignments together that bcubed_metrics takes
+# to the driver: where its driver branch and its distributed cell plan
+# take the same wall time (tools/bcubed_crossover.py, local[4] on a
+# 4-core host: 3.1 s each at 500k rows per side; the driver branch is
+# ~2x faster at 100k and ~1.4x slower at 1M per side), at about +0.28
+# KB of Python driver RSS per row.
+BCUBED_DRIVER_ROW_CAP = 1_000_000
 
 
 def core_width(spark: SparkSession) -> int:
@@ -98,6 +109,16 @@ def fits_estimate(df: DataFrame, max_bytes: int) -> bool:
         return estimated_plan_bytes(df) <= max_bytes
     except Exception:
         return False
+
+
+def counted(df: DataFrame) -> tuple[DataFrame, int]:
+    """(``df`` checkpointed lazily, its exact row count). The count is
+    one job over the checkpoint's internal rows (no aggregate, so no
+    extra AQE exchange job) and it materializes the checkpoint: whatever
+    reads the returned frame next, a collect or a distributed plan,
+    does not run ``df``'s lineage again."""
+    df = df.localCheckpoint(eager=False)
+    return df, df._jdf.queryExecution().toRdd().count()
 
 
 def collect_bounded(df: DataFrame) -> list | None:

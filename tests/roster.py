@@ -147,12 +147,13 @@ ROTATION_QUEUE: set[str] = {
     # that reach either: schema_instance_based and
     # cluster_greedy_one_to_one, both queued above. get_spark's larger
     # codegen cache reaches every entry but changes no output.
-    # bcubed_metrics computes driver-sized inputs on the driver
-    # (core/plansize.py::collect_bounded, which collect_solver_rows now
-    # calls), driver_sized's checkpoint is lazy, and evaluate_matching
-    # refuses a gold pair labelled both 1 and 0. An instrumented run of
-    # every queries() entry at sf0.001 found 30 that reach any of them:
-    # 20 sit in the driver window and the other 10 are queued above
+    # bcubed_metrics computes driver-sized inputs on the driver and
+    # driver_sized counts through core/plansize.py::counted, the solvers
+    # collect through core/plansize.py::collect_bounded, and
+    # evaluate_matching refuses a gold pair labelled both 1 and 0. An
+    # instrumented run of every queries() entry at sf0.001 found 30
+    # that reach any of them: 20 sit in the driver window and the other
+    # 10 are queued above
     # (cluster_centre, cluster_greedy_one_to_one,
     # cluster_hierarchical_avg, cluster_hierarchical_max,
     # fusion_conflict_detect, fusion_conflicts, fusion_debug,

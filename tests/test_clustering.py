@@ -317,8 +317,8 @@ def test_driver_collect_caps(spark, monkeypatch):
 
 def test_driver_gate_counts_once_and_materializes_checkpoint(spark):
     """A frame the size estimate cannot place (here a mapInPandas output)
-    is checkpointed and counted in 2 jobs: the count's aggregate and its
-    result stage, with no eager checkpoint's own count before them. The
+    is checkpointed and counted in one job over its rows, with no eager
+    checkpoint's own count and no aggregate exchange before it. The
     count materializes the checkpoint, so the collect that follows does
     not re-run the lineage (the accumulator sees every row once)."""
     from pydi_spark.clustering.base import collect_capped, driver_sized
@@ -342,7 +342,7 @@ def test_driver_gate_counts_once_and_materializes_checkpoint(spark):
     finally:
         sc.setJobGroup(None, None)
     assert small
-    assert jobs <= 2, jobs
+    assert jobs <= 1, jobs
     assert len(collect_capped(edges)) == 50
     assert seen.value == 50
 

@@ -628,9 +628,9 @@ _BCUBED_CASES = {
 
 @pytest.mark.parametrize("case", sorted(_BCUBED_CASES))
 def test_bcubed_driver_and_distributed_rows_match(spark, monkeypatch, case):
-    """The driver branch (both sides within the bounded collect) and the
-    distributed cell plan give the same row. A cap of 0 refuses every
-    non-empty side; -1 refuses the empty ones too."""
+    """The driver branch (both sides together within the row cap) and
+    the distributed cell plan give the same row. A cap of 0 refuses
+    every non-empty input; -1 refuses the empty one too."""
     from pydi_spark.core import plansize
     from pydi_spark.evaluation import bcubed_metrics
 
@@ -639,7 +639,7 @@ def test_bcubed_driver_and_distributed_rows_match(spark, monkeypatch, case):
     pred = spark.createDataFrame(pred_rows, schema)
     gold = spark.createDataFrame(gold_rows, schema)
     on_driver = bcubed_metrics(pred, gold).collect()
-    monkeypatch.setattr(plansize, "DRIVER_SOLVE_ROW_CAP", 0 if pred_rows else -1)
+    monkeypatch.setattr(plansize, "BCUBED_DRIVER_ROW_CAP", 0 if pred_rows else -1)
     distributed = bcubed_metrics(pred, gold).collect()
     assert on_driver == distributed
     if not pred_rows:
@@ -657,7 +657,7 @@ def test_bcubed_overlap_refused_on_both_branches(spark, monkeypatch, cap):
     from pydi_spark.evaluation import bcubed_metrics
 
     if cap is not None:
-        monkeypatch.setattr(plansize, "DRIVER_SOLVE_ROW_CAP", cap)
+        monkeypatch.setattr(plansize, "BCUBED_DRIVER_ROW_CAP", cap)
     schema = "record_id string, cluster_id string"
     overlap = spark.createDataFrame(
         [("a", "p1"), ("b", "p1"), ("b", None)], schema)
@@ -672,9 +672,39 @@ def test_bcubed_overlap_refused_on_both_branches(spark, monkeypatch, cap):
         bcubed_metrics(clean, null_overlap)
 
 
+@pytest.mark.parametrize("cap", [None, 35])
+def test_bcubed_runs_each_input_lineage_once(spark, monkeypatch, cap):
+    """Whichever branch runs, each side's lineage is computed once: the
+    counted checkpoint feeds the driver collect and the cell plan alike.
+    At a cap of 35 the 30 predicted rows alone would fit and the 70 of
+    both sides do not: a per-side collect that fitted the predicted
+    side and then fell back would run its lineage a second time."""
+    from pydi_spark.core import plansize
+    from pydi_spark.evaluation import bcubed_metrics
+
+    if cap is not None:
+        monkeypatch.setattr(plansize, "BCUBED_DRIVER_ROW_CAP", cap)
+    sc = spark.sparkContext
+    seen = sc.accumulator(0)
+
+    def tap(batches):
+        for pdf in batches:
+            seen.add(len(pdf))
+            yield pdf
+
+    schema = "record_id string, cluster_id string"
+    pred = spark.createDataFrame(
+        [(str(i), f"p{i // 3}") for i in range(30)], schema).mapInPandas(tap, schema)
+    gold = spark.createDataFrame(
+        [(str(i), f"g{i // 5}") for i in range(40)], schema).mapInPandas(tap, schema)
+    assert bcubed_metrics(pred, gold).collect()[0]["n_records"] == 30
+    assert seen.value == 70
+
+
 def test_bcubed_job_budget(spark):
-    """Driver-sized inputs cost one bounded collect per side: at most 4
-    jobs per call (the distributed cell plan runs about 15)."""
+    """Driver-sized inputs cost their own shuffles, one count and one
+    Arrow collect: at most 4 jobs per call here (the distributed cell
+    plan runs about 15)."""
     from pydi_spark.evaluation import bcubed_metrics
 
     schema = "record_id string, cluster_id string"
