@@ -9,7 +9,8 @@ reference supports injecting a custom embedder / precomputed embeddings
 Spark has no native ANN operator; two strategies:
 
 - ``method='brute'``: collect the right-side matrix to the driver (at
-  most ``BRUTE_MAX_ROWS`` rows; more is refused), broadcast it, and run
+  most ``core.plansize.BRUTE_MAX_ROWS`` rows, decided by the driver
+  gate's one exact count; more is refused), broadcast it, and run
   chunked numpy matmul top-k per Arrow batch of the left side via
   ``mapInPandas``. Exact results (same regime as a broadcast join).
 - ``method='lsh'``: random-hyperplane signatures (seeded, deterministic),
@@ -54,11 +55,6 @@ PAIR_SCHEMA = StructType(
         StructField("score", DoubleType()),
     ]
 )
-
-# Most right-side rows the brute path collects to the driver: 'auto'
-# routes anything larger to LSH, a forced 'brute' refuses it.
-BRUTE_MAX_ROWS = 100_000
-
 
 def sentence_transformer_embedder(
     model_name: str = "all-MiniLM-L6-v2", **kwargs
@@ -154,19 +150,10 @@ class EmbeddingBlocker:
         return m / n
 
     # -- exact top-k via broadcast right matrix -----------------------
-    def _brute(self, l: DataFrame, r: DataFrame) -> DataFrame:
+    def _brute(self, l: DataFrame, table) -> DataFrame:
         spark = l.sparkSession
-        # one row past the cap tells "at the cap" from "over it" without
-        # a separate count
-        rows = r.limit(BRUTE_MAX_ROWS + 1).collect()
-        if len(rows) > BRUTE_MAX_ROWS:
-            raise ValueError(
-                f"EmbeddingBlocker(method='brute'): the right side has more "
-                f"than {BRUTE_MAX_ROWS} rows, too many to collect to the "
-                "driver; use method='lsh' or 'auto'"
-            )
-        r_ids = np.array([row["rid"] for row in rows], dtype=object)
-        r_mat = np.array([row["vec"] for row in rows], dtype=np.float32)
+        r_ids = np.array(table.column("rid").to_pylist(), dtype=object)
+        r_mat = np.array(table.column("vec").to_pylist(), dtype=np.float32)
         if self.normalize or self.metric == "cosine":
             r_mat = self._normalize_rows(r_mat)
         bc = spark.sparkContext.broadcast((r_ids, r_mat))
@@ -318,15 +305,27 @@ class EmbeddingBlocker:
         pairs = self.block(sampled, left if self_join else right, id_column)
         return int(pairs.count() * (n_left / n_sampled))
 
-    def _resolve_method(self, right_df: DataFrame) -> str:
-        """'auto' switches on the right-side row count: 'brute' collects
-        the right matrix to the driver (broadcast-join regime only), so
-        anything above ``BRUTE_MAX_ROWS`` routes to the distributed LSH
-        path. A parquet-backed count is metadata-only; the threshold is a
-        row count because the collected matrix is rows x dim floats."""
-        if self.method != "auto":
-            return self.method
-        return "brute" if right_df.count() <= BRUTE_MAX_ROWS else "lsh"
+    def _resolve_method(self, r: DataFrame):
+        """(method, right vectors, their rows as Arrow or None). 'brute'
+        collects the right matrix to the driver (broadcast-join regime
+        only), so 'auto' and 'brute' offer it to the driver gate
+        (``plansize.driver_table``): one exact count decides both, the
+        collect reads its checkpoint, and so does the LSH path 'auto'
+        takes past ``plansize.BRUTE_MAX_ROWS``, where a forced 'brute'
+        refuses. The cap is a row count because the collected matrix is
+        rows x dim floats. 'lsh' takes no action here."""
+        if self.method not in ("auto", "brute"):
+            return self.method, r, None
+        r, table = plansize.driver_table(r, plansize.BRUTE_MAX_ROWS)
+        if table is not None:
+            return "brute", r, table
+        if self.method == "brute":
+            raise ValueError(
+                f"EmbeddingBlocker(method='brute'): the right side has more "
+                f"than {plansize.BRUTE_MAX_ROWS} rows, too many to collect to "
+                "the driver; use method='lsh' or 'auto'"
+            )
+        return "lsh", r, None
 
     # -- public -------------------------------------------------------
     def block(
@@ -338,9 +337,11 @@ class EmbeddingBlocker:
         self_join = right is None or right is left
         dl, idl = resolve_side(left, id_column)
         dr, idr = resolve_side(left if self_join else right, id_column)
-        l = self._with_vectors(dl, idl)
         r = self._with_vectors(dr, idr)
-        method = self._resolve_method(dr)
+        method, r, table = self._resolve_method(r)
+        # a self-join's two sides are the same vectors: read the gate's
+        # checkpoint instead of embedding the side again
+        l = r if self_join else self._with_vectors(dl, idl)
         if method == "lsh" and self.text_column and not self.vector_column:
             # the LSH path reads each side twice (signatures + vector
             # re-attach); embedding on the fly with a real model is far
@@ -350,10 +351,11 @@ class EmbeddingBlocker:
             # storage leaked across repeated block() calls in long-lived
             # sessions — while checkpoint blocks are freed by the
             # ContextCleaner once the frame is unreferenced.
-            l = l.localCheckpoint(eager=True)
-            r = l if self_join else r.localCheckpoint(eager=True)
+            if self.method == "lsh":  # not yet checkpointed by the gate
+                r = r.localCheckpoint(eager=True)
+            l = r if self_join else l.localCheckpoint(eager=True)
         if method == "brute":
-            pairs = self._brute(l, r)
+            pairs = self._brute(l, table)
         elif method == "lsh":
             head = l.select("vec").where(F.col("vec").isNotNull()).first()
             if head is None:

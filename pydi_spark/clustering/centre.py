@@ -4,7 +4,9 @@ Reference: CentreClusterer (PyDI/entitymatching/post_clustering/
 centre_clusterer.py:19-250): scan edges desc by score; the first
 unassigned endpoint becomes a star center, the other endpoint joins its
 cluster; diameter <= 2. Sequential greedy -> driver-side sweep on the
-collected (output-sized) correspondence set, deterministic tie-breaks.
+collected (output-sized) correspondence set, sorted on the driver in
+greedy 1:1's order (score desc with NaN first and nulls last, then
+id1, id2), deterministic tie-breaks.
 """
 
 from __future__ import annotations
@@ -13,8 +15,10 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
 
-from pydi_spark.clustering.base import apply_threshold, collect_solver_rows
+from pydi_spark.clustering.base import apply_threshold
+from pydi_spark.clustering.greedy_one_to_one import driver_order
 from pydi_spark.core.arrowio import rows_to_df
+from pydi_spark.core.plansize import collect_solver_rows
 
 
 @dataclass
@@ -24,16 +28,13 @@ class CentreClusterer:
 
     def assign(self, correspondences: DataFrame) -> DataFrame:
         corr = apply_threshold(correspondences, self.threshold)
-        rows = collect_solver_rows(
-            corr.select("id1", "id2", "score").orderBy(
-                ["score", "id1", "id2"], ascending=[False, True, True]
-            ),
-            "CentreClusterer",
+        _, table = collect_solver_rows(
+            corr.select("id1", "id2", "score"), "CentreClusterer"
         )
+        pdf = driver_order(table)
         assignment: dict[str, str] = {}
         is_center: set[str] = set()
-        for r in rows:
-            a, b = r["id1"], r["id2"]
+        for a, b in zip(pdf["id1"].tolist(), pdf["id2"].tolist()):
             if a not in assignment and b not in assignment:
                 assignment[a] = a
                 is_center.add(a)

@@ -23,9 +23,9 @@ one-row checksum aggregate (count + sum of hashes), not an expensive
 set-difference join; ``localCheckpoint`` cuts lineage each round.
 
 Driver-sized graphs skip the rounds: ``strategy='auto'`` offers the
-edges, then their partition-local contraction forest, to the
-clustering layer's driver gate (``clustering/base.py``) and solves the
-first one it accepts with the driver union-find.
+edges, then their partition-local contraction forest, to the driver
+gate (``core/plansize.py::driver_table``) and solves the first one it
+accepts with the driver union-find.
 """
 
 from __future__ import annotations
@@ -37,11 +37,10 @@ from pyspark.sql import functions as F
 
 from pydi_spark.clustering.base import (
     apply_threshold,
-    collect_capped,
-    driver_sized,
     filter_min_cluster_size,
     union_find,
 )
+from pydi_spark.core import plansize
 
 # convergence can't happen in the first couple of rounds on any
 # non-star graph — the checksum job is skipped there
@@ -84,15 +83,17 @@ def _build_forest(edges: DataFrame) -> DataFrame:
     return edges.mapInPandas(_local_forest, "id1 string, id2 string")
 
 
-def _driver_components(spark, pdf) -> DataFrame:
-    """Driver union-find over collected edge rows -> assignments. The
-    roots are the component minima whatever the edge order, so raw
-    edges and their forest give identical output."""
+def _driver_components(spark, table) -> DataFrame:
+    """Driver union-find over a collected Arrow edge table ->
+    assignments. The roots are the component minima whatever the edge
+    order, so raw edges and their forest give identical output."""
     import pandas as pd
 
     from pydi_spark.core.arrowio import pandas_to_df
 
-    roots = union_find(zip(pdf["id1"].tolist(), pdf["id2"].tolist()))
+    roots = union_find(
+        zip(table.column("id1").to_pylist(), table.column("id2").to_pylist())
+    )
     out = pd.DataFrame(
         {"record_id": list(roots), "cluster_id": list(roots.values())}
     )
@@ -113,12 +114,12 @@ def connected_components(
 
     strategy:
     - 'auto' (default): the edges go through the driver gate
-      (``base.driver_sized``: size estimate, else checkpoint and exact
-      JVM count) and, if it accepts them, the capped collect to the
-      driver union-find. A larger edge set or a refused collect builds
-      the partition-local mapInPandas forest (a Python-worker stage;
-      <= #nodes rows, same components) and offers it to the same gate;
-      past that the forest starts the distributed rounds.
+      (``plansize.driver_table``: checkpoint, exact JVM count, Arrow
+      collect) to the driver union-find. A larger edge set or a
+      refused collect builds the partition-local mapInPandas forest (a
+      Python-worker stage; <= #nodes rows, same components) and offers
+      it to the same gate; past that the forest starts the distributed
+      rounds.
     - 'distributed': the forest, then large-star/small-star rounds —
       unbounded scale.
 
@@ -146,11 +147,9 @@ def connected_components(
         for contract in (False, True):
             if contract:
                 edges = _build_forest(edges)
-            edges, small = driver_sized(edges)
-            if small:
-                pdf = collect_capped(edges)
-                if pdf is not None:
-                    return _driver_components(spark, pdf)
+            edges, table = plansize.driver_table(edges, plansize.DRIVER_EDGE_LIMIT)
+            if table is not None:
+                return _driver_components(spark, table)
     nodes = (
         edges.select(F.col("id1").alias("node"))
         .unionByName(edges.select(F.col("id2").alias("node")))

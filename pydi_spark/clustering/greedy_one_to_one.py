@@ -14,9 +14,9 @@ edges accepted each round are exactly the edges the sequential sweep
 accepts (the classic parallel-greedy equivalence; the local oracle for
 cluster_greedy_one_to_one replays the same iteration in SQL), so run to
 convergence the two agree. ``cluster`` runs the exact sweep when the
-clustering layer's driver gate (``clustering/base.py``) accepts the
-correspondence set and its capped collect succeeds; otherwise — above
-~5M correspondences — the distributed epochs.
+driver gate (``core/plansize.py::driver_table``) accepts the
+correspondence set; otherwise — above ~5M correspondences, or when the
+driver refuses the transfer — the distributed epochs.
 """
 
 from __future__ import annotations
@@ -26,14 +26,19 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from pydi_spark.clustering.base import apply_threshold, collect_capped, driver_sized
+from pydi_spark.clustering.base import apply_threshold
+from pydi_spark.core import plansize
 
 MAX_ROUNDS = 50  # distributed convergence cap
 
 
-def driver_order(pdf):
-    """Spark's ``orderBy(desc("score"), "id1", "id2")``: NaN scores first,
-    null ones last (``__null``: Arrow makes both NaN), null ids first."""
+def driver_order(table):
+    """Arrow ``[id1, id2, score, ...]`` -> pandas ``[id1, id2, score,
+    __null]`` in Spark's ``orderBy(desc("score"), "id1", "id2")`` order:
+    NaN scores first, null ones last (``__null`` is the Arrow null mask:
+    pandas makes both NaN), null ids first."""
+    pdf = table.select(["id1", "id2", "score"]).to_pandas()
+    pdf["__null"] = table.column("score").is_null().to_numpy(zero_copy_only=False)
     return pdf.sort_values(
         ["__null", "score", "id1", "id2"],
         ascending=[True, False, True, True],
@@ -47,26 +52,20 @@ class GreedyOneToOneMatcher:
 
     def cluster(self, correspondences: DataFrame) -> DataFrame:
         corr = apply_threshold(correspondences, self.threshold)
-        corr, small = driver_sized(corr)
-        if small:
-            # Arrow-batched transfer (core.arrowio): the sweep is
-            # output-sized by design, but py4j row pickling still
-            # dominated at 1e5+ correspondences. Sorted on the driver:
-            # a Spark orderBy costs a sampling job and an exchange.
-            pdf = collect_capped(
-                corr.select(
-                    "id1", "id2", "score", F.col("score").isNull().alias("__null")
-                )
-            )
-            if pdf is not None:
-                return self._sweep(corr, pdf)
+        # Arrow transfer: the sweep is output-sized by design, but py4j
+        # row pickling still dominated at 1e5+ correspondences. Sorted
+        # on the driver: a Spark orderBy costs a sampling job and an
+        # exchange.
+        corr, table = plansize.driver_table(corr, plansize.DRIVER_EDGE_LIMIT)
+        if table is not None:
+            return self._sweep(corr, table)
         return self._distributed(corr)
 
     @staticmethod
-    def _sweep(corr: DataFrame, pdf) -> DataFrame:
+    def _sweep(corr: DataFrame, table) -> DataFrame:
         from pydi_spark.core.arrowio import pandas_to_df
 
-        pdf = driver_order(pdf)
+        pdf = driver_order(table)
         used1: set = set()
         used2: set = set()
         kept = []

@@ -16,8 +16,8 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
 
-from pydi_spark.clustering.base import collect_solver_rows
 from pydi_spark.core.arrowio import rows_to_df
+from pydi_spark.core.plansize import collect_solver_rows
 
 
 @dataclass
@@ -29,10 +29,11 @@ class HierarchicalClusterer:
     def assign(self, correspondences: DataFrame) -> DataFrame:
         if self._cc_equivalent(correspondences):
             return self._assign_via_components(correspondences)
-        rows = collect_solver_rows(
+        _, table = collect_solver_rows(
             correspondences.select("id1", "id2", "score"),
             f"HierarchicalClusterer({self.linkage})",
         )
+        rows = table.to_pylist()
         nodes = sorted({r["id1"] for r in rows} | {r["id2"] for r in rows})
         sims: dict[frozenset, float] = {}
         for r in rows:

@@ -13,12 +13,9 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
 
-from pydi_spark.clustering.base import (
-    apply_threshold,
-    collect_solver_rows,
-    union_find,
-)
+from pydi_spark.clustering.base import apply_threshold, union_find
 from pydi_spark.core.arrowio import rows_to_df
+from pydi_spark.core.plansize import collect_solver_rows
 
 
 @dataclass
@@ -26,18 +23,15 @@ class MaximumBipartiteMatcher:
     threshold: float | None = None
 
     def cluster(self, correspondences: DataFrame) -> DataFrame:
-        # r12: corr is consumed twice (the driver-side collect AND the
-        # final left_semi re-attach) — without materialization the
-        # whole upstream correspondence construction re-runs for the
-        # second consumer (the cluster_max_bipartite plan re-read its
-        # input 48 times). Output-sized by SURVEY §4.3, so the
-        # checkpoint is small.
-        corr = apply_threshold(correspondences, self.threshold).localCheckpoint(
-            eager=True
+        # corr is consumed twice (the driver-side collect AND the final
+        # left_semi re-attach): the gate's checkpoint serves both, so
+        # the upstream correspondence construction runs once (without
+        # it the cluster_max_bipartite plan re-read its input 48 times).
+        corr, table = collect_solver_rows(
+            apply_threshold(correspondences, self.threshold),
+            "MaximumBipartiteMatcher",
         )
-        rows = collect_solver_rows(
-            corr.select("id1", "id2", "score"), "MaximumBipartiteMatcher"
-        )
+        rows = table.select(["id1", "id2", "score"]).to_pylist()
         if not rows:
             return corr.limit(0)
         left_ids = sorted({r["id1"] for r in rows})

@@ -1,16 +1,19 @@
-"""Arrow-backed driver transfers for the deliberate driver-side stages.
+"""Arrow-backed frames built on the driver for the deliberate
+driver-side stages.
 
 The engine's few driver-side algorithms (driver-sized connected
-components, exact greedy 1:1, the bounded driver solvers — all behind
-the clustering layer's size gate) and its one-row report frames move driver-sized tables
-driver-ward and back. ``createDataFrame(list)`` parallelizes the
-pickled rows into an RDD, so every consumer pays a Python-worker stage:
+components, exact greedy 1:1, BCubed, the bounded driver solvers) take
+their input through ``core/plansize.py::driver_table`` (an Arrow
+collect behind an exact count) and, like the one-row report frames,
+send their driver-sized results back. ``createDataFrame(list)``
+parallelizes the pickled rows into an RDD, so every consumer pays a
+Python-worker stage:
 about 1.6 s of CPU for a one-row frame on a 4-core host (NOTES.md,
 "Python-worker stages on driver-sized data").
 ``rows_to_df`` builds the same frame as an Arrow ``LocalRelation``
-instead — no job, no worker. ``toPandas()`` / ``createDataFrame(pandas)``
-stream Arrow batches; the conf is runtime-settable, so these helpers
-force it on for the call and restore the session state — the driver's
+instead — no job, no worker. ``createDataFrame(pandas)`` streams Arrow
+batches; the conf is runtime-settable, so ``pandas_to_df`` forces it
+on for the call and restores the session state — the driver's
 unconfigured (vanilla) session gets the fast path too.
 """
 
@@ -45,12 +48,6 @@ class _arrow_on:
                 pass
         else:
             self.spark.conf.set(_ARROW_CONF, self.old)
-
-
-def collect_pandas(df: DataFrame) -> pd.DataFrame:
-    """Arrow-batched ``toPandas`` regardless of session configuration."""
-    with _arrow_on(df.sparkSession):
-        return df.toPandas()
 
 
 def rows_to_df(

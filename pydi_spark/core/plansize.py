@@ -1,28 +1,43 @@
-"""Partition widths and broadcast pins: the two physical choices the
-join and aggregate operators share. Every explicit width is
+"""Partition widths, broadcast pins and driver collects: the physical
+choices the operators share. Every explicit width is
 :func:`core_width` (spread work over the cores; :func:`widen`) or, for
 the pair kernel's probe side, :func:`probe_width`; no other module
 reads ``defaultParallelism`` or a partition count.
 
+One policy picks between the driver and the cluster: size estimates
+decide broadcast pins, exact counts decide driver collects.
+
 Broadcast gates key on the INPUT relation's optimized-plan size
 estimate: file-size based for parquet scans (reliable), "unknown"=huge
 for derived frames like createDataFrame/mapInPandas output — which
-correctly fails toward the distributed/shuffling path, never toward an
-unsafe broadcast or collect. A ``localCheckpoint`` keeps its origin
-plan's estimate, so a checkpointed frame gates like the frame it came
-from. The dedup verify joins and the embedding blocker's vector
-re-attach share one broadcast ceiling, and the clustering layer's
-driver gate (``clustering/base.py``) applies the same policy.
+correctly fails toward the shuffling path, never toward an unsafe
+broadcast. A ``localCheckpoint`` keeps its origin plan's estimate, so a
+checkpointed frame gates like the frame it came from. The dedup verify
+joins and the embedding blocker's vector re-attach share one broadcast
+ceiling.
 
-Where a driver-or-distributed choice needs an exact row count,
-:func:`counted` gives it together with a checkpoint that either branch
-reads; :func:`collect_bounded` is the collect that stops one row past
-the solver cap.
+Every driver-or-distributed choice, and every driver-only solver's
+collect, goes through :func:`driver_table`: the frame is checkpointed
+and counted exactly in one job (:func:`counted`), and only a frame
+within the caller's row cap is Arrow-collected from that checkpoint. A
+caller with a distributed path (connected components, greedy 1:1,
+BCubed, the embedding blocker's ``auto``) runs it over the same
+checkpoint when the table is refused; the driver-only solvers
+(hierarchical, bipartite, centre) refuse loudly through
+:func:`collect_solver_rows`. No size estimate sends a frame to the
+driver: on the derived frames these gates see it is unknown or huge
+(about 1e19 bytes for a matcher's correspondence set), and a wrong
+estimate must not decide a collect.
 """
 
 from __future__ import annotations
 
+from typing import TYPE_CHECKING
+
 from pyspark.sql import DataFrame, SparkSession
+
+if TYPE_CHECKING:
+    import pyarrow
 
 # Ceiling for pinning a join side as a broadcast (the dedup verify joins'
 # token/shingle side tables, the embedding blocker's vector re-attach),
@@ -30,9 +45,13 @@ from pyspark.sql import DataFrame, SparkSession
 # input sized, while a derived table's own estimate is wildly off after
 # explode/groupBy.
 BROADCAST_MAX_BYTES = 1 << 30  # 1 GiB
-# Rows the clustering layer's driver-only solvers accept from
-# :func:`collect_bounded` (the hierarchical merge loop is O(n^3) Python
-# by reference contract — far beyond this it would never finish anyway).
+# Rows an edge or correspondence set may have and still go to the
+# driver union-find (connected components) or the exact greedy sweep;
+# a larger set runs the distributed path, which gives the same output.
+DRIVER_EDGE_LIMIT = 5_000_000
+# Rows the driver-only solvers accept (the hierarchical merge loop is
+# O(n^3) Python by reference contract — far beyond this it would never
+# finish anyway); past it :func:`collect_solver_rows` refuses.
 DRIVER_SOLVE_ROW_CAP = 1_000_000
 # Rows of both cluster assignments together that bcubed_metrics takes
 # to the driver: where its driver branch and its distributed cell plan
@@ -41,6 +60,10 @@ DRIVER_SOLVE_ROW_CAP = 1_000_000
 # ~2x faster at 100k and ~1.4x slower at 1M per side), at about +0.28
 # KB of Python driver RSS per row.
 BCUBED_DRIVER_ROW_CAP = 1_000_000
+# Most right-side rows EmbeddingBlocker's brute path collects to the
+# driver: 'auto' routes anything larger to LSH, a forced 'brute'
+# refuses it.
+BRUTE_MAX_ROWS = 100_000
 
 
 def core_width(spark: SparkSession) -> int:
@@ -121,9 +144,40 @@ def counted(df: DataFrame) -> tuple[DataFrame, int]:
     return df, df._jdf.queryExecution().toRdd().count()
 
 
-def collect_bounded(df: DataFrame) -> list | None:
-    """Rows of ``df`` (in its order), or None when it has more than
-    ``DRIVER_SOLVE_ROW_CAP`` rows. At most one row past the cap reaches
-    the driver, so a frame of any size is safe to offer."""
-    rows = df.limit(DRIVER_SOLVE_ROW_CAP + 1).collect()
-    return rows if len(rows) <= DRIVER_SOLVE_ROW_CAP else None
+def driver_table(
+    df: DataFrame, max_rows: int
+) -> tuple[DataFrame, pyarrow.Table | None]:
+    """(``df`` checkpointed, its rows as a ``pyarrow.Table``), or the
+    checkpoint and None when it has more than ``max_rows`` rows or the
+    driver refuses the transfer (maxResultSize / task-result eviction).
+
+    The gate is :func:`counted`'s one job; the collect reads the
+    checkpoint it materialized, and so does whatever distributed path
+    the caller runs on None — ``df``'s lineage runs once either way.
+    Any other transfer failure re-raises: a data error must not be
+    silently retried on the distributed path."""
+    df, n_rows = counted(df)
+    if n_rows > max_rows:
+        return df, None
+    try:
+        return df, df.toArrow()
+    except Exception as exc:  # noqa: BLE001 — filtered by signature below
+        msg = str(exc)
+        if "maxResultSize" in msg or "TaskResultLost" in msg:
+            return df, None
+        raise
+
+
+def collect_solver_rows(
+    df: DataFrame, solver: str
+) -> tuple[DataFrame, pyarrow.Table]:
+    """:func:`driver_table` for a driver-only solver: past ``DRIVER_SOLVE_ROW_CAP`` rows, or when the driver
+    refuses the transfer, raises ValueError naming the solver."""
+    df, table = driver_table(df, DRIVER_SOLVE_ROW_CAP)
+    if table is None:
+        raise ValueError(
+            f"{solver}: the correspondences exceed the driver-side solver "
+            f"limit ({DRIVER_SOLVE_ROW_CAP} rows, or a transfer the driver "
+            "refuses) — pre-threshold them to shrink the graph"
+        )
+    return df, table

@@ -444,13 +444,15 @@ def bcubed_metrics(
     (any silent resolution would be shuffle-order dependent).
 
     Scale: both sides' ``(record, cluster)`` projections are tagged,
-    unioned and counted through one lazy checkpoint
-    (``core.plansize.counted``: one job, each input's lineage runs
-    once). At or below ``core.plansize.BCUBED_DRIVER_ROW_CAP`` rows in
-    all, one Arrow collect of the checkpoint brings them to the driver,
+    unioned and offered to the driver gate
+    (``core.plansize.driver_table``: one lazy checkpoint counted in one
+    job, so each input's lineage runs once). At or below
+    ``core.plansize.BCUBED_DRIVER_ROW_CAP`` rows in all, one Arrow
+    collect of the checkpoint brings them to the driver,
     where the partition check, the cells and the ppm sums are exact
     Python integers — a few jobs instead of the distributed plan's ~15.
-    Above it, the cell plan reads the checkpoint: the record frame is
+    Above it, or when the driver refuses the transfer, the cell plan
+    reads the checkpoint: the record frame is
     joined once and collapsed to the (pred, gold) cell table; sizes and
     the ppm sums are O(#cells) arithmetic over it (every record in a
     cell shares the same ratios) — nothing quadratic, no pair
@@ -471,12 +473,13 @@ def bcubed_metrics(
 
     # Both sides go through one lazy checkpoint, counted in one job:
     # each side's lineage runs once, whichever branch reads it next.
-    both, n_rows = plansize.counted(
-        side(predicted, True).unionByName(side(gold, False))
+    both, table = plansize.driver_table(
+        side(predicted, True).unionByName(side(gold, False)),
+        plansize.BCUBED_DRIVER_ROW_CAP,
     )
-    if n_rows <= plansize.BCUBED_DRIVER_ROW_CAP:
+    if table is not None:
         return rows_to_df(
-            predicted.sparkSession, [_bcubed_on_driver(both.toArrow())],
+            predicted.sparkSession, [_bcubed_on_driver(table)],
             "n_records long, precision_ppm long, recall_ppm long, f1 double",
         )
     p = both.where("pred").select("rid", F.col("c").alias("pc"))

@@ -27,7 +27,7 @@ Canonical form (conservative, dedup-oriented):
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 _TRACKING = "(utm_[a-z0-9_]+|fbclid|gclid|msclkid|igshid|ref)"
@@ -93,10 +93,3 @@ def canonical_url(col: str) -> Column:
             f"not {type(col).__name__}"
         )
     return F.expr(canonical_url_sql(col, "spark"))
-
-
-def canonicalize_urls(
-    df: DataFrame, col: str, out_col: str | None = None
-) -> DataFrame:
-    """Input + ``{col}_canonical`` (or ``out_col``)."""
-    return df.withColumn(out_col or f"{col}_canonical", canonical_url(col))

@@ -1,60 +1,12 @@
-"""Bucketed storage: co-located joins for repeated entity matching.
-
-At 100 TB the dominant cost of blocking is the shuffle of both record
-tables on the block key. When the same tables are matched repeatedly
-(nightly dedup runs, incremental matching), bucketing them ONCE on the
-key removes that shuffle from every subsequent join: Spark's bucketed
-scan exposes the hash partitioning to the planner and the equi-join
-runs exchange-free (SortMergeJoin over pre-sorted buckets when sortBy
-matches).
-
-This is the Spark-native replacement for the reference's eager dict
-indexes (blocking/standard.py:48-51) — a persistent index that lives in
-the table layout instead of executor memory.
+"""Stable shard routing: weighted rendezvous hashing as one per-row
+expression (no shuffle, no state).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
 from pydi_spark.core.dataset import Dataset, as_dataframe
-
-
-def save_bucketed(
-    data: Dataset | DataFrame,
-    table_name: str,
-    bucket_cols: list[str],
-    num_buckets: int = 64,
-    sort_cols: list[str] | None = None,
-    path: str | None = None,
-    mode: str = "overwrite",
-) -> None:
-    """Persist as a bucketed (optionally sorted) table.
-
-    ``num_buckets`` should put one bucket comfortably in executor memory
-    at target scale (buckets = max join parallelism without AQE help).
-    """
-    df = as_dataframe(data)
-    writer = df.write.mode(mode).bucketBy(num_buckets, *bucket_cols)
-    if sort_cols:
-        writer = writer.sortBy(*sort_cols)
-    if path:
-        writer = writer.option("path", path)
-    writer.format("parquet").saveAsTable(table_name)
-
-
-def read_bucketed(spark: SparkSession, table_name: str) -> DataFrame:
-    return spark.table(table_name)
-
-
-def is_exchange_free_join(joined: DataFrame) -> bool:
-    """True when the physical plan contains no shuffle Exchange —
-    the co-location check used by tests and plan audits."""
-    spark = joined.sparkSession
-    plan = joined._jdf.queryExecution().explainString(
-        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("simple")
-    )
-    return "Exchange hashpartitioning" not in plan
 
 
 def rendezvous_shard(

@@ -1,23 +1,22 @@
 """Multimodal column plumbing: binary payloads + typed metadata.
 
-North-star operator family (BASELINE.json): image/audio/video as opaque
-``binary`` columns with typed metadata structs; decode / feature-extract
-/ resize / frame-sample as Arrow-batched ``mapInPandas`` stages.
+North-star operator family (BASELINE.json): images as opaque ``binary``
+columns with typed metadata structs; decode / feature-extract / resize
+/ perceptual-hash as Arrow-batched ``mapInPandas`` stages.
 
 The Spark-side plumbing here is real and tested (schemas, batch
 iteration, partition sizing). Codecs are injectable callables, and the
 defaults are REAL pure-numpy+stdlib implementations: ``png_decoder``
 (8-bit, non-interlaced, all five scanline filters, + ``png_encode``),
 ``jpeg_decoder`` (baseline SOF0, 4:4:4/4:2:2/4:2:0, restart markers,
-+ minimal ``jpeg_encode`` — see ``jpeg.py``), and ``wav_decoder``
-(PCM via stdlib ``wave``). Video and exotic variants (progressive
-JPEG, ADPCM) still require an injected library codec and raise
-clearly. ``fake_image_decoder`` remains for synthetic payload tests;
++ minimal ``jpeg_encode`` — see ``jpeg.py``). Other formats and
+exotic variants (progressive JPEG) still require an injected library
+codec and raise clearly. ``fake_image_decoder`` remains for synthetic payload tests;
 swapping decoders changes only the callable, never the plumbing.
 
 Scale notes: payloads stay in executor memory one Arrow batch at a time
 (maxRecordsPerBatch bounds it); metadata-only operations (filtering by
-width, sampling by duration) never touch the payload column thanks to
+width) never touch the payload column thanks to
 Parquet column pruning — keep metadata in separate top-level columns for
 exactly this reason.
 """
@@ -195,106 +194,6 @@ def png_encode(arr: np.ndarray) -> bytes:
     )
 
 
-def wav_decoder(payload: bytes) -> np.ndarray:
-    """Real WAV (PCM) decode with stdlib ``wave`` + numpy — no audio
-    libraries. Returns a float32 mono waveform in [-1, 1] (channels
-    averaged). 8/16/32-bit integer PCM supported."""
-    import io
-    import wave
-
-    if payload is None:
-        raise ValueError("null payload")
-    with wave.open(io.BytesIO(payload), "rb") as w:
-        nch, sampwidth, _rate, nframes = (
-            w.getnchannels(), w.getsampwidth(), w.getframerate(), w.getnframes(),
-        )
-        raw = w.readframes(nframes)
-    if sampwidth == 1:  # unsigned 8-bit
-        a = np.frombuffer(raw, dtype=np.uint8).astype(np.float32)
-        a = (a - 128.0) / 128.0
-    elif sampwidth == 2:
-        a = np.frombuffer(raw, dtype="<i2").astype(np.float32) / 32768.0
-    elif sampwidth == 4:
-        a = np.frombuffer(raw, dtype="<i4").astype(np.float32) / 2147483648.0
-    else:
-        raise ValueError(f"unsupported WAV sample width {sampwidth}")
-    if nch > 1:
-        a = a.reshape(-1, nch).mean(axis=1)
-    return a
-
-
-def wav_encode(waveform: np.ndarray, rate: int = 16000) -> bytes:
-    """Minimal 16-bit mono PCM WAV writer (round-trips wav_decoder in
-    tests; materializes small derived clips without an audio library)."""
-    import io
-    import wave
-
-    a = np.asarray(waveform, dtype=np.float64)
-    pcm = (np.clip(a, -1.0, 1.0) * 32767.0).astype("<i2")
-    buf = io.BytesIO()
-    with wave.open(buf, "wb") as w:
-        w.setnchannels(1)
-        w.setsampwidth(2)
-        w.setframerate(rate)
-        w.writeframes(pcm.tobytes())
-    return buf.getvalue()
-
-
-AUDIO_FEATURE_SCHEMA = StructType(
-    [
-        StructField("media_id", StringType()),
-        StructField("n_samples", IntegerType()),
-        StructField("rms", FloatType()),
-        StructField("peak", FloatType()),
-        StructField("zero_crossing_rate", FloatType()),
-        StructField("decode_ok", StringType()),
-    ]
-)
-
-
-def extract_audio_features(
-    df: DataFrame,
-    decoder: Callable[[bytes], np.ndarray] = wav_decoder,
-    id_col: str = "media_id",
-    payload_col: str = "payload",
-) -> DataFrame:
-    """[media_id, n_samples, rms, peak, zero_crossing_rate, decode_ok]:
-    waveform-level quality features per Arrow batch — the audio leg of
-    the decode/feature-extract stage (real for WAV via stdlib; other
-    containers need an injected codec)."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k.name: [] for k in AUDIO_FEATURE_SCHEMA.fields}
-            for mid, payload in zip(pdf[id_col], pdf[payload_col]):
-                out["media_id"].append(str(mid))
-                try:
-                    a = np.asarray(
-                        decoder(bytes(payload) if payload is not None else None),
-                        dtype=np.float32,
-                    )
-                    n = len(a)
-                    zc = (
-                        float(np.mean(np.signbit(a[1:]) != np.signbit(a[:-1])))
-                        if n > 1
-                        else 0.0
-                    )
-                    out["n_samples"].append(n)
-                    out["rms"].append(float(np.sqrt(np.mean(a * a))) if n else 0.0)
-                    out["peak"].append(float(np.max(np.abs(a))) if n else 0.0)
-                    out["zero_crossing_rate"].append(zc)
-                    out["decode_ok"].append("ok")
-                except Exception as e:
-                    out["n_samples"].append(0)
-                    out["rms"].append(0.0)
-                    out["peak"].append(0.0)
-                    out["zero_crossing_rate"].append(0.0)
-                    out["decode_ok"].append(f"error: {type(e).__name__}")
-            yield pd.DataFrame(out)
-
-    return df.mapInPandas(run, AUDIO_FEATURE_SCHEMA)
-
-
 def default_image_decoder(payload: bytes) -> np.ndarray:
     """Format dispatch for the decode stages: PNG and baseline JPEG both
     decode for real (pure numpy + stdlib — see ``jpeg.py``); anything
@@ -409,38 +308,6 @@ def decode_and_resize(
             yield pd.DataFrame(out)
 
     return df.mapInPandas(run, schema)
-
-
-def sample_frames(
-    df: DataFrame,
-    every_ms: int = 1000,
-    id_col: str = "media_id",
-    duration_col: str = "duration_ms",
-) -> DataFrame:
-    """Frame-sampling plan: one row per (media, frame_ts). Metadata-only —
-    never reads the payload column (column pruning keeps the scan thin);
-    the decode of sampled frames is a later extract_features stage."""
-    return df.select(
-        F.col(id_col),
-        F.explode(
-            F.sequence(
-                F.lit(0),
-                F.greatest(F.col(duration_col).cast("long") - 1, F.lit(0)),
-                F.lit(int(every_ms)),
-            )
-        ).alias("frame_ts_ms"),
-    )
-
-
-def media_stats(df: DataFrame) -> DataFrame:
-    """Metadata aggregation (payload never read): counts + size stats per
-    media_type."""
-    return df.groupBy("media_type").agg(
-        F.count("*").alias("n"),
-        F.avg(F.length(F.col("payload"))).alias("avg_payload_bytes"),
-        F.avg("width").alias("avg_width"),
-        F.avg("duration_ms").alias("avg_duration_ms"),
-    )
 
 
 def perceptual_hash(

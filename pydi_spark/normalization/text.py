@@ -57,17 +57,6 @@ def normalize_header(col: Column | str) -> Column:
     return F.regexp_replace(c, r"^_|_$", "")
 
 
-def normalize_header_str(name: str) -> str:
-    """Driver-side variant for renaming actual DataFrame columns."""
-    import re
-
-    s = re.sub(r"([a-z0-9])([A-Z])", r"\1_\2", name)
-    s = s.lower()
-    s = re.sub(r"[^a-z0-9]+", "_", s)
-    s = re.sub(r"_+", "_", s)
-    return s.strip("_")
-
-
 def remove_stopwords(tokens: Column, stopwords: list[str] | None = None) -> Column:
     sw = F.array(*[F.lit(s) for s in (stopwords or EN_STOPWORDS)])
     return F.filter(tokens, lambda t: ~F.array_contains(sw, t))

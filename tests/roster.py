@@ -159,4 +159,15 @@ ROTATION_QUEUE: set[str] = {
     # fusion_conflict_detect, fusion_conflicts, fusion_debug,
     # fusion_numeric, fusion_rule_suggest, fusion_selection). No entry
     # reaches DatasetNormalizer.
+    # Every driver collect now goes through core/plansize.py::
+    # driver_table (an exact count over a lazy checkpoint, then an Arrow
+    # collect): connected components, greedy 1:1, bcubed, the three
+    # driver-only solvers and EmbeddingBlocker's auto/brute gate. An
+    # instrumented run of every queries() entry at sf0.001 found 30
+    # that reach it or EmbeddingBlocker.block: 18 sit in the driver
+    # window and the other 12 are queued above (ann_lsh,
+    # dedup_embedding, cluster_centre, cluster_greedy_one_to_one,
+    # cluster_hierarchical_avg, cluster_hierarchical_max,
+    # fusion_conflict_detect, fusion_conflicts, fusion_debug,
+    # fusion_numeric, fusion_rule_suggest, fusion_selection).
 }

@@ -134,31 +134,33 @@ def test_salted_join_matches_plain_join(spark):
 
 
 def test_embedding_blocker_auto_method(spark, monkeypatch):
-    from pydi_spark.blocking import embedding
+    from pydi_spark.core import plansize
 
     rows = [("a", [1.0, 0.0]), ("b", [0.99, 0.1]), ("c", [0.0, 1.0])]
     df = spark.createDataFrame(rows, "rid string, vec array<float>")
     # default method is auto: small right side -> brute, above cutoff -> lsh
-    assert EmbeddingBlocker(vector_column="vec")._resolve_method(df) == "brute"
-    monkeypatch.setattr(embedding, "BRUTE_MAX_ROWS", 2)
-    assert EmbeddingBlocker(vector_column="vec")._resolve_method(df) == "lsh"
+    method, _, table = EmbeddingBlocker(vector_column="vec")._resolve_method(df)
+    assert method == "brute" and table.num_rows == 3
+    monkeypatch.setattr(plansize, "BRUTE_MAX_ROWS", 2)
+    assert EmbeddingBlocker(vector_column="vec")._resolve_method(df)[0] == "lsh"
     # explicit methods are never overridden (no count action taken)
-    assert EmbeddingBlocker(vector_column="vec", method="lsh")._resolve_method(df) == "lsh"
+    lsh = EmbeddingBlocker(vector_column="vec", method="lsh")._resolve_method(df)
+    assert lsh == ("lsh", df, None)
 
 
 def test_embedding_blocker_forced_brute_refuses_past_cap(spark, monkeypatch):
     """A forced 'brute' collects the right side to the driver, so past
     the row cap it refuses instead of collecting an unbounded matrix;
     at the cap it still runs."""
-    from pydi_spark.blocking import embedding
+    from pydi_spark.core import plansize
 
     rows = [("a", [1.0, 0.0]), ("b", [0.99, 0.1]), ("c", [0.0, 1.0])]
     df = spark.createDataFrame(rows, "rid string, vec array<float>")
     blocker = EmbeddingBlocker(vector_column="vec", method="brute", threshold=0.9)
-    monkeypatch.setattr(embedding, "BRUTE_MAX_ROWS", 3)
+    monkeypatch.setattr(plansize, "BRUTE_MAX_ROWS", 3)
     pairs = {(r["id1"], r["id2"]) for r in blocker.block(df, id_column="rid").collect()}
     assert pairs == {("a", "b")}
-    monkeypatch.setattr(embedding, "BRUTE_MAX_ROWS", 2)
+    monkeypatch.setattr(plansize, "BRUTE_MAX_ROWS", 2)
     with pytest.raises(ValueError, match="more than 2 rows"):
         blocker.block(df, id_column="rid")
 

@@ -54,20 +54,18 @@ def test_cc_matches_union_find_on_random_graph(spark, strategy):
 
 @pytest.mark.parametrize("edge_limit", [5_000_000, 0])
 def test_cc_auto_join_derived_edges(spark, monkeypatch, edge_limit):
-    """'auto' on a join-derived edge frame (its size estimate fails the
-    driver gate): the exact edge count sends a driver-sized set straight
-    to the driver union-find without the mapInPandas forest, and an
-    edge limit of 0 still takes the forest. Both give the union-find
-    components."""
+    """'auto' on a join-derived edge frame: the exact edge count sends a
+    driver-sized set straight to the driver union-find without the
+    mapInPandas forest, and an edge limit of 0 still takes the forest.
+    Both give the union-find components."""
     import importlib
 
     from pyspark.sql import functions as F
 
-    from pydi_spark.clustering import base
-    from pydi_spark.core.plansize import fits_estimate
+    from pydi_spark.core import plansize
 
     cc = importlib.import_module("pydi_spark.clustering.connected_components")
-    monkeypatch.setattr(base, "DRIVER_EDGE_LIMIT", edge_limit)
+    monkeypatch.setattr(plansize, "DRIVER_EDGE_LIMIT", edge_limit)
     random.seed(11)
     nodes = [f"n{i:03d}" for i in range(120)]
     pairs = [tuple(random.sample(nodes, 2)) for _ in range(80)]
@@ -76,7 +74,6 @@ def test_cc_auto_join_derived_edges(spark, monkeypatch, edge_limit):
     )
     keep = spark.createDataFrame([(i,) for i in range(0, 80, 2)], "k int")
     edges = raw.join(keep, "k").select(F.col("a").alias("id1"), F.col("b").alias("id2"))
-    assert not fits_estimate(edges, base.DRIVER_SAFE_BYTES)
     forests = []
     build = cc._build_forest
 
@@ -137,7 +134,6 @@ def test_greedy_driver_order_matches_spark_order_by(spark):
     from pyspark.sql import functions as F
 
     from pydi_spark.clustering.greedy_one_to_one import driver_order
-    from pydi_spark.core.arrowio import collect_pandas
 
     nan = float("nan")
     rows = [
@@ -158,9 +154,7 @@ def test_greedy_driver_order_matches_spark_order_by(spark):
         key(r["id1"], r["id2"], r["score"], r["score"] is None)
         for r in corr.orderBy(F.desc("score"), "id1", "id2").collect()
     ]
-    pdf = driver_order(collect_pandas(
-        corr.select("id1", "id2", "score", F.col("score").isNull().alias("__null"))
-    ))
+    pdf = driver_order(corr.toArrow())
     got = [key(*t) for t in zip(pdf["id1"], pdf["id2"], pdf["score"], pdf["__null"])]
     assert got == want
 
@@ -246,7 +240,7 @@ def test_greedy_auto_distributed_matches_exact(spark, monkeypatch):
     # a gate that accepts nothing sends the matcher to the distributed
     # epochs; under the strict total order they converge to the
     # sequential driver sweep
-    from pydi_spark.clustering import base
+    from pydi_spark.core import plansize
 
     rows = [
         ("l1", "r1", 0.9), ("l2", "r1", 0.95), ("l2", "r2", 0.5),
@@ -265,8 +259,7 @@ def test_greedy_auto_distributed_matches_exact(spark, monkeypatch):
     sweep = {(r["id1"], r["id2"])
              for r in GreedyOneToOneMatcher().cluster(corr).collect()}
     assert not calls
-    monkeypatch.setattr(base, "DRIVER_SAFE_BYTES", 0)
-    monkeypatch.setattr(base, "DRIVER_EDGE_LIMIT", 0)
+    monkeypatch.setattr(plansize, "DRIVER_EDGE_LIMIT", 0)
     epochs = {(r["id1"], r["id2"])
               for r in GreedyOneToOneMatcher().cluster(corr).collect()}
     assert len(calls) == 1
@@ -274,11 +267,10 @@ def test_greedy_auto_distributed_matches_exact(spark, monkeypatch):
 
 
 def test_driver_collect_caps(spark, monkeypatch):
-    """r13 defensive caps (VERDICT r12 #8): a collect that exceeds the
-    hard row ceiling must fall back (CC, greedy: the distributed path —
-    identical output) or refuse loudly (hierarchical, bipartite, centre),
-    never proceed with an unbounded driver frame."""
-    from pydi_spark.clustering import base
+    """r13 defensive caps (VERDICT r12 #8): a frame past its driver row
+    cap must fall back (CC, greedy: the distributed path — identical
+    output) or refuse loudly (hierarchical, bipartite, centre), never
+    proceed with an unbounded driver frame."""
     from pydi_spark.core import plansize
 
     edges = spark.createDataFrame(
@@ -292,10 +284,10 @@ def test_driver_collect_caps(spark, monkeypatch):
     )
     greedy = {(r["id1"], r["id2"])
               for r in GreedyOneToOneMatcher().cluster(corr).collect()}
-    # cap of 0 rows refuses every collect behind the gate: the edges',
-    # then the forest's — the distributed rounds must still produce
-    # identical components, and greedy's epochs the same matching
-    monkeypatch.setattr(base, "DRIVER_COLLECT_ROW_CAP", 0)
+    # a limit of 0 rows refuses every collect behind the gate: the
+    # edges', then the forest's — the distributed rounds must still
+    # produce identical components, and greedy's epochs the same matching
+    monkeypatch.setattr(plansize, "DRIVER_EDGE_LIMIT", 0)
     capped = {r["record_id"]: r["cluster_id"]
               for r in connected_components(edges).collect()}
     assert capped == expected
@@ -316,12 +308,12 @@ def test_driver_collect_caps(spark, monkeypatch):
 
 
 def test_driver_gate_counts_once_and_materializes_checkpoint(spark):
-    """A frame the size estimate cannot place (here a mapInPandas output)
-    is checkpointed and counted in one job over its rows, with no eager
-    checkpoint's own count and no aggregate exchange before it. The
-    count materializes the checkpoint, so the collect that follows does
-    not re-run the lineage (the accumulator sees every row once)."""
-    from pydi_spark.clustering.base import collect_capped, driver_sized
+    """A frame offered to the driver gate is checkpointed and counted in
+    one job over its rows, with no eager checkpoint's own count and no
+    aggregate exchange before it; the Arrow collect is the only other
+    job. The count materializes the checkpoint, so the collect does not
+    re-run the lineage (the accumulator sees every row once)."""
+    from pydi_spark.core.plansize import driver_table
 
     sc = spark.sparkContext
     seen = sc.accumulator(0)
@@ -334,38 +326,159 @@ def test_driver_gate_counts_once_and_materializes_checkpoint(spark):
     edges = spark.createDataFrame(
         [(f"a{i}", f"b{i}") for i in range(50)], "id1 string, id2 string"
     ).mapInPandas(tap, "id1 string, id2 string")
-    group = "driver-gate-job-budget"
+    result = {}
+    jobs = _jobs_in_group(
+        sc, "driver-gate-job-budget",
+        lambda: result.update(table=driver_table(edges, 50)[1]),
+    )
+    assert result["table"].num_rows == 50
+    assert jobs <= 2, jobs
+    assert seen.value == 50
+    # one row past the cap: the count job alone, and no table
+    jobs = _jobs_in_group(
+        sc, "driver-gate-refused",
+        lambda: result.update(table=driver_table(edges, 49)[1]),
+    )
+    assert result["table"] is None
+    assert jobs <= 1, jobs
+
+
+def _jobs_in_group(sc, group, fn):
     sc.setJobGroup(group, group)
     try:
-        edges, small = driver_sized(edges)
-        jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+        fn()
+        return len(sc.statusTracker().getJobIdsForGroup(group))
     finally:
         sc.setJobGroup(None, None)
-    assert small
-    assert jobs <= 1, jobs
-    assert len(collect_capped(edges)) == 50
-    assert seen.value == 50
 
 
-def test_driver_policy_lives_in_clustering_base():
-    """clustering/base.py is the only clustering module that decides
-    driver-or-distributed: no other one calls the size estimate, defines
-    a union-find, writes a MiB size literal or sets a DRIVER_* limit."""
+def test_driver_solver_job_budget(spark):
+    """The driver-only solvers gate on one exact count and collect the
+    checkpoint in one more job, whatever the partition count (the
+    ``limit(cap + 1)`` take they used scanned 1, 4, 16, then the
+    remaining partitions: about log4(P) + 1 jobs, with a pushed-down
+    limit that compiled again on every call). A repeated call compiles
+    nothing."""
+    from pyspark.sql import functions as F
+
+    sc = spark.sparkContext
+    # 64 partitions with no exchange ahead of them, so every job counted
+    # below is the solver's own; the explode hides the row count from
+    # the optimizer, as a matcher's join output does (a known bound lets
+    # Spark drop a limit above it)
+    corr = spark.range(0, 64, 1, 64).select(
+        F.explode(F.array("id")).alias("id")
+    ).select(
+        F.format_string("a%02d", F.col("id") % 29).alias("id1"),
+        F.format_string("b%02d", (F.col("id") * 7) % 31).alias("id2"),
+        ((F.col("id") % 13) / 13.0).alias("score"),
+    )
+    solvers = {
+        "hierarchical": lambda: HierarchicalClusterer(
+            linkage="MAX", min_similarity=0.5).assign(corr),
+        "bipartite": lambda: MaximumBipartiteMatcher().cluster(corr),
+        "centre": lambda: CentreClusterer().assign(corr),
+    }
+    compiled = sc._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+    budget = {"hierarchical": 2, "bipartite": 2, "centre": 2}
+    for name, solve in solvers.items():
+        solve()  # the first call may compile
+        jobs = _jobs_in_group(sc, f"solver-budget-{name}", solve)
+        assert jobs <= budget[name], (name, jobs)
+        before = compiled.getCount()
+        solve()
+        assert compiled.getCount() == before, name
+
+
+def test_driver_policy_lives_in_plansize():
+    """core/plansize.py is the only module that decides whether a frame
+    goes to the driver: no other package module runs an incremental
+    ``limit(cap + 1)`` take, an Arrow or pandas collect, a ``count()``
+    compared with a cap, or sets a driver row cap; the size estimate
+    only pins broadcasts; and no clustering module but base.py defines
+    a union-find."""
     import pathlib
     import re
 
-    root = pathlib.Path(__file__).resolve().parents[1] / "pydi_spark" / "clustering"
+    root = pathlib.Path(__file__).resolve().parents[1] / "pydi_spark"
+    cap = r"[A-Z][A-Z0-9_]*"
     patterns = [
-        re.compile(r"fits_estimate\("),
-        re.compile(r"def find\("),
-        re.compile(r"<<\s*20\b"),
-        re.compile(r"^\s*DRIVER_\w*\s*(?::[^=\n]*)?=(?!=)", re.M),
+        re.compile(r"\.limit\([^()]*\+\s*1\s*\)\.collect\(\)"),
+        re.compile(r"toArrow\("),
+        re.compile(r"collect_pandas\("),
+        re.compile(rf"\.count\(\)\s*[<>]=?\s*{cap}\b"),
+        re.compile(rf"\b{cap}\s*[<>]=?\s*[\w.]*\.count\(\)"),
+        re.compile(
+            r"^\s*(?:DRIVER_\w*|\w*_ROW_CAP|\w*_MAX_ROWS)\s*(?::[^=\n]*)?=(?!=)", re.M
+        ),
+        re.compile(r"fits_estimate\((?![^()]*BROADCAST_MAX_BYTES)[^()]*\)"),
     ]
     hits = [
-        f"{f.name}: {m.group(0).strip()!r}"
-        for f in sorted(root.glob("*.py"))
-        if f.name != "base.py"
+        f"{f.relative_to(root)}: {m.group(0).strip()!r}"
+        for f in sorted(root.rglob("*.py"))
+        if f != root / "core" / "plansize.py"
         for p in patterns
         for m in p.finditer(f.read_text())
     ]
-    assert not hits, "driver policy outside clustering/base.py:\n" + "\n".join(hits)
+    hits += [
+        f"{f.relative_to(root)}: 'def find('"
+        for f in sorted((root / "clustering").glob("*.py"))
+        if f.name != "base.py" and "def find(" in f.read_text()
+    ]
+    assert not hits, "driver policy outside core/plansize.py:\n" + "\n".join(hits)
+
+
+def test_driver_transfer_refusal_falls_back_or_refuses(spark, monkeypatch):
+    """When the driver refuses the Arrow transfer (maxResultSize, an
+    evicted task result), connected components, greedy 1:1 and BCubed
+    return their distributed output unchanged and the driver-only
+    solvers raise the solver-limit ValueError; any other transfer error
+    re-raises."""
+    from pydi_spark.evaluation import bcubed_metrics
+
+    edges = spark.createDataFrame(
+        [("a", "b"), ("b", "c"), ("x", "y")], "id1 string, id2 string"
+    )
+    corr = spark.createDataFrame(
+        [("a", "b", 0.9), ("c", "d", 0.8), ("c", "b", 0.7)],
+        "id1 string, id2 string, score double",
+    )
+    gold = spark.createDataFrame(
+        [("a", "a"), ("b", "a"), ("c", "c"), ("x", "x"), ("y", "x")],
+        "record_id string, cluster_id string",
+    )
+
+    def outputs():
+        comps = connected_components(edges)
+        return (
+            sorted(map(tuple, comps.collect())),
+            sorted(map(tuple, GreedyOneToOneMatcher().cluster(corr).collect())),
+            [tuple(r) for r in bcubed_metrics(comps, gold).collect()],
+        )
+
+    want = outputs()
+
+    refused = []
+
+    def refuse(message):
+        def to_arrow(self):
+            refused.append(message)
+            raise RuntimeError(message)
+        monkeypatch.setattr(type(edges), "toArrow", to_arrow)
+
+    refuse("Total size of serialized results is bigger than spark.driver.maxResultSize")
+    assert outputs() == want
+    # the edges, their forest, greedy's correspondences, bcubed's rows
+    assert len(refused) == 4
+    refuse("TaskResultLost (result lost from block manager)")
+    assert outputs() == want
+    for solve in (
+        HierarchicalClusterer(linkage="MAX", min_similarity=0.5).assign,
+        MaximumBipartiteMatcher().cluster,
+        CentreClusterer().assign,
+    ):
+        with pytest.raises(ValueError, match="driver-side solver limit"):
+            solve(corr)
+    refuse("arrow schema mismatch")
+    with pytest.raises(RuntimeError, match="arrow schema mismatch"):
+        connected_components(edges)

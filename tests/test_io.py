@@ -104,34 +104,6 @@ def test_provenance_append(spark):
     assert ds.provenance["operations"][0]["op"] == "normalize"
 
 
-def test_bucketed_join_is_exchange_free(spark, tmp_path):
-    from pydi_spark.io.bucketing import (
-        is_exchange_free_join,
-        read_bucketed,
-        save_bucketed,
-    )
-
-    left = spark.createDataFrame(
-        [(i, f"l{i}") for i in range(100)], "k long, lv string"
-    )
-    right = spark.createDataFrame(
-        [(i % 50, f"r{i}") for i in range(100)], "k long, rv string"
-    )
-    save_bucketed(left, "t_bleft", ["k"], num_buckets=4,
-                  sort_cols=["k"], path=str(tmp_path / "bl"))
-    save_bucketed(right, "t_bright", ["k"], num_buckets=4,
-                  sort_cols=["k"], path=str(tmp_path / "br"))
-    a = read_bucketed(spark, "t_bleft")
-    b = read_bucketed(spark, "t_bright")
-    joined = a.join(b, "k")
-    assert joined.count() == 100
-    assert is_exchange_free_join(joined), "bucketed join should not shuffle"
-    # non-bucketed baseline DOES shuffle
-    assert not is_exchange_free_join(
-        left.repartition(5).join(right.repartition(5), "k")
-    )
-
-
 def test_orc_roundtrip(spark, tmp_path):
     from pydi_spark.io import load_orc, write_orc
 

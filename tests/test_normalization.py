@@ -22,7 +22,7 @@ from pydi_spark.normalization.parsers import (
     parse_percentage,
     remove_accents,
 )
-from pydi_spark.normalization.text import handle_brackets, normalize_header_str, normalize_text
+from pydi_spark.normalization.text import handle_brackets, normalize_header, normalize_text
 from pydi_spark.normalization.units import normalize_units, parse_unit_from_header
 
 
@@ -165,7 +165,7 @@ def test_text_normalizers(spark):
         one(spark, normalize_text("x", strip_html=True), "<b>Hello</b>&nbsp; WORLD")
         == "hello world"
     )
-    assert normalize_header_str("myColumnName (EUR)") == "my_column_name_eur"
+    assert one(spark, normalize_header("x"), "myColumnName (EUR)") == "my_column_name_eur"
     assert one(spark, handle_brackets("x", "remove"), "Title (2024)") == "Title"
     assert one(spark, handle_brackets("x", "extract"), "Title (2024)") == "2024"
 
@@ -581,12 +581,12 @@ URL_CASES = [
 
 
 def test_canonical_url_values(spark):
-    from pydi_spark.functions.urls import canonicalize_urls
+    from pydi_spark.functions.urls import canonical_url
 
     df = spark.createDataFrame([(u,) for u, _ in URL_CASES], "url string")
     got = [
         r["url_canonical"]
-        for r in canonicalize_urls(df, "url").orderBy(F.monotonically_increasing_id()).collect()
+        for r in df.select(canonical_url("url").alias("url_canonical")).collect()
     ]
     # order-stable small local frame; compare as multiset to be safe
     assert sorted(x or "" for x in got) == sorted(

@@ -187,7 +187,7 @@ def test_operators_total_on_empty_inputs(spark):
     from pydi_spark.blocking import blocking_key_report
     from pydi_spark.events import active_users, attribute_conversions
     from pydi_spark.functions import edit_distance_join
-    from pydi_spark.functions.urls import canonicalize_urls
+    from pydi_spark.functions.urls import canonical_url
     from pydi_spark.normalization import encode_categories
     from pydi_spark.profiling import equi_width_histogram
 
@@ -202,7 +202,7 @@ def test_operators_total_on_empty_inputs(spark):
         active_users(ev.select("user_id", "ts")),
         encode_categories(cat, "v"),
         encode_categories(cat, "v", method="frequency"),
-        canonicalize_urls(s2, "s"),
+        s2.select(canonical_url("s")),
         edit_distance_join(s2, None, "s", id_column="id",
                            max_gram_frequency=5),
     ]
