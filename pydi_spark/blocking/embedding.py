@@ -352,8 +352,8 @@ class EmbeddingBlocker:
             # sessions — while checkpoint blocks are freed by the
             # ContextCleaner once the frame is unreferenced.
             if self.method == "lsh":  # not yet checkpointed by the gate
-                r = r.localCheckpoint(eager=True)
-            l = r if self_join else l.localCheckpoint(eager=True)
+                r = r.localCheckpoint(eager=False)
+            l = r if self_join else l.localCheckpoint(eager=False)
         if method == "brute":
             pairs = self._brute(l, table)
         elif method == "lsh":

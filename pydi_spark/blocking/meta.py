@@ -135,13 +135,12 @@ def meta_blocking(
 
     # r12: the pruning stage consumes the weighted graph FOUR times
     # (union of both directions x {node statistics, kept-edge filter}),
-    # and without materialization each consumer re-runs the whole
+    # and without a checkpoint each consumer re-runs the whole
     # quadratic pair generation + weighting chain — the blocking_meta
-    # plan re-read the input scan 64 times (190 Exchange nodes).
-    # localCheckpoint (eager, the minhash-sigs discipline) computes the
-    # graph once; the pruning joins/aggregates re-widen through their
-    # own exchanges, so the checkpoint's narrow partitioning is safe.
-    edges = edges.localCheckpoint(eager=True)
+    # plan re-read the input scan 64 times (190 Exchange nodes). The
+    # pruning joins/aggregates re-widen through their own exchanges, so
+    # the checkpoint's narrow partitioning is safe.
+    edges = edges.localCheckpoint(eager=False)
 
     both = edges.select(
         F.col("id1").alias("node"), "id1", "id2", "cbs", "w_ppm"

@@ -151,9 +151,9 @@ class TokenBlocker:
                 .groupBy("block_key").agg(F.max("count").alias("__df"))
                 .where(F.col("__df") > cap)
             )
-        # materialize: hot feeds BOTH anti-joins — unmaterialized,
-        # the vocabulary aggregate would execute once per consumer
-        hot = hot.select("block_key").localCheckpoint(eager=True)
+        # hot feeds BOTH anti-joins: without the checkpoint the
+        # vocabulary aggregate would execute once per consumer
+        hot = hot.select("block_key").localCheckpoint(eager=False)
         l = l.join(hot, "block_key", "left_anti")
         r = r.join(hot, "block_key", "left_anti")
         # keep one (id1,id2) row; block_key kept as the min matching token so

@@ -132,12 +132,9 @@ class HierarchicalClusterer:
         )
 
         # the correspondence subtree feeds the edge filter, the CC
-        # passes AND the vertex union — pin it once (the r12
-        # materialization discipline; the sequential path collected the
-        # very same rows to the driver, so executor-local blocks are
-        # strictly safer)
+        # passes AND the vertex union
         corr = correspondences.select("id1", "id2", "score").localCheckpoint(
-            eager=True
+            eager=False
         )
         edges = corr
         if self.min_similarity is not None:

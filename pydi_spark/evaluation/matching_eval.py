@@ -503,7 +503,7 @@ def bcubed_metrics(
         F.max(F.coalesce("npc", F.lit(1))).alias("mx_p"),
         F.max(F.coalesce("ngc", F.lit(1))).alias("mx_g"),
     )
-    cell = cell.localCheckpoint(eager=True)  # feeds three aggregates
+    cell = cell.localCheckpoint(eager=False)  # feeds three aggregates
     # a record in two clusters makes BCubed ill-defined and a
     # dropDuplicates "resolution" would be shuffle-order dependent
     # (r8 review finding) — refuse loudly. This scans only the
@@ -651,7 +651,7 @@ def adjusted_rand_index(
         p.join(g, "__id")
         .groupBy("__pc", "__gc")
         .agg(F.count(F.lit(1)).alias("__n"))
-        .localCheckpoint(eager=True)  # feeds 3 aggregates below
+        .localCheckpoint(eager=False)  # feeds 3 aggregates below
     )
     pair = lambda c: (F.col(c) * (F.col(c) - 1))  # noqa: E731  2*C(x,2)
     sij = cont.agg(

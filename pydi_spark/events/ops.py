@@ -126,17 +126,15 @@ def funnel_stages(
         raise ValueError(f"within_hours must be > 0: {within_hours}")
     base = df.select(user_col, type_col, ts_col)
     # each stage frame feeds TWO consumers (the next stage's time gate
-    # and the final left-join chain); materialized so stage i's
+    # and the final left-join chain); checkpointed so stage i's
     # aggregate — whose lineage contains every earlier stage — runs
     # once, and the event stream is scanned exactly once per stage
-    # instead of once per (stage, consumer) pair (r12; the frames are
-    # per-user aggregates, the node-frame class the CC/minhash
-    # checkpoint discipline already covers)
+    # instead of once per (stage, consumer) pair
     prev = (
         base.where(F.col(type_col) == stages[0])
         .groupBy(user_col)
         .agg(F.min(ts_col).alias("t_0"))
-        .localCheckpoint(eager=True)
+        .localCheckpoint(eager=False)
     )
     frames = [prev]
     for i, st in enumerate(stages[1:], start=1):
@@ -715,7 +713,7 @@ def event_cooccurrence(
             .select(*group_cols)
         )
         baskets = baskets.join(ok, group_cols, "left_semi")
-    baskets = baskets.localCheckpoint(eager=True)
+    baskets = baskets.localCheckpoint(eager=False)
     ng = baskets.select(*group_cols).distinct().agg(
         F.count(F.lit(1)).alias("__ng")
     )

@@ -45,13 +45,13 @@ def _prefix_with_offsets(
     from pyspark.sql import Window
 
     w = Window.partitionBy("__pid").orderBy(*order_cols)
-    # materialize the prefixed frame before the totals action: the
-    # collect and the final join are two separate actions, and a
-    # recomputed range partitioning (nondeterministic upstream, AQE
-    # replan) could shift rows across partition boundaries between
-    # them, corrupting the global values
+    # checkpoint the prefixed frame: the totals collect stores every
+    # partition, and the final join reads those blocks. Recomputed
+    # between the two actions, the range partitioning (nondeterministic
+    # upstream, AQE replan) could shift rows across partition
+    # boundaries, corrupting the global values
     local = with_pid.withColumn("__local", local_expr(w)).localCheckpoint(
-        eager=True
+        eager=False
     )
     totals = (
         local.groupBy("__pid").agg(total_expr.alias("__t"))
@@ -248,12 +248,12 @@ def global_running_max(
         .orderBy(*order_cols)
         .rowsBetween(Window.unboundedPreceding, -1 if exclusive else 0)
     )
-    # materialize before the totals action (see _prefix_with_offsets:
-    # a recomputed range partitioning between the two actions could
-    # shift rows across partition boundaries)
+    # checkpoint for the totals action and the join (see
+    # _prefix_with_offsets: a recomputed range partitioning between the
+    # two actions could shift rows across partition boundaries)
     local = with_pid.withColumn(
         "__local", F.max(value_col).over(w)
-    ).localCheckpoint(eager=True)
+    ).localCheckpoint(eager=False)
     totals = (
         local.groupBy("__pid").agg(F.max(value_col).alias("__t"))
         .orderBy("__pid").collect()

@@ -120,7 +120,7 @@ def train_bpe_merges(
     words = (
         word_frequencies(df, text_col, word_filter)
         .withColumn("sym", symbol_string_expr("word"))
-        .localCheckpoint(eager=True)
+        .localCheckpoint(eager=False)
     )
     merges: list[tuple[str, str]] = []
     for i in range(int(n_merges)):

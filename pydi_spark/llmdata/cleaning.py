@@ -286,7 +286,7 @@ def cross_source_overlap(
         # feeds FOUR consumers (per-source sizes ×2, both join sides);
         # without this each consumer re-runs scan+explode+window+dedup
         # (4 duplicated subtrees in the physical plan, guide §2.4/§5)
-        .localCheckpoint(eager=True)
+        .localCheckpoint(eager=False)
     )
     sizes = grams.groupBy("src").agg(F.count("*").alias("n_grams"))
     left = grams.repartition(plansize.core_width(df.sparkSession), "gh")
@@ -376,14 +376,12 @@ def corpus_cleanup(
     keep1 = blocklist_filter(
         df, blocklist, text_col=text_col, id_col=id_col, mode="token"
     ).where(F.col("keep") == 1).select("id")
-    s1 = s0.join(keep1, "id", "left_semi").localCheckpoint(eager=True)
+    s1 = s0.join(keep1, "id", "left_semi").localCheckpoint(eager=False)
     # stage 2: exact dedup — min string id per content hash survives
     canon = s1.groupBy(F.md5(F.col("text")).alias("h")).agg(
         F.min("id").alias("id")
     )
-    s2 = s1.join(canon.select("id"), "id", "left_semi").localCheckpoint(
-        eager=True
-    )
+    s2 = s1.join(canon.select("id"), "id", "left_semi").localCheckpoint(eager=False)
     # stage 3: SimHash near-dup — CC keep-min among stage-2 survivors
     pairs = simhash_near_duplicates(
         s2, text_col="text", id_col="id", max_hamming=max_hamming
@@ -392,7 +390,7 @@ def corpus_cleanup(
     dropped = assign.where(
         F.col("record_id") != F.col("cluster_id")
     ).select(F.col("record_id").alias("id"))
-    s3 = s2.join(dropped, "id", "left_anti").localCheckpoint(eager=True)
+    s3 = s2.join(dropped, "id", "left_anti").localCheckpoint(eager=False)
 
     def stage_row(frame: DataFrame, stage: int, name: str) -> DataFrame:
         return frame.agg(

@@ -336,7 +336,7 @@ def minhash_near_duplicates(
     # free with the frame (the embedding-blocker lesson, ADVICE r3).
     sigs = minhash_signature_table(
         df, text_col=text_col, id_col=id_col, num_hashes=num_hashes
-    ).localCheckpoint(eager=True)
+    ).localCheckpoint(eager=False)
     banded = sigs.select(
         "id", F.array(*_band_key_cols(num_hashes, bands)).alias("__bks")
     ).select("id", "__bks", F.explode("__bks").alias("band_key"))
@@ -426,7 +426,7 @@ def incremental_minhash_dedup(
             )
     new_sigs = minhash_signature_table(
         new_docs, text_col=text_col, id_col=id_col, num_hashes=num_hashes
-    ).localCheckpoint(eager=True)
+    ).localCheckpoint(eager=False)
     band_cols = _band_key_cols(num_hashes, bands)
     # both band tables carry their token sets so the Jaccard check runs
     # inside the broadcast join itself — see the docstring trade-off
@@ -459,7 +459,7 @@ def incremental_minhash_dedup(
         )
         .select(F.col("new_id").alias("id"))
         .distinct()  # batch-sized: first (and only) store-path shuffle
-        .localCheckpoint(eager=True)
+        .localCheckpoint(eager=False)
     )
     # survivors dedup among themselves — batch-sized from here on; the
     # same inline-verify shape (both sides carry toks, one broadcast
@@ -467,7 +467,7 @@ def incremental_minhash_dedup(
     # candidates->dedup->re-attach chain and its three shuffles.
     # Duplicate (id1, id2) edges from multi-band collisions are
     # harmless: connected components is idempotent over repeated edges.
-    surv = new_sigs.join(matched, "id", "left_anti").localCheckpoint(eager=True)
+    surv = new_sigs.join(matched, "id", "left_anti").localCheckpoint(eager=False)
     sb1 = surv.select(
         F.col("id").alias("id1"),
         F.col("toks").alias("toks1"),
@@ -622,9 +622,7 @@ def simhash_near_duplicates(
     rows = SIMHASH_BITS // bands
     # both join sides derive from the fingerprints; checkpoint so the
     # 60-sum vote aggregate runs once, not per side (see minhash note)
-    base = simhash_fingerprints(df, text_col, id_col).localCheckpoint(
-        eager=True
-    )
+    base = simhash_fingerprints(df, text_col, id_col).localCheckpoint(eager=False)
     # integer band keys: (band_id << rows) | band_bits — pure codegen
     # shifts/masks, and the band join shuffles 8-byte longs instead of
     # strings (r11; band ids can't collide across bands by construction).
@@ -704,7 +702,7 @@ def _shingle_rows(
         _token_hash60(F.array_join(toks, " ")).alias("shingle"),
     )
     exploded = sh_long.unionByName(short).dropDuplicates(["id", "shingle"])
-    return exploded.localCheckpoint(eager=True)
+    return exploded.localCheckpoint(eager=False)
 
 
 def _shingle_pairs(
@@ -1114,7 +1112,7 @@ def dedup_method_agreement(
     base = df.select(
         F.col(id_col).cast("string").alias("__id"),
         word_tokens(F.col(text_col)).alias("__toks"),
-    ).localCheckpoint(eager=True)
+    ).localCheckpoint(eager=False)
     mh = _tagged(
         minhash_near_duplicates(
             base, text_col="__toks", id_col="__id", **(minhash_params or {})
@@ -1214,7 +1212,7 @@ def lsh_recall_probe(
         sample, text_col="text", id_col="id", num_hashes=num_hashes
     ).withColumn(
         "bk", F.array(*_band_key_cols(num_hashes, bands))
-    ).localCheckpoint(eager=True)
+    ).localCheckpoint(eager=False)
     a = st.select(F.col("id").alias("id1"), F.col("toks").alias("toks1"),
                   F.col("bk").alias("bk1"))
     b = st.select(F.col("id").alias("id2"), F.col("toks").alias("toks2"),

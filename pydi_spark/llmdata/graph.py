@@ -34,7 +34,7 @@ def _symmetrize(edges: DataFrame, id1_col: str, id2_col: str) -> DataFrame:
         F.col(id2_col).cast("string").alias("d"),
     )
     sym = sym.unionByName(sym.select(F.col("d").alias("s"), F.col("s").alias("d")))
-    return sym.localCheckpoint(eager=True)  # reused every iteration
+    return sym.localCheckpoint(eager=False)  # reused every iteration
 
 
 def _pagerank_core(
@@ -64,8 +64,8 @@ def _pagerank_core(
         deg = sym.groupBy("s").agg(F.count("*").alias("deg"))
         src = sym.join(deg, "s")  # (s, d, deg) — the static input
         contrib_expr = "rank_micro div deg"
-    src = src.localCheckpoint(eager=True)
-    nodes = node_base.localCheckpoint(eager=True)
+    src = src.localCheckpoint(eager=False)
+    nodes = node_base.localCheckpoint(eager=False)
 
     ranks = nodes.select(
         "id", F.col("init_micro").cast("bigint").alias("rank_micro")
@@ -166,7 +166,7 @@ def weighted_pagerank_micro(
             F.sum(F.col("w").isNull().cast("long")).alias("__n_null"),
             F.min("w").alias("__min_w"),
         )
-        .localCheckpoint(eager=True)
+        .localCheckpoint(eager=False)
     )
     n_bad = sym.where(
         (F.col("__n_null") > 0)
@@ -224,15 +224,13 @@ def personalized_pagerank_micro(
     No reference counterpart — north-star addition.
     """
     sym = _symmetrize(edges, id1_col, id2_col)
-    nodes = sym.select(F.col("s").alias("id")).distinct().localCheckpoint(
-        eager=True
-    )
+    nodes = sym.select(F.col("s").alias("id")).distinct()
     scol = seed_col or seeds.columns[0]
     seed_ids = seeds.select(F.col(scol).cast("string").alias("id")).distinct()
     flagged = nodes.join(
         seed_ids.withColumn("__is_seed", F.lit(1)), "id", "left"
     ).select("id", F.coalesce("__is_seed", F.lit(0)).alias("__is_seed"))
-    flagged = flagged.localCheckpoint(eager=True)
+    flagged = flagged.localCheckpoint(eager=False)
     n = flagged.count()
     s = flagged.where(F.col("__is_seed") == 1).count()
     if s == 0:
@@ -273,13 +271,12 @@ def triangle_count(
     community/cohesion diagnostic next to pagerank_micro.
     """
     # r12: the oriented edge list feeds THREE consumers (both wedge
-    # sides + the closing semi-join); without materialization each
-    # re-runs the canonical-dedup + degree + orientation chain — the
-    # graph_triangles plan re-read its input 60 times. localCheckpoint
-    # computes it once (the minhash-sigs discipline); the wedge join
+    # sides + the closing semi-join); without a checkpoint each re-runs
+    # the canonical-dedup + degree + orientation chain — the
+    # graph_triangles plan re-read its input 60 times. The wedge join
     # re-widens through its own src exchange.
     oriented = _oriented(_canonical_edges(edges, id1, id2)).localCheckpoint(
-        eager=True
+        eager=False
     )
     l = oriented.select(F.col("src"), F.col("dst").alias("v"))
     r = oriented.select(F.col("src"), F.col("dst").alias("w"))
@@ -355,7 +352,7 @@ def clustering_coefficient(
     No reference counterpart (PyDI has no graph analytics) —
     north-star addition.
     """
-    e = _canonical_edges(edges, id1, id2).localCheckpoint(eager=True)
+    e = _canonical_edges(edges, id1, id2).localCheckpoint(eager=False)
     deg = _degrees(e)
     # r13: the r12 oriented-edge checkpoint REVERTED on a paired A/B
     # (2.13 s with vs 1.47/1.18 s without, same window; VERDICT r12 #2
@@ -429,7 +426,7 @@ def k_core(
     """
     if k < 1:
         raise ValueError(f"k must be >= 1: {k}")
-    e = _canonical_edges(edges, id1, id2).localCheckpoint(eager=True)
+    e = _canonical_edges(edges, id1, id2).localCheckpoint(eager=False)
     prev = None
     converged = False
     for _ in range(int(max_iterations)):
@@ -507,7 +504,7 @@ def link_prediction_scores(
     """
     if min_common < 1:
         raise ValueError(f"min_common must be >= 1: {min_common}")
-    e = _canonical_edges(edges, id1, id2).localCheckpoint(eager=True)
+    e = _canonical_edges(edges, id1, id2).localCheckpoint(eager=False)
     deg = _degrees(e)
     adj = e.select(F.col("a").alias("z"), F.col("b").alias("v")).unionByName(
         e.select(F.col("b").alias("z"), F.col("a").alias("v"))
@@ -593,7 +590,7 @@ def label_propagation(
     e = _canonical_edges(edges, id1, id2)
     sym = e.select(F.col("a").alias("s"), F.col("b").alias("d")).unionByName(
         e.select(F.col("b").alias("s"), F.col("a").alias("d"))
-    ).localCheckpoint(eager=True)
+    ).localCheckpoint(eager=False)
     labels = sym.select(F.col("s").alias("id")).distinct().select(
         "id", F.col("id").alias("label")
     )
@@ -655,11 +652,11 @@ def bfs_hops(
     e = _canonical_edges(edges, id1, id2)
     sym = e.select(F.col("a").alias("s"), F.col("b").alias("d")).unionByName(
         e.select(F.col("b").alias("s"), F.col("a").alias("d"))
-    ).localCheckpoint(eager=True)
+    ).localCheckpoint(eager=False)
     scol = seed_col or seeds.columns[0]
     frontier = seeds.select(F.col(scol).alias("id")).where(
         F.col("id").isNotNull()
-    ).distinct().localCheckpoint(eager=True)
+    ).distinct().localCheckpoint(eager=False)
     if frontier.count() == 0:
         raise ValueError("bfs_hops: empty seed set")
     visited = frontier.select("id", F.lit(0).cast("long").alias("hops"))
@@ -720,13 +717,13 @@ def hits_micro(
         )
         .where(F.col("s").isNotNull() & F.col("d").isNotNull())
         .dropDuplicates(["s", "d"])
-        .localCheckpoint(eager=True)
+        .localCheckpoint(eager=False)
     )
     nodes = (
         e.select(F.col("s").alias("id"))
         .unionByName(e.select(F.col("d").alias("id")))
         .distinct()
-        .localCheckpoint(eager=True)
+        .localCheckpoint(eager=False)
     )
     n = nodes.count()
     scores = nodes.select(
@@ -825,7 +822,7 @@ def modularity_score(
     """
     from pyspark.sql import Window
 
-    e = _canonical_edges(edges, id1, id2).localCheckpoint(eager=True)
+    e = _canonical_edges(edges, id1, id2).localCheckpoint(eager=False)
     comm = communities.select(
         F.col(node_col).cast("string").alias("v"),
         F.col(community_col).cast("string").alias("c"),
@@ -833,7 +830,7 @@ def modularity_score(
     w = Window.partitionBy("v")
     comm = comm.withColumn("nm", F.count(F.lit(1)).over(w))
     deg = _degrees(e).select(F.col("v").cast("string").alias("v"), "d")
-    dj = deg.join(comm, "v", "left").localCheckpoint(eager=True)
+    dj = deg.join(comm, "v", "left").localCheckpoint(eager=False)
     viol = dj.where(F.col("c").isNull() | (F.col("nm") > 1)).limit(1).collect()
     if viol:
         r = viol[0]
@@ -961,16 +958,16 @@ def feature_propagation(
     e = _canonical_edges(edges, id1, id2)
     sym = e.select(F.col("a").alias("s"), F.col("b").alias("d")).unionByName(
         e.select(F.col("b").alias("s"), F.col("a").alias("d"))
-    ).localCheckpoint(eager=True)
-    # materialize BEFORE the validation collect: a nondeterministic
-    # upstream recomputed between the guard and the first round could
-    # smuggle a negative past the refusal (the rank-core recompute
-    # hazard)
+    ).localCheckpoint(eager=False)
+    # checkpoint BEFORE the validation collect, which stores every
+    # partition it reads: a nondeterministic upstream recomputed
+    # between the guard and the first round could smuggle a negative
+    # past the refusal (the rank-core recompute hazard)
     state = features.select(
         F.col(id_col).alias("id"), F.col(value_col).cast("long").alias("x")
     ).where(
         F.col("id").isNotNull() & F.col("x").isNotNull()
-    ).localCheckpoint(eager=True)
+    ).localCheckpoint(eager=False)
     neg = state.where(F.col("x") < 0).limit(1).collect()
     if neg:
         raise ValueError(
@@ -1055,14 +1052,13 @@ def degree_assortativity(
     """
     # r12: e is consumed ~8x through sym (2x) and the three deg
     # references (each a 2-way union) — uncheckpointed, the
-    # graph_assortativity plan re-read its input 64 times. Materialize
-    # both once (e edge-sized, deg node-sized; the modularity_score
-    # discipline).
-    e = _canonical_edges(edges, id1, id2).localCheckpoint(eager=True)
+    # graph_assortativity plan re-read its input 64 times. Checkpoint
+    # both (e edge-sized, deg node-sized).
+    e = _canonical_edges(edges, id1, id2).localCheckpoint(eager=False)
     sym = e.select(F.col("a").alias("s"), F.col("b").alias("d")).unionByName(
         e.select(F.col("b").alias("s"), F.col("a").alias("d"))
     )
-    deg = _degrees(e).localCheckpoint(eager=True)
+    deg = _degrees(e).localCheckpoint(eager=False)
     j = (
         sym.join(deg.select(F.col("v").alias("s"), F.col("d").alias("ds")), "s")
         .join(deg.select(F.col("v").alias("d"), F.col("d").alias("dd")), "d")

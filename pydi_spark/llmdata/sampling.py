@@ -546,7 +546,7 @@ def pps_systematic_sample(
     base = df.where(
         F.col(id_col).isNotNull() & F.col(weight_col).isNotNull()
     ).withColumn("__h", F.md5(F.col(id_col).cast("string"))).localCheckpoint(
-        eager=True
+        eager=False
     )  # guard and walk must see the same rows (the recompute hazard)
     # BOTH preconditions ride ONE validation aggregate (min weight +
     # distinct-id count in a single pass — ADVICE r10 folded the two

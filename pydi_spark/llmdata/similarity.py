@@ -342,8 +342,7 @@ def ivfpq_topk(
         ).alias("residual"),
     )
     # two consumers (encode + cell re-join) — checkpoint so the coarse
-    # assignment aggregate runs once (NOTES: multiply-consumed
-    # intermediates rule)
+    # assignment aggregate runs once
     assigned = assigned.localCheckpoint(eager=False)
     codes = pq_encode(assigned, codebooks, id_col="id", vec_col="residual")
     codes = codes.join(assigned.select("id", "cell"), "id")

@@ -155,7 +155,7 @@ def remove_repeated_spans(
     tok_rows = df.select(
         F.col(id_col).alias("doc_id"),
         F.posexplode(toks).alias("pos", "tok"),
-    ).localCheckpoint(eager=True)  # feeds spans AND the reassembly
+    ).localCheckpoint(eager=False)  # feeds spans AND the reassembly
     wpos = Window.partitionBy("doc_id").orderBy("pos")
     lead_cols = [F.lead("tok", j).over(wpos).alias(f"t{j}") for j in range(1, n)]
     spans = (

@@ -54,7 +54,7 @@ def _canonical_mapping(
     ).select(
         "value",
         F.coalesce(F.col("cluster_id"), F.col("value")).alias("canonical"),
-    ).localCheckpoint(eager=True)
+    ).localCheckpoint(eager=False)
 
 
 def canonicalize_values(

@@ -90,7 +90,7 @@ def collapse_rare_categories(
     if min_count is not None:
         keep = counts.where(F.col("__c") >= int(min_count))
     else:
-        counts = counts.localCheckpoint(eager=True)  # feeds total + filter
+        counts = counts.localCheckpoint(eager=False)  # feeds total + filter
         total = counts.agg(F.sum("__c").alias("__total"))
         keep = (
             counts.crossJoin(F.broadcast(total))

@@ -426,10 +426,9 @@ def key_skew_report(
     counts = df.select(F.col(key_col).cast("string").alias("key")).groupBy(
         "key"
     ).agg(F.count("*").alias("cnt"))
-    # counts feeds the totals row AND the top-n: materialize it so the
-    # corpus-wide groupBy runs once, not per consumer (the dedup-sigs
-    # multi-consumer lesson, NOTES.md)
-    counts = counts.localCheckpoint(eager=True)
+    # counts feeds the totals row AND the top-n: checkpoint it so the
+    # corpus-wide groupBy runs once, not per consumer
+    counts = counts.localCheckpoint(eager=False)
     total = counts.agg(F.sum("cnt").alias("total"))
     top = counts.orderBy(F.desc("cnt"), F.asc("key")).limit(int(top_n))
     from pyspark.sql import Window
@@ -492,7 +491,7 @@ def correlation_matrix(
         aggs.append(F.sum(q[a] * q[b]).alias(f"__sp_{a}_{b}"))
     # one corpus pass; the 1-row result is pinned so the per-pair
     # selects below don't re-run the aggregation per union branch
-    stats = clean.agg(*aggs).localCheckpoint(eager=True)
+    stats = clean.agg(*aggs).localCheckpoint(eager=False)
     out = None
     for a, b in pairs:
         n = F.col("__n").cast("double")
@@ -896,7 +895,7 @@ def null_pattern_report(df: DataFrame, cols: list[str]) -> DataFrame:
         .groupBy("pattern")
         .agg(F.count(F.lit(1)).alias("n"))
     )
-    counts = counts.localCheckpoint(eager=True)  # feeds total + rows
+    counts = counts.localCheckpoint(eager=False)  # feeds total + rows
     total = counts.agg(F.sum("n").alias("__total"))
     name_expr = F.concat_ws(
         ",",
@@ -982,14 +981,13 @@ def equi_width_histogram(
         )
     bucket = F.when(x.isNull(), -1).otherwise(body)
     # counts feeds two consumers (grid join + sentinel-bucket union);
-    # it is <= n_buckets + 3 rows, so the eager checkpoint is cheap and
-    # saves re-running the corpus scan per consumer (NOTES width/reuse
-    # lesson)
+    # the checkpoint (<= n_buckets + 3 rows) saves re-running the
+    # corpus scan per consumer
     counts = (
         df.select(bucket.alias("bucket"))
         .groupBy("bucket")
         .agg(F.count(F.lit(1)).alias("n"))
-        .localCheckpoint(eager=True)
+        .localCheckpoint(eager=False)
     )
     grid = df.sparkSession.range(n_buckets).select(
         F.col("id").cast("int").alias("bucket")
@@ -1302,13 +1300,14 @@ def lorenz_curve(
         raise ValueError(f"n_buckets must be >= 2: {n_buckets}")
     from pydi_spark.functions.ranks import global_row_number, global_running_sum
 
-    # materialize BEFORE the validation collect: a nondeterministic
-    # upstream recomputed between the guard and the rank job could
+    # checkpoint BEFORE the validation collect, which stores every
+    # partition it reads: a nondeterministic upstream recomputed
+    # between the guard and the rank job could
     # smuggle a negative past the refusal (the rank-core recompute
     # hazard), and the checkpoint also saves the second full scan
     vals = df.where(F.col(value_col).isNotNull()).select(
         F.expr(f"CAST(floor({value_col} * 1000000) AS BIGINT)").alias("__vm")
-    ).localCheckpoint(eager=True)
+    ).localCheckpoint(eager=False)
     neg = vals.where(F.col("__vm") < 0).limit(1).collect()
     if neg:
         raise ValueError(

@@ -135,7 +135,7 @@ def heavy_hitters_sketch(
     per_part = (
         df.select(F.col(key_col).cast("string").alias("__k"))
         .mapInPandas(mg, "key string, cnt long, err long")
-    ).localCheckpoint(eager=True)  # feeds the key merge AND the shed total
+    ).localCheckpoint(eager=False)  # feeds the key merge AND the shed total
     total_shed = per_part.where(F.col("key").isNull()).agg(
         F.sum("err").alias("max_undercount")
     )

@@ -170,4 +170,29 @@ ROTATION_QUEUE: set[str] = {
     # cluster_hierarchical_avg, cluster_hierarchical_max,
     # fusion_conflict_detect, fusion_conflicts, fusion_debug,
     # fusion_numeric, fusion_rule_suggest, fusion_selection).
+    # One checkpoint rule: every checkpoint outside a loop cut or a side
+    # effect became lazy, and two read by one action were dropped.
+    # tools/checkpoint_census.py over every queries() entry at sf0.001
+    # found 53 that reach a changed checkpoint: 27 sit in the driver
+    # window, 9 are queued above (blocking_sorted_neighbourhood,
+    # cluster_cc_distributed, events_new_users, io_id_injection,
+    # normalize_rank, profile_gini, profile_lorenz, sample_pps,
+    # text_contamination_matrix) and these 17 join the queue.
+    "eval_ari",
+    "events_cooccurrence",
+    "graph_bfs",
+    "graph_feature_prop",
+    "graph_kcore",
+    "graph_label_prop",
+    "graph_link_pred",
+    "graph_modularity",
+    "graph_pagerank_weighted",
+    "graph_ppr",
+    "normalize_rare_collapse",
+    "profile_corr",
+    "profile_heavy_hitters",
+    "profile_histogram",
+    "profile_key_skew",
+    "profile_null_patterns",
+    "text_span_remove",
 }

@@ -63,6 +63,41 @@ def test_token_blocker_hot_token_pruning(people):
     assert out.count() == 0  # every shared token has df >= 2
 
 
+def test_capped_token_blocker_job_budget(spark):
+    """A capped two-source block plus a count runs 10 jobs here, and
+    each input row is read twice: once by the hot-token aggregate,
+    whose lazy checkpoint feeds both anti-joins, and once by the pair
+    join. An eager checkpoint costs one job more (11); none runs the
+    hot-token aggregate once per anti-join."""
+    sc = spark.sparkContext
+    seen = sc.accumulator(0)
+
+    def tap(batches):
+        for pdf in batches:
+            seen.add(len(pdf))
+            yield pdf
+
+    names = ["alice smith", "alice smyth", "bob jones", "carol jones",
+             "dave brown", "eve smith", "frank jones", "gina brown"]
+    schema = "rid string, name string"
+    left = spark.createDataFrame(
+        [(f"l{i}", n) for i, n in enumerate(names)], schema).mapInPandas(tap, schema)
+    right = spark.createDataFrame(
+        [(f"r{i}", n) for i, n in enumerate(names[::-1])], schema
+    ).mapInPandas(tap, schema)
+    blocker = TokenBlocker(column="name", max_token_frequency=4)
+    group = "token-capped-job-budget"
+    sc.setJobGroup(group, group)
+    try:
+        n_pairs = blocker.block(left, right, id_column="rid").count()
+        jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setJobGroup(None, None)
+    assert n_pairs == 20
+    assert jobs <= 10, jobs
+    assert seen.value == 2 * 2 * len(names)
+
+
 def test_sorted_neighbourhood_window(people):
     out = SortedNeighbourhoodBlocker(key="name", window=1).block(
         people, id_column="rid"

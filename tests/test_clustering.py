@@ -428,6 +428,95 @@ def test_driver_policy_lives_in_plansize():
     assert not hits, "driver policy outside core/plansize.py:\n" + "\n".join(hits)
 
 
+# The eager ``localCheckpoint`` calls the package keeps, by (module,
+# function), each with the reason neither the lazy form nor dropping
+# the checkpoint will do. Every other checkpoint is
+# ``localCheckpoint(eager=False)``; one that only a single action reads
+# is not written at all.
+EAGER_CHECKPOINTS = {
+    ("clustering/connected_components.py", "connected_components"):
+        "loop cut: each star round's edge set",
+    ("clustering/greedy_one_to_one.py", "_distributed"):
+        "loop cut: the remaining correspondences each round",
+    ("events/ops.py", "funnel_stages"):
+        "loop cut: each stage frame, whose lineage holds every earlier stage",
+    ("llmdata/bpe.py", "train_bpe_merges"):
+        "loop cut: the word table every checkpoint_every merges",
+    ("llmdata/graph.py", "_pagerank_core"): "loop cut: the rank vector",
+    ("llmdata/graph.py", "k_core"): "loop cut: the kept nodes and edges each peel",
+    ("llmdata/graph.py", "label_propagation"): "loop cut: the label vector",
+    ("llmdata/graph.py", "bfs_hops"): "loop cut: the frontier and visited set",
+    ("llmdata/graph.py", "hits_micro"): "loop cut: the score vector",
+    ("llmdata/graph.py", "feature_propagation"): "loop cut: the state vector",
+    ("extraction/llm.py", "extract_with_log"):
+        "side effect: one LLM inference run feeds both outputs",
+    ("matching/model_based.py", "match_with_log"):
+        "side effect: one LLM inference run feeds both outputs",
+    ("streaming/dedup.py", "streaming_incremental_dedup.handle"):
+        "side effect: decide before the store append, and read the store "
+        "before writing to it",
+}
+
+
+def test_eager_checkpoints_are_allowlisted():
+    """Every eager ``localCheckpoint`` under pydi_spark/ (``eager=True``
+    or Spark's default) sits in a function on EAGER_CHECKPOINTS; a loop
+    cut sits inside a ``for`` or ``while`` loop; and every entry still
+    names an eager call."""
+    import ast
+    import pathlib
+
+    root = pathlib.Path(__file__).resolve().parents[1] / "pydi_spark"
+    kinds = ("loop cut:", "side effect:", "measured:")
+    assert all(r.startswith(kinds) for r in EAGER_CHECKPOINTS.values())
+
+    class Sites(ast.NodeVisitor):
+        def __init__(self, module):
+            self.module, self.scope, self.loops, self.found = module, [], 0, []
+
+        def visit_FunctionDef(self, node):
+            outer = self.loops
+            self.scope.append(node.name)
+            self.loops = 0
+            self.generic_visit(node)
+            self.scope.pop()
+            self.loops = outer
+
+        visit_AsyncFunctionDef = visit_FunctionDef
+
+        def visit_For(self, node):
+            self.loops += 1
+            self.generic_visit(node)
+            self.loops -= 1
+
+        visit_While = visit_For
+
+        def visit_Call(self, node):
+            f = node.func
+            if isinstance(f, ast.Attribute) and f.attr == "localCheckpoint":
+                flag = [k.value for k in node.keywords if k.arg == "eager"]
+                flag += node.args[:1]
+                lazy = flag and isinstance(flag[0], ast.Constant) and flag[0].value is False
+                if not lazy:
+                    key = (self.module, ".".join(self.scope))
+                    self.found.append((key, node.lineno, self.loops > 0))
+            self.generic_visit(node)
+
+    eager = []
+    for f in sorted(root.rglob("*.py")):
+        sites = Sites(str(f.relative_to(root)))
+        sites.visit(ast.parse(f.read_text()))
+        eager += sites.found
+    bad = [
+        f"{mod}:{line} ({func})"
+        for (mod, func), line, in_loop in eager
+        if (mod, func) not in EAGER_CHECKPOINTS
+        or (EAGER_CHECKPOINTS[mod, func].startswith("loop cut:") and not in_loop)
+    ]
+    assert not bad, "eager localCheckpoint, no allowlist reason:\n" + "\n".join(bad)
+    assert set(EAGER_CHECKPOINTS) == {key for key, _, _ in eager}
+
+
 def test_driver_transfer_refusal_falls_back_or_refuses(spark, monkeypatch):
     """When the driver refuses the Arrow transfer (maxResultSize, an
     evicted task result), connected components, greedy 1:1 and BCubed

@@ -206,16 +206,22 @@ def test_broadcast_gate_on_input_estimate(spark, docs, tmp_path):
     docs.write.parquet(str(tmp_path / "docs"))
     pq = spark.read.parquet(str(tmp_path / "docs"))
     assert plansize.fits_estimate(pq, ceiling)
-    # a checkpoint keeps its origin plan's estimate, so a checkpointed
-    # derived frame (dedup_method_agreement's token frame) gates like
-    # the frame it came from
+    # a checkpoint, eager or lazy and before or after its first action,
+    # keeps its origin plan's estimate, so a checkpointed derived frame
+    # (dedup_method_agreement's token frame) gates like the frame it
+    # came from
     toks = pq.select(
         F.col("doc_id").cast("string").alias("__id"),
         word_tokens(F.col("text")).alias("__toks"),
     )
-    ck = toks.localCheckpoint(eager=True)
-    assert plansize.estimated_plan_bytes(ck) == plansize.estimated_plan_bytes(toks)
-    assert plansize.fits_estimate(ck, ceiling) and plansize.fits_estimate(toks, ceiling)
+    acted = toks.localCheckpoint(eager=False)
+    acted.count()
+    want = plansize.estimated_plan_bytes(toks)
+    eager, lazy = toks.localCheckpoint(eager=True), toks.localCheckpoint(eager=False)
+    for ck in (eager, lazy, acted):
+        assert plansize.estimated_plan_bytes(ck) == want
+        assert plansize.fits_estimate(ck, ceiling)
+    assert plansize.fits_estimate(toks, ceiling)
 
 
 @pytest.mark.parametrize(
@@ -247,6 +253,34 @@ def test_dedup_same_pairs_on_both_broadcast_branches(
     monkeypatch.setattr(plansize, "BROADCAST_MAX_BYTES", 0)
     shuffled = {(r["id1"], r["id2"]) for r in generator(pq).collect()}
     assert pinned == shuffled and pinned
+
+
+def test_minhash_job_budget_and_one_tokenize(spark, docs):
+    """minhash_near_duplicates on the fixture corpus runs 7 jobs and
+    tokenizes each document once: the lazy signature checkpoint feeds
+    the band table and both verify sides (an eager one costs an eighth
+    job)."""
+    sc = spark.sparkContext
+    seen = sc.accumulator(0)
+
+    def tap(batches):
+        for pdf in batches:
+            seen.add(len(pdf))
+            yield pdf
+
+    tapped = docs.mapInPandas(tap, "doc_id long, text string")
+    group = "minhash-job-budget"
+    sc.setJobGroup(group, group)
+    try:
+        pairs = minhash_near_duplicates(
+            tapped, num_hashes=16, bands=4, jaccard_threshold=0.9
+        ).collect()
+        jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setJobGroup(None, None)
+    assert {(r["id1"], r["id2"]) for r in pairs} == {("1", "2"), ("1", "3"), ("2", "3")}
+    assert jobs <= 7, jobs
+    assert seen.value == docs.count()
 
 
 def test_png_codec_roundtrip():
